@@ -16,22 +16,24 @@ object PlanDump {
     val dir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
     val spark = Engine.session("plan-dump")
     new java.io.File(outDir).mkdirs()
-    // "edge:dd_cluster_fold_stored" / "edge:dd_embed_cluster_fold_stored"
-    // dump the fold's VERIFIED-EDGE frame (the plan the fold
-    // checkpoints — the returned query plan is the post-merge
+    // "edge:<fold key>" (dd_cluster_fold_stored,
+    // dd_embed_cluster_fold_stored — the store kinds that keep an LP
+    // assignment) dumps the fold's VERIFIED-EDGE frame (the plan the
+    // fold checkpoints — the returned query plan is the post-merge
     // assignment and does not show the probe/verify shape) under
     // PlanSpec's at-scale audit conf: broadcast disabled + AQE off, so
     // the dump shows the join strategies a 100 TB store would get, not
     // the fixture-size broadcasts.
-    def edgeFrame(q: String): org.apache.spark.sql.DataFrame = q match {
-      case "dd_cluster_fold_stored" =>
-        val store = graft.operators.Dedup.ensureClusterStore(spark, dir)
-        graft.operators.Dedup.clusterStoreEdgeFrame(spark, dir, store,
-          "cast(substring(source, 4) as int) >= 10")._2
-      case "dd_embed_cluster_fold_stored" =>
-        val store = graft.operators.Dedup.ensureEmbedStore(spark, dir)
-        graft.operators.Dedup.embedStoreEdgeFrame(spark, dir, store)._2
-      case other => sys.error(s"no edge-frame dump wired for $other")
+    def edgeFrame(q: String): org.apache.spark.sql.DataFrame = {
+      import graft.operators.{Banded, BandedStore, StoreKind}
+      StoreKind.all.collectFirst {
+        case k: Banded if k.verify.isDefined && k.foldKey == q => k
+      } match {
+        case Some(k) =>
+          BandedStore.edgeFrame(k, spark, dir,
+            BandedStore.ensure(k, spark, dir))._2
+        case None => sys.error(s"no edge-frame dump wired for $q")
+      }
     }
     names.foreach { name =>
       val text =

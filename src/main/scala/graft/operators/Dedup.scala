@@ -105,8 +105,8 @@ object Dedup extends QueryPack {
     s"CAST('0x' || substr(md5($v), 1, 15) AS BIGINT)"
 
   /** 2-row band key over the K=16 signature columns (8 bands). */
-  private val JacBands = 8
-  private def jacBandKeySpark(b: Int): String =
+  private[graft] val JacBands = 8
+  private[graft] def jacBandKeySpark(b: Int): String =
     s"md5(concat_ws(',', cast(sig_${2 * b} as string)," +
       s" cast(sig_${2 * b + 1} as string)))"
 
@@ -284,15 +284,7 @@ object Dedup extends QueryPack {
   private def bandedSigRelation(s: SparkSession, dir: String,
                                 view: String): String = {
     VectorFunctions.ensureRegistered(s)
-    val sigs = table(s, dir, "documents")
-      .selectExpr("doc_id", "split(text, ' ') AS toks")
-      .selectExpr("doc_id", s"$sparkGrams AS grams")
-      .selectExpr("doc_id",
-        "graft_h32a(grams) AS ghs",
-        "graft_h64sd(grams) AS hs")
-      .selectExpr("doc_id", "hs", "graft_minhash16(ghs) AS sigarr")
-      .selectExpr(Seq("doc_id", "hs") ++ sparkSigCols: _*)
-      .cache()
+    val sigs = jacSigsOf(table(s, dir, "documents")).cache()
     sigs.createOrReplaceTempView(view)
     trackCached(s, dir, sigs)
     (0 until JacBands)
@@ -349,7 +341,7 @@ object Dedup extends QueryPack {
     * is the shingle set itself, which both score functions are
     * constant on.
     */
-  private def shingleGrpFrame(s: SparkSession, view: String): DataFrame =
+  private[graft] def shingleGrpFrame(s: SparkSession, view: String): DataFrame =
     s.sql(
       s"""SELECT k.doc_id, g.rep FROM
          |  (SELECT doc_id, md5(cast(hs as string)) AS hkey
@@ -364,11 +356,11 @@ object Dedup extends QueryPack {
   /** [[shingleGrpFrame]]'s EMBED-keyed twin (md5 of the vector bytes,
     * zero-norm carve-out — a zero vector's cosine is NaN, never an
     * edge): ONE definition for the four embed collapse sites
-    * (cosRepVerifyFrame, embedClusterEdges, embedStoreBuild,
-    * embedStoreFoldInto), which carried byte-identical inline copies
+    * (cosRepVerifyFrame, embedClusterEdges, and the embed store's
+    * build and fold), which carried byte-identical inline copies
     * before r20.
     */
-  private def embedGrpFrame(s: SparkSession, view: String): DataFrame =
+  private[graft] def embedGrpFrame(s: SparkSession, view: String): DataFrame =
     s.sql(
       s"""SELECT k.vec_id, g.rep FROM
          |  (SELECT vec_id, md5(cast(embedding as string)) AS vk
@@ -1279,6 +1271,24 @@ object Dedup extends QueryPack {
   private def sparkSigCols: Seq[String] =
     (0 until K).map(j => s"element_at(sigarr, ${j + 1}) AS sig_$j")
 
+  /** (doc_id, carry…, hs, sig_0..sig_15) of a frame holding doc_id and
+    * text: sorted 60-bit word-bigram shingle hashes (the exact-verify
+    * side) and the 16-perm MinHash signature the 8x2 band keys read —
+    * ONE chain for the jaccard/containment pair relations and the
+    * cluster store's build, fold and stream probe, so none of them can
+    * shingle or band differently.
+    */
+  private[graft] def jacSigsOf(df: DataFrame,
+                               carry: Seq[String] = Nil): DataFrame = {
+    val k = "doc_id" +: carry
+    df.selectExpr(k :+ "split(text, ' ') AS toks": _*)
+      .selectExpr(k :+ s"$sparkGrams AS grams": _*)
+      .selectExpr(k ++ Seq("graft_h32a(grams) AS ghs",
+        "graft_h64sd(grams) AS hs"): _*)
+      .selectExpr(k ++ Seq("hs", "graft_minhash16(ghs) AS sigarr"): _*)
+      .selectExpr(k ++ Seq("hs") ++ sparkSigCols: _*)
+  }
+
   /** Streaming reuse ([[graft.streaming.Streams.nearDupStream]]): the
     * (band, bkey) expansion of a document frame — IDENTICAL banding to
     * dd_minhash_lsh (same shingles, same 16-perm MinHash, same 4 x 4
@@ -1645,7 +1655,7 @@ object Dedup extends QueryPack {
   // 12x5 banding keeps ~49% of them while scoring 3.6x fewer pairs. In
   // the regime LSH pruning is FOR — near-dups at cos >= 0.9 (agreement
   // 0.857) — the same banding has recall 1-(1-0.857^5)^12 = 0.998.
-  private val CosBands = 12
+  private[graft] val CosBands = 12
   private val CosRows = 5
 
   /** Hyperplane j, 1-based component i: ((j+1)*2654435761 + 40503*i)
@@ -2800,7 +2810,7 @@ object Dedup extends QueryPack {
     * `lblA` is the prior (doc_id, cluster_id) assignment; `newNodes`
     * is one `doc_id` column of the increment's nodes.
     */
-  private def contractedMerge(op: String, lblA: DataFrame,
+  private[graft] def contractedMerge(op: String, lblA: DataFrame,
                               newEdges: DataFrame,
                               newNodes: DataFrame): DataFrame = {
     val contracted = newEdges
@@ -2857,192 +2867,12 @@ object Dedup extends QueryPack {
 
   private val ddClusterSql = ddClusterSqlFor("")
 
-  // ---- persistent cluster store + incremental fold --------------------------
-  // dd_cluster_incremental's scale argument reads "at corpus scale the
-  // prior LP is the stored assignment"; this section makes that real.
-  // A store holds everything an increment needs and NOTHING else:
-  //   assignment/  (doc_id, cluster_id)   the converged prior labels
-  //   sigs/        (doc_id, hs)           sorted 60-bit shingle hashes
-  //                                       (the exact-verify side)
-  //   bands/       (doc_id, band, bk)     the 8x2 MinHash band keys
-  //                                       (the probe index)
-  //   manifest.json                       written temp+ATOMIC_MOVE LAST —
-  //                                       the store's exists() marker, the
-  //                                       same crash discipline as
-  //                                       IvfPqStore/ShardManifest
-  // A fold probes bands(new) against the stored index, verifies only
-  // the candidates against stored+new sigs, and contract-merges into
-  // the stored assignment — it NEVER re-reads old documents' text.
-  // That claim is behavioral, not aspirational: ClusterStoreSpec
-  // overwrites every old doc's text with garbage after the build and
-  // the fold still bit-matches full re-clustering of the original
-  // corpus. At 100 TB the store is signature-sized (dozens of longs
-  // per doc vs the doc itself), the probe join is an equi-join on
-  // (band, bk) a deployment co-locates by writing bands/ bucketed on
-  // that key, and the contracted LP runs over |clusters| + |new|.
-  //
-  // REP-COLLAPSED LAYOUT (r17): the store keeps sig/band rows for the
-  // min-doc_id REPRESENTATIVE of each identical-shingle-set group
-  // only, plus a `grp/` (doc_id, rep) membership relation — the
-  // [[ddClusterEdges]] duplicate-bomb guard carried into the store
-  // layout itself. k byte-identical stored copies of a page cost ONE
-  // banded row set instead of k (a probing near-dup of the group
-  // verifies once against the rep, never k times), the build's own
-  // banded self-join runs over reps + k-1 star edges, and pair-level
-  // consumers (the streaming probes) recover member pairs by ONE
-  // equi-join through grp/ AFTER the verify — the fan-out is true
-  // output, linear in real matches, which no layout can shrink.
-  // Exactness is ddClusterEdges' argument: a member's hs equals its
-  // rep's, so jaccard(probe, member) = jaccard(probe, rep) and every
-  // member pair the uncollapsed layout would emit is recovered by the
-  // grp expansion; components are preserved because stars are true
-  // edges and the stored assignment already links members to reps.
-  // Generations built before this layout carry no grp/ — every reader
-  // treats a missing grp/ as the identity mapping (bands are then
-  // member-level and the store serves exactly as before).
-  private[graft] object ClusterStore {
-    def exists(dir: String): Boolean = StoreFiles.exists(dir)
-
-    def writeManifest(dir: String, nDocs: Long): Unit =
-      StoreFiles.writeManifest(dir,
-        s"""{"docs": $nDocs, "bands": $JacBands, "rows_per_band": 2,
-           | "threshold": 0.6}""".stripMargin)
-  }
-
   /** The old-half split shared by store build and fold (the same
     * convention as dd_incremental / dd_cluster_incremental, negated).
     * Exposed to the streaming replay gates (st_store_neardup_replay
     * feeds exactly the non-matching half).
     */
   private[graft] val oldPred = "cast(substring(source, 4) as int) < 10"
-
-  /** Build the store from the corpus docs matching `pred` (the driver
-    * key uses [[oldPred]]): one per-group collapse, one banded
-    * self-join over REPRESENTATIVES + exact verify (the dd_jaccard
-    * arithmetic, term-for-term) + star edges, one LP to convergence,
-    * four parquet landings (assignment over all docs; sigs/bands over
-    * reps only; grp membership), manifest last. See the section
-    * comment for the rep-collapsed layout's exactness argument —
-    * built this way, a duplicate-bombed corpus costs the build O(k)
-    * edges and every later probe ONE collision per group instead
-    * of k.
-    */
-  private[graft] def clusterStoreBuild(s: SparkSession, dir: String,
-                                       store: String,
-                                       pred: String = oldPred): Unit = {
-    VectorFunctions.ensureRegistered(s)
-    // view names are qualified by the STORE path: two builds over the
-    // SAME corpus but different stores (the serving store and the
-    // eval-slice store lock DIFFERENT dirs) may run concurrently in
-    // one session, and fixed names would let one build's rebind leak
-    // into the other's analysis — a store silently mixing the two
-    // predicates' rows
-    val cstSigs = "cst" + StoreFiles.md5Hex(store, 8) + "_sigs"
-    val cstGrp = "cst" + StoreFiles.md5Hex(store, 8) + "_grp"
-    val cstRep = "cst" + StoreFiles.md5Hex(store, 8) + "_repsigs"
-    val sigs = table(s, dir, "documents")
-      .where(pred)
-      .selectExpr("doc_id", "split(text, ' ') AS toks")
-      .selectExpr("doc_id", s"$sparkGrams AS grams")
-      .selectExpr("doc_id",
-        "graft_h32a(grams) AS ghs", "graft_h64sd(grams) AS hs")
-      .selectExpr("doc_id", "hs", "graft_minhash16(ghs) AS sigarr")
-      .selectExpr(Seq("doc_id", "hs") ++ sparkSigCols: _*)
-      .cache()
-    sigs.createOrReplaceTempView(cstSigs)
-    // collapse groups (the ddClusterEdges discipline: shingle-set key,
-    // empty-shingle carve-out, eager checkpoint — see dc_grp)
-    shingleGrpFrame(s, cstSigs).createOrReplaceTempView(cstGrp)
-    s.sql(
-      s"""SELECT s.* FROM $cstSigs s
-         |JOIN (SELECT DISTINCT rep FROM $cstGrp) r ON s.doc_id = r.rep"""
-        .stripMargin)
-      .truncated().createOrReplaceTempView(cstRep)
-    val bandSelects = (0 until JacBands)
-      .map(b => s"SELECT doc_id, $b AS band, ${jacBandKeySpark(b)} AS bk" +
-        s" FROM $cstRep$jacBandGuard")
-      .mkString(" UNION ALL ")
-    val pairs = s.sql(
-      s"""WITH bands AS ($bandSelects),
-         |cand AS (
-         |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-         |  FROM bands x JOIN bands y
-         |    ON x.band = y.band AND x.bk = y.bk AND x.doc_id < y.doc_id)
-         |SELECT doc_a, doc_b FROM (
-         |  SELECT doc_a, doc_b,
-         |    round(cast(graft_isect(a.hs, b.hs) as double)
-         |      / (size(a.hs) + size(b.hs) - graft_isect(a.hs, b.hs)), 6)
-         |      AS jaccard
-         |  FROM cand JOIN $cstSigs a ON a.doc_id = doc_a
-         |            JOIN $cstSigs b ON b.doc_id = doc_b
-         |  WHERE least(size(a.hs), size(b.hs)) * 10
-         |        >= greatest(size(a.hs), size(b.hs)) * 6)
-         |WHERE jaccard >= 0.6
-         |UNION ALL
-         |SELECT rep AS doc_a, doc_id AS doc_b FROM $cstGrp
-         |WHERE doc_id <> rep""".stripMargin)
-    val lbl = labelPropagate("dd_cluster_store", pairs,
-      sigs.select("doc_id"))
-    new java.io.File(store).mkdirs()
-    // bucketed layout (StoreFiles.writeBucketed): each relation lands
-    // clustered on its probe key, so single-generation reads report
-    // the partitioning and the serve joins skip the store-side
-    // exchange (PlanSpec pins the shape)
-    StoreFiles.writeBucketed(lbl, s"$store/assignment", Seq("doc_id"))
-    StoreFiles.writeBucketed(
-      s.sql(s"SELECT doc_id, hs FROM $cstRep"),
-      s"$store/sigs", Seq("doc_id"))
-    StoreFiles.writeBucketed(
-      s.sql(s"SELECT doc_id, band, bk FROM ($bandSelects)"),
-      s"$store/bands", Seq("band", "bk"), Seq("doc_id"))
-    StoreFiles.writeBucketed(
-      s.sql(s"SELECT doc_id, rep FROM $cstGrp"),
-      s"$store/grp", Seq("rep"), Seq("doc_id"))
-    val n = sigs.count()
-    sigs.unpersist()
-    lbl.unpersist()
-    ClusterStore.writeManifest(store, n)
-  }
-
-  /** Streaming-side (doc_id, ts, hs, band, bk) expansion against the
-    * persistent cluster store's banding — the text twin of the embed
-    * serve path's `graft_rh_buckets` probe. Lives here, next to
-    * [[clusterStoreBuild]], so the stream probe and the store's
-    * `bands/` index can never band differently: same word-bigram
-    * shingles, same 16-perm MinHash, same 8x2 [[jacBandKeySpark]]
-    * keys, same empty-shingle guard (an empty-sig doc would hit the
-    * store's guarded band index zero times anyway; dropping it before
-    * the explode also keeps the bucket-bomb argument — see
-    * [[jacBandGuard]] — true for the STREAM side of the join).
-    * Input columns: doc_id, ts (epoch-nanos bigint), text.
-    */
-  private[graft] def jacStoreProbeRows(docs: DataFrame): DataFrame = {
-    VectorFunctions.ensureRegistered(docs.sparkSession)
-    val bandCols = (0 until JacBands).map(b =>
-      s"struct($b AS band, ${jacBandKeySpark(b)} AS bk)")
-    docs
-      .selectExpr("doc_id", "ts", "split(text, ' ') AS toks")
-      .selectExpr("doc_id", "ts", s"$sparkGrams AS grams")
-      .selectExpr("doc_id", "ts",
-        "graft_h32a(grams) AS ghs", "graft_h64sd(grams) AS hs")
-      .selectExpr("doc_id", "ts", "hs", "graft_minhash16(ghs) AS sigarr")
-      .selectExpr(Seq("doc_id", "ts", "hs") ++ sparkSigCols: _*)
-      .where(s"sig_0 <> ${Long.MaxValue}L")
-      .selectExpr("doc_id", "ts", "hs",
-        s"explode(array(${bandCols.mkString(", ")})) AS bb")
-      .selectExpr("doc_id", "ts", "hs", "bb.band AS band", "bb.bk AS bk")
-  }
-
-  /** The exact Jaccard verify between two hs columns `$a`/`$b` as one
-    * WHERE-clause string — the same prefilter + rounded-threshold
-    * arithmetic the batch probes state term-for-term (those embed it
-    * as a named `jaccard` column inside their pair projections; the
-    * streaming serve path, which filters in place, uses this form).
-    */
-  private[graft] def jacVerifySpark(a: String, b: String): String =
-    s"least(size($a), size($b)) * 10 >= greatest(size($a), size($b)) * 6" +
-      s" AND round(cast(graft_isect($a, $b) as double)" +
-      s" / (size($a) + size($b) - graft_isect($a, $b)), 6) >= 0.6"
 
   /** DuckDB restatement for st_store_neardup_replay: the INDEPENDENT
     * all-pairs old-new spec (no banding — the hash-compare therefore
@@ -3068,247 +2898,6 @@ object Dedup extends QueryPack {
        |    / (len(n.hs) + len(o.hs) - len(list_intersect(n.hs, o.hs))), 6)
        |    >= 0.6
        |ORDER BY 1, 2""".stripMargin
-
-  /** Fold the corpus docs NOT matching [[oldPred]] into the stored
-    * clustering. Reads the store (assignment + sigs + bands) and the
-    * NEW docs' text only; returns the full-corpus assignment,
-    * bit-identical to batch re-clustering (contractedMerge's
-    * argument).
-    */
-  private[graft] def clusterStoreFold(s: SparkSession, dir: String,
-                                      store: String,
-                                      newPred: String = s"NOT ($oldPred)")
-      : DataFrame =
-    clusterStoreIncrement(s, dir, store, newPred)._2
-      .orderBy(col("doc_id"))
-
-  /** The increment computation shared by the serve-only fold and the
-    * generation-writing [[clusterStoreFoldInto]]: returns the new
-    * batch's checkpointed sig relation and the merged (store + new)
-    * assignment, UNSORTED.
-    */
-  private def clusterStoreIncrement(s: SparkSession, dir: String,
-                                    store: String, newPred: String)
-      : (DataFrame, DataFrame) = {
-    val (newSigs, edgesLazy) = clusterStoreEdgeFrame(s, dir, store, newPred)
-    // The verified edge list is checkpointed EAGERLY before
-    // contractedMerge sees it: handed on as lineage, the jaccard
-    // threshold over the expensive graft_isect projection gets pushed
-    // into the contracted-pipeline's join conditions and re-evaluated
-    // per probed pair (the known trap the repo mitigates everywhere by
-    // persisting the compact pair projection first). The checkpoint
-    // runs with AQE ON (r21): under the old scoped AQE-off the static
-    // planner could not see that the store relations and the
-    // checkpointed new-batch frame are broadcast-sized, so the verify
-    // join-backs ran as sort-merge joins — AQE picks broadcast at
-    // runtime and the warm fold's CPU roughly halves (measured on the
-    // embed twin: 19.4 -> 7.6 CPU-s/rep at sf0.1, wall 4.7 -> ~4.0,
-    // +3 stage-materialization jobs). At corpus scale the broadcast
-    // decision reverts to sort-merge automatically — that is AQE's
-    // call to make, which is the point.
-    val edges = edgesLazy.truncated()
-    val lblA = storeAssignment(s, store, "doc_id")
-    (newSigs,
-      contractedMerge("dd_cluster_fold_stored#merge", lblA, edges,
-        newSigs.select("doc_id")))
-  }
-
-  /** The fold's new-batch sig relation (eagerly checkpointed) and its
-    * verified-edge frame, LAZY — split out so PlanSpec can pin the
-    * probe join's physical shape (equi-join on (band, bk), no
-    * nested-loop fallback) without running the fold. The caller owns
-    * checkpointing the edge frame; [[clusterStoreIncrement]] is the
-    * only production caller.
-    */
-  /** Store-path-qualified fold-builder view name — ONE derivation for
-    * the creator (clusterStoreEdgeFrame / embedStoreEdgeFrame) and the
-    * consumer (the FoldInto writers), so concurrent folds probing
-    * DIFFERENT stores in one session cannot rebind each other's views
-    * (folds from the SAME store are serialized by the generation-name
-    * claim, so a per-store name suffices).
-    */
-  private[graft] def foldView(kind: String, store: String,
-                       suffix: String): String =
-    kind + StoreFiles.md5Hex(store, 8) + suffix
-
-  private[graft] def clusterStoreEdgeFrame(s: SparkSession, dir: String,
-                                           store: String, newPred: String)
-      : (DataFrame, DataFrame) = {
-    val cfoSigs = foldView("cfo", store, "_sigs")
-    val cfoGrp = foldView("cfo", store, "_grp")
-    val cfoRep = foldView("cfo", store, "_repsigs")
-    val cfoOldBands = foldView("cfo", store, "_oldbands")
-    val cfoOldSigs = foldView("cfo", store, "_oldsigs")
-    VectorFunctions.ensureRegistered(s)
-    // localCheckpoint (EAGER), not cache: the relation feeds 8 band
-    // sides, both verify join-backs, and the node list — ~10
-    // references inside ONE edge-materialization job. A lazy cache
-    // populates mid-job, so the concurrently racing scans each
-    // recompute the md5/minhash chains (measured: the fold's edge
-    // checkpoint carried 15.4 CPU-s, ~10x the sig pipeline's cost);
-    // an eager checkpoint runs the chains exactly once.
-    val newSigs = table(s, dir, "documents")
-      .where(newPred)
-      .selectExpr("doc_id", "split(text, ' ') AS toks")
-      .selectExpr("doc_id", s"$sparkGrams AS grams")
-      .selectExpr("doc_id",
-        "graft_h32a(grams) AS ghs", "graft_h64sd(grams) AS hs")
-      .selectExpr("doc_id", "hs", "graft_minhash16(ghs) AS sigarr")
-      .selectExpr(Seq("doc_id", "hs") ++ sparkSigCols: _*)
-      .truncated()
-    newSigs.createOrReplaceTempView(cfoSigs)
-    // NEW-side collapse (the store layout's rep discipline applied to
-    // the increment): a duplicate-bombed ingest batch probes and
-    // verifies once per GROUP, and members ride k-1 star edges. Old
-    // side needs no stars — the stored assignment already links old
-    // members to their reps (a group is jaccard-1-connected, so it is
-    // one stored component by construction).
-    shingleGrpFrame(s, cfoSigs).createOrReplaceTempView(cfoGrp)
-    s.sql(
-      s"""SELECT s.* FROM $cfoSigs s
-         |JOIN (SELECT DISTINCT rep FROM $cfoGrp) r ON s.doc_id = r.rep"""
-        .stripMargin)
-      .truncated().createOrReplaceTempView(cfoRep)
-    StoreFiles.readRelChain(s, store, "bands")
-      .createOrReplaceTempView(cfoOldBands)
-    StoreFiles.readRelChain(s, store, "sigs")
-      .createOrReplaceTempView(cfoOldSigs)
-    val newBandSelects = (0 until JacBands)
-      .map(b => s"SELECT doc_id, $b AS band, ${jacBandKeySpark(b)} AS bk" +
-        s" FROM $cfoRep$jacBandGuard")
-      .mkString(" UNION ALL ")
-    // Increment candidates: bands(new reps) probe the STORED index
-    // (old-new) plus a banded self-join of the new reps alone
-    // (new-new); old-old pairs never regenerate — the assignment
-    // already summarizes them. The verify join is SIDE-SPLIT (r22,
-    // guide §2.4/§6): the two candidate branches are disjoint by
-    // construction (an id is never both stored and new, so an old-new
-    // pair can't also be a new-new pair), which makes the old
-    // cross-branch UNION equal to a per-branch DISTINCT — and with
-    // the branches separate, each verify endpoint has ONE home: old
-    // endpoints join the stored sigs relation directly (bucketed by
-    // doc_id, so the store side of that join is exchange-free at any
-    // scale) and new endpoints join the checkpointed increment. The
-    // old UNION ALL of stored + new sigs destroyed the store's
-    // bucketing and re-shuffled corpus-scale signature arrays by
-    // doc_id on every fold; now only the candidate pair list (two
-    // BIGINTs per row) moves. least/greatest normalizes the old-new
-    // branch because old/new ids interleave (the split is by source,
-    // not id); jaccard is symmetric, so verifying in (old, new)
-    // orientation is the same arithmetic term-for-term. The new
-    // batch's star edges ride along in the same frame.
-    val edges = s.sql(
-      s"""WITH newbands AS ($newBandSelects),
-         |cand_on AS (
-         |  SELECT DISTINCT o.doc_id AS doc_o, n.doc_id AS doc_n
-         |  FROM $cfoOldBands o JOIN newbands n
-         |    ON o.band = n.band AND o.bk = n.bk),
-         |cand_nn AS (
-         |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-         |  FROM newbands x JOIN newbands y
-         |    ON x.band = y.band AND x.bk = y.bk AND x.doc_id < y.doc_id),
-         |v_on AS (
-         |  SELECT least(doc_o, doc_n) AS doc_a,
-         |         greatest(doc_o, doc_n) AS doc_b FROM (
-         |    SELECT doc_o, doc_n,
-         |      round(cast(graft_isect(o.hs, n.hs) as double)
-         |        / (size(o.hs) + size(n.hs) - graft_isect(o.hs, n.hs)), 6)
-         |        AS jaccard
-         |    FROM cand_on JOIN $cfoOldSigs o ON o.doc_id = doc_o
-         |                 JOIN $cfoSigs n ON n.doc_id = doc_n
-         |    WHERE least(size(o.hs), size(n.hs)) * 10
-         |          >= greatest(size(o.hs), size(n.hs)) * 6)
-         |  WHERE jaccard >= 0.6),
-         |v_nn AS (
-         |  SELECT doc_a, doc_b FROM (
-         |    SELECT doc_a, doc_b,
-         |      round(cast(graft_isect(a.hs, b.hs) as double)
-         |        / (size(a.hs) + size(b.hs) - graft_isect(a.hs, b.hs)), 6)
-         |        AS jaccard
-         |    FROM cand_nn JOIN $cfoSigs a ON a.doc_id = doc_a
-         |                 JOIN $cfoSigs b ON b.doc_id = doc_b
-         |    WHERE least(size(a.hs), size(b.hs)) * 10
-         |          >= greatest(size(a.hs), size(b.hs)) * 6)
-         |  WHERE jaccard >= 0.6)
-         |SELECT doc_a, doc_b FROM v_on
-         |UNION ALL
-         |SELECT doc_a, doc_b FROM v_nn
-         |UNION ALL
-         |SELECT rep AS doc_a, doc_id AS doc_b FROM $cfoGrp
-         |WHERE doc_id <> rep""".stripMargin)
-    (newSigs, edges)
-  }
-
-  /** Write the NEXT-GENERATION store at `out`: assignment = the merged
-    * fold, sigs/bands = the prior store's parquet UNION the
-    * increment's (computed this generation). Stores are IMMUTABLE —
-    * the caller manages generation paths like any object-store
-    * dataset version, so there is no in-place flip to get wrong and a
-    * reader of the prior generation is never disturbed. Old text is
-    * never re-read at any generation; ClusterStoreSpec's
-    * three-generation chain destroys each batch's text as soon as its
-    * generation lands and the final assignment still bit-matches
-    * batch re-clustering of the original corpus.
-    */
-  private[graft] def clusterStoreFoldInto(s: SparkSession, dir: String,
-                                          store: String, newPred: String,
-                                          out: String,
-                                          delta: Boolean = false): Unit = {
-    if (delta)
-      require(StoreFiles.normParent(out) == StoreFiles.normParent(store),
-        "a delta generation links its parent by bare sibling name — " +
-          s"$out and $store must share a root")
-    val (newSigs, merged) = clusterStoreIncrement(s, dir, store, newPred)
-    new java.io.File(out).mkdirs()
-    // DELTA assignment = the rows the merge CHANGED: new docs plus
-    // old docs relabeled through new-batch bridges (set-difference
-    // against the parent chain's served assignment — exact because
-    // assignment rows are (id, label) pairs, one per id). Readers
-    // recover the full relation with last-writer-wins per id
-    // ([[storeAssignment]]); a non-delta fold writes the full merge,
-    // sealing any chain it folds from.
-    val mergedKept = merged.truncated()
-    val landedAssign =
-      if (delta) mergedKept.except(storeAssignment(s, store, "doc_id"))
-      else mergedKept
-    StoreFiles.writeBucketed(landedAssign, s"$out/assignment",
-      Seq("doc_id"))
-    // the increment lands rep-collapsed (the edge frame registered
-    // cfo_grp/cfo_repsigs): sigs/bands gain the NEW batch's reps only,
-    // grp gains its membership. A new group identical to a stored one
-    // keeps its own rep — both reps stay banded, so later probes fan
-    // out to both member sets (bounded by generation count, and
-    // `StoreCtl compact` re-seals a long chain).
-    def withPrior(rel: String,
-                  inc: DataFrame): DataFrame =
-      if (delta) inc else StoreFiles.readRelChain(s, store, rel).union(inc)
-    StoreFiles.writeBucketed(
-      withPrior("sigs", s.sql(s"SELECT doc_id, hs FROM ${foldView("cfo", store, "_repsigs")}")),
-      s"$out/sigs", Seq("doc_id"))
-    val bandSelects = (0 until JacBands)
-      .map(b => s"SELECT doc_id, $b AS band, ${jacBandKeySpark(b)} AS bk" +
-        s" FROM ${foldView("cfo", store, "_repsigs")}$jacBandGuard")
-      .mkString(" UNION ALL ")
-    StoreFiles.writeBucketed(
-      withPrior("bands",
-        s.sql(s"SELECT doc_id, band, bk FROM ($bandSelects)")),
-      s"$out/bands", Seq("band", "bk"), Seq("doc_id"))
-    StoreFiles.writeBucketed(
-      if (delta) s.sql(s"SELECT doc_id, rep FROM ${foldView("cfo", store, "_grp")}")
-      else storeGrp(s, store, "doc_id")
-        .union(s.sql(s"SELECT doc_id, rep FROM ${foldView("cfo", store, "_grp")}")),
-      s"$out/grp", Seq("rep"), Seq("doc_id"))
-    if (delta)
-      StoreFiles.writeParent(out, StoreFiles.parentGenName(store))
-    // docs = everything the SERVED assignment covers; for a delta the
-    // landed parquet is changed-rows-only, so count the merge itself
-    val n = if (delta) mergedKept.count()
-      // readRel, not raw parquet: an EMPTY fold's bucketed assignment
-      // has zero data files, and schema inference on it would abort a
-      // fold whose relations all landed (the sidecar carries the DDL)
-      else StoreFiles.readRel(s, s"$out/assignment").count()
-    ClusterStore.writeManifest(out, n)
-  }
 
   /** The store's assignment relation as (idCol, cluster_id), chain-
     * aware with LAST-WRITER-WINS per id: a DELTA generation's
@@ -3386,44 +2975,12 @@ object Dedup extends QueryPack {
     }.reduce(_ union _))
   }
 
-  // One monitor per on-disk store dir (same role as Similarity's
-  // storeLocks): the exists/build/write check-then-act must not
-  // interleave with a concurrent load of a half-written store.
-  private val clusterStoreLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]
-
-  /** Per-(process, corpus) scratch store dir, the IvfPqStore
-    * convention: first caller builds+saves, later calls are pure
-    * load+serve — the restarted-session story at fixture scale.
-    */
-  private[graft] def ensureClusterStore(s: SparkSession, dir: String): String = {
-    val store = StoreFiles.scratchDir("graft_cstore_", dir)
-    StoreFiles.ensure(clusterStoreLocks, store) {
-      clusterStoreBuild(s, dir, store)
-    }
-  }
-
   /** The family's held-out eval stand-in (txt_decontaminate /
     * dd_decontaminate's deterministic slice), shared with the
     * streaming decontamination gate so the store pred and the oracle
     * slice cannot drift.
     */
   private[graft] val evalPred = "doc_id % 50 = 0"
-
-  /** Per-(process, corpus) EVAL-SLICE cluster store: the same
-    * clusterStoreBuild layout, built over [[evalPred]]'s rows — the
-    * served index st_decontaminate_replay probes at ingest. At
-    * deployment scale this is the natural shape: the eval set is
-    * tiny, curated, and versioned, so its signature store is built
-    * once per eval release and every ingest batch screens against it.
-    */
-  private[graft] def ensureEvalClusterStore(s: SparkSession,
-                                            dir: String): String = {
-    val store = StoreFiles.scratchDir("graft_cstore_eval_", dir)
-    StoreFiles.ensure(clusterStoreLocks, store) {
-      clusterStoreBuild(s, dir, store, evalPred)
-    }
-  }
 
   /** DuckDB restatement for st_decontaminate_replay: the INDEPENDENT
     * all-pairs corpus-vs-eval spec ([[duckStoreNearDupSql]] with the
@@ -3455,7 +3012,7 @@ object Dedup extends QueryPack {
   // so the gate pins the persist/load path against the independent
   // old-half recursive-closure oracle.
   private def ddClusterStore(s: SparkSession, dir: String): DataFrame = {
-    val store = ensureClusterStore(s, dir)
+    val store = BandedStore.ensure(StoreKind.Cluster, s, dir)
     storeAssignment(s, store, "doc_id").orderBy(col("doc_id"))
   }
 
@@ -3464,7 +3021,8 @@ object Dedup extends QueryPack {
   // must be bit-identical to batch re-clustering of everything.
   private def ddClusterFoldStored(s: SparkSession, dir: String)
       : DataFrame =
-    clusterStoreFold(s, dir, ensureClusterStore(s, dir))
+    BandedStore.fold(StoreKind.Cluster, s, dir,
+      BandedStore.ensure(StoreKind.Cluster, s, dir))
 
   // -- dd_embed_cluster: semantic near-dup components (SemDeDup shape) --------
   // Embedding-space clustering for semantic dedup: connected components
@@ -3521,7 +3079,7 @@ object Dedup extends QueryPack {
     val pairsAll = edges.edgesBoth.where(col("src") < col("dst"))
       .toDF("vec_a", "vec_b")
     val ids = table(s, dir, "embeddings").select("vec_id")
-    // the ONE split convention (shared with embedStoreBuild and the
+    // the ONE split convention (shared with the embed store and the
     // oracle's max//2+1 restatement) — this was an inline second copy
     val split = embedSplit(s, dir)
     // vec_a < vec_b by construction, so an edge is old-old iff its
@@ -3542,35 +3100,6 @@ object Dedup extends QueryPack {
       .orderBy(col("vec_id"))
   }
 
-  // ---- persistent EMBED cluster store + incremental fold --------------------
-  // The semantic-dedup (SemDeDup) production pattern, mirroring the
-  // jaccard-side ClusterStore term-for-term: a store holds exactly
-  // what a vector increment needs and nothing else —
-  //   assignment/  (vec_id, cluster_id)  the converged prior labels
-  //   vecs/        (vec_id, embedding, n2)  the cosine-verify side
-  //   bands/       (vec_id, band, bkt)  the 12x5 RH-LSH probe index
-  //   manifest.json  written temp+ATOMIC_MOVE LAST (crash marker)
-  // A fold probes bands(new) against the stored index, cosine-verifies
-  // candidates against stored vecs + the new batch, and contract-merges
-  // into the stored assignment (contractedMerge's bit-identity
-  // argument) — it NEVER re-reads old vectors from the corpus:
-  // EmbedClusterStoreSpec zeroes every old embedding after the build
-  // and the fold still bit-matches full banded re-clustering of the
-  // original corpus. At 100 TB the store is the served dedup index —
-  // bands/ is bucket-collocatable on (band, bkt), vecs/ is the only
-  // full-width relation and is touched solely by verified candidates,
-  // and the contracted LP runs over |clusters| + |new| nodes. n2 is
-  // stored, not recomputed: the same graft_dot kernel output the
-  // build used, so fold-time cosines are bit-identical to build-time.
-  private[graft] object EmbedClusterStore {
-    def exists(dir: String): Boolean = StoreFiles.exists(dir)
-
-    def writeManifest(dir: String, nVecs: Long): Unit =
-      StoreFiles.writeManifest(dir,
-        s"""{"vecs": $nVecs, "bands": $CosBands, "rows_per_band": 5,
-           | "threshold": 0.4}""".stripMargin)
-  }
-
   /** Append-ordered split shared with dd_embed_cluster_incremental:
     * the top half of vec_ids is the new batch.
     */
@@ -3583,307 +3112,12 @@ object Dedup extends QueryPack {
     row.getLong(0) / 2 + 1
   }
 
-  /** Build the store from the corpus vectors with vec_id < `split`:
-    * one banded self-join + cosine verify (the dd_embed_cosine_lsh
-    * arithmetic, term-for-term), one LP to convergence, three parquet
-    * landings, manifest last.
-    */
-  private[graft] def embedStoreBuild(s: SparkSession, dir: String,
-                                     store: String,
-                                     pred: String = ""): Unit = {
-    // store-path-qualified view names — the clusterStoreBuild note:
-    // the serving and eval-slice builds of one corpus lock different
-    // dirs and may run concurrently in one session
-    val estE = "est" + StoreFiles.md5Hex(store, 8) + "_e"
-    val estGrp = "est" + StoreFiles.md5Hex(store, 8) + "_grp"
-    val estRep = "est" + StoreFiles.md5Hex(store, 8) + "_repe"
-    VectorFunctions.ensureRegistered(s)
-    val oldPred =
-      if (pred.isEmpty) s"vec_id < ${embedSplit(s, dir)}" else pred
-    val e = table(s, dir, "embeddings")
-      .where(oldPred)
-      .selectExpr("vec_id", "embedding",
-        "graft_dot(embedding, embedding) AS n2",
-        "graft_rh_buckets(embedding) AS bks")
-      .cache()
-    e.createOrReplaceTempView(estE)
-    // rep-collapsed layout (the ClusterStore r17 discipline, embed
-    // face): byte-identical vectors collapse to their min-vec_id rep
-    // (embedClusterEdges' key; zero-norm carve-out — a zero vector's
-    // cosine is NaN, never an edge), only reps are banded/stored
-    // full-width, membership lands in grp/. Exact because a member's
-    // bytes and n2 equal its rep's: every cosine any consumer computes
-    // against a member is bit-identical against its rep.
-    embedGrpFrame(s, estE).createOrReplaceTempView(estGrp)
-    s.sql(
-      s"""SELECT s.* FROM $estE s
-         |JOIN (SELECT DISTINCT rep FROM $estGrp) r ON s.vec_id = r.rep"""
-        .stripMargin)
-      .truncated().createOrReplaceTempView(estRep)
-    // same zero-norm band guard as ddEmbedLshPairs
-    val bandSelects = (0 until CosBands)
-      .map(b => s"SELECT vec_id, $b AS band, element_at(bks, ${b + 1})" +
-        s" AS bkt FROM $estRep WHERE n2 > 0")
-      .mkString(" UNION ALL ")
-    val pairs = s.sql(
-      s"""WITH bands AS ($bandSelects),
-         |cand AS (
-         |  SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
-         |  FROM bands x JOIN bands y
-         |    ON x.band = y.band AND x.bkt = y.bkt AND x.vec_id < y.vec_id)
-         |SELECT vec_a, vec_b FROM (
-         |  SELECT vec_a, vec_b, round(cs, 6) AS cos_sim FROM (
-         |    SELECT vec_a, vec_b,
-         |      graft_cos(a.embedding, b.embedding, a.n2, b.n2) AS cs
-         |    FROM cand JOIN $estE a ON a.vec_id = vec_a
-         |              JOIN $estE b ON b.vec_id = vec_b)
-         |  WHERE cs > 0.3999994)
-         |WHERE cos_sim >= 0.4
-         |UNION ALL
-         |SELECT rep AS vec_a, vec_id AS vec_b FROM $estGrp
-         |WHERE vec_id <> rep""".stripMargin)
-    val lbl = labelPropagate("dd_embed_cluster_store",
-      pairs.toDF("doc_a", "doc_b"),
-      e.select(col("vec_id").as("doc_id")))
-      .toDF("vec_id", "cluster_id")
-    new java.io.File(store).mkdirs()
-    // bucketed layout — see clusterStoreBuild's note
-    StoreFiles.writeBucketed(lbl, s"$store/assignment", Seq("vec_id"))
-    StoreFiles.writeBucketed(
-      s.sql(s"SELECT vec_id, embedding, n2 FROM $estRep"),
-      s"$store/vecs", Seq("vec_id"))
-    StoreFiles.writeBucketed(
-      s.sql(s"SELECT vec_id, band, bkt FROM ($bandSelects)"),
-      s"$store/bands", Seq("band", "bkt"), Seq("vec_id"))
-    StoreFiles.writeBucketed(
-      s.sql(s"SELECT vec_id, rep FROM $estGrp"),
-      s"$store/grp", Seq("rep"), Seq("vec_id"))
-    val n = e.count()
-    e.unpersist()
-    lbl.unpersist()
-    EmbedClusterStore.writeManifest(store, n)
-  }
-
-  /** The embed fold's new-batch relation (eagerly checkpointed) and
-    * its cosine-verified edge frame, LAZY — the same split as
-    * [[clusterStoreEdgeFrame]], for the same PlanSpec pin.
-    */
-  private[graft] def embedStoreEdgeFrame(s: SparkSession, dir: String,
-                                         store: String,
-                                         newPred: String = "")
-      : (DataFrame, DataFrame) = {
-    val efoE = foldView("efo", store, "_e")
-    val efoGrp = foldView("efo", store, "_grp")
-    val efoRep = foldView("efo", store, "_repe")
-    val efoOldBands = foldView("efo", store, "_oldbands")
-    val efoOldVecs = foldView("efo", store, "_oldvecs")
-    VectorFunctions.ensureRegistered(s)
-    val np =
-      if (newPred.isEmpty) s"vec_id >= ${embedSplit(s, dir)}" else newPred
-    // eager localCheckpoint: feeds 12 band sides, both verify
-    // join-backs, and the node list inside ONE edge job (the lazy-
-    // cache race documented at clusterStoreIncrement)
-    val newE = table(s, dir, "embeddings")
-      .where(np)
-      .selectExpr("vec_id", "embedding",
-        "graft_dot(embedding, embedding) AS n2",
-        "graft_rh_buckets(embedding) AS bks")
-      .truncated()
-    newE.createOrReplaceTempView(efoE)
-    // NEW-side collapse (see clusterStoreEdgeFrame): a bombed vector
-    // ingest batch probes and verifies once per group; members ride
-    // star edges; the old side's membership lives in the stored
-    // assignment.
-    embedGrpFrame(s, efoE).createOrReplaceTempView(efoGrp)
-    s.sql(
-      s"""SELECT s.* FROM $efoE s
-         |JOIN (SELECT DISTINCT rep FROM $efoGrp) r ON s.vec_id = r.rep"""
-        .stripMargin)
-      .truncated().createOrReplaceTempView(efoRep)
-    StoreFiles.readRelChain(s, store, "bands")
-      .createOrReplaceTempView(efoOldBands)
-    StoreFiles.readRelChain(s, store, "vecs")
-      .createOrReplaceTempView(efoOldVecs)
-    val newBandSelects = (0 until CosBands)
-      .map(b => s"SELECT vec_id, $b AS band, element_at(bks, ${b + 1})" +
-        s" AS bkt FROM $efoRep WHERE n2 > 0")
-      .mkString(" UNION ALL ")
-    // bands(new reps) probe the STORED index (old-new) plus a banded
-    // self-join of the new reps alone (new-new); old-old pairs never
-    // regenerate. The verify join is SIDE-SPLIT (r22, guide §2.4/§6 —
-    // see clusterStoreEdgeFrame's note): the branches are disjoint
-    // (an id is never both stored and new), so the cross-branch UNION
-    // equals per-branch DISTINCTs, and each endpoint verifies against
-    // its ONE home — old endpoints against the stored vecs relation
-    // (bucketed by vec_id: the store side of the join is
-    // exchange-free at any scale), new endpoints against the
-    // checkpointed increment. The old UNION ALL re-shuffled
-    // corpus-scale EMBEDDING ARRAYS through a fresh exchange on every
-    // fold; now only the candidate pair list moves. least/greatest
-    // normalizes the probe branch because a caller's pred need not
-    // keep every old id below every new id (the default split does);
-    // cosine is symmetric. The new batch's star edges ride along in
-    // the same frame.
-    val edges = s.sql(
-      s"""WITH newbands AS ($newBandSelects),
-         |cand_on AS (
-         |  SELECT DISTINCT o.vec_id AS vec_o, n.vec_id AS vec_n
-         |  FROM $efoOldBands o JOIN newbands n
-         |    ON o.band = n.band AND o.bkt = n.bkt),
-         |cand_nn AS (
-         |  SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
-         |  FROM newbands x JOIN newbands y
-         |    ON x.band = y.band AND x.bkt = y.bkt AND x.vec_id < y.vec_id),
-         |v_on AS (
-         |  SELECT least(vec_o, vec_n) AS vec_a,
-         |         greatest(vec_o, vec_n) AS vec_b FROM (
-         |    SELECT vec_o, vec_n, round(cs, 6) AS cos_sim FROM (
-         |      SELECT vec_o, vec_n,
-         |        graft_cos(o.embedding, n.embedding, o.n2, n.n2) AS cs
-         |      FROM cand_on JOIN $efoOldVecs o ON o.vec_id = vec_o
-         |                   JOIN $efoE n ON n.vec_id = vec_n)
-         |    WHERE cs > 0.3999994)
-         |  WHERE cos_sim >= 0.4),
-         |v_nn AS (
-         |  SELECT vec_a, vec_b FROM (
-         |    SELECT vec_a, vec_b, round(cs, 6) AS cos_sim FROM (
-         |      SELECT vec_a, vec_b,
-         |        graft_cos(a.embedding, b.embedding, a.n2, b.n2) AS cs
-         |      FROM cand_nn JOIN $efoE a ON a.vec_id = vec_a
-         |                   JOIN $efoE b ON b.vec_id = vec_b)
-         |    WHERE cs > 0.3999994)
-         |  WHERE cos_sim >= 0.4)
-         |SELECT vec_a, vec_b FROM v_on
-         |UNION ALL
-         |SELECT vec_a, vec_b FROM v_nn
-         |UNION ALL
-         |SELECT rep AS vec_a, vec_id AS vec_b FROM $efoGrp
-         |WHERE vec_id <> rep""".stripMargin)
-    (newE, edges)
-  }
-
-  /** Fold the corpus vectors matching `newPred` (default: the top
-    * half) into the stored clustering: reads the store + the NEW
-    * vectors only; bit-identical to batch re-clustering
-    * (contractedMerge's argument).
-    */
-  private[graft] def embedStoreFold(s: SparkSession, dir: String,
-                                    store: String,
-                                    newPred: String = ""): DataFrame =
-    embedStoreIncrement(s, dir, store, newPred)._2
-      .orderBy(col("vec_id"))
-
-  /** The increment shared by the serve-only fold and the
-    * generation-writing [[embedStoreFoldInto]]: the new batch's
-    * checkpointed (vec_id, embedding, n2, bks) relation and the
-    * merged (store + new) assignment, UNSORTED.
-    */
-  private def embedStoreIncrement(s: SparkSession, dir: String,
-                                  store: String, newPred: String)
-      : (DataFrame, DataFrame) = {
-    val (newE, edgesLazy) = embedStoreEdgeFrame(s, dir, store, newPred)
-    // eager edge checkpoint (the threshold-into-join-condition trap,
-    // see clusterStoreIncrement) — with AQE ON since r21 so the
-    // verify join-backs broadcast the model-sized sides at runtime
-    // (measured there: CPU halves; same adjudication note)
-    val edges = edgesLazy.truncated()
-    val lblA = storeAssignment(s, store, "doc_id")
-    (newE,
-      contractedMerge("dd_embed_cluster_fold_stored#merge", lblA,
-        edges.toDF("doc_a", "doc_b"),
-        newE.select(col("vec_id").as("doc_id")))
-        .select(col("doc_id").as("vec_id"), col("cluster_id")))
-  }
-
-  /** Write the NEXT-GENERATION embed store at `out`: assignment = the
-    * merged fold, vecs/bands = the prior store's parquet UNION the
-    * increment's. Stores are IMMUTABLE — same generation discipline
-    * and no-old-reads guarantee as [[clusterStoreFoldInto]]
-    * (EmbedClusterStoreSpec's chain test zeroes each batch's vectors
-    * as soon as its generation lands).
-    */
-  private[graft] def embedStoreFoldInto(s: SparkSession, dir: String,
-                                        store: String, newPred: String,
-                                        out: String,
-                                        delta: Boolean = false): Unit = {
-    if (delta)
-      require(StoreFiles.normParent(out) == StoreFiles.normParent(store),
-        "a delta generation links its parent by bare sibling name — " +
-          s"$out and $store must share a root")
-    val (newE, merged) = embedStoreIncrement(s, dir, store, newPred)
-    new java.io.File(out).mkdirs()
-    // delta assignment = changed rows only; serve is last-writer-wins
-    // over the chain (see clusterStoreFoldInto)
-    val mergedKept = merged.truncated()
-    StoreFiles.writeBucketed(
-      if (delta) mergedKept.except(storeAssignment(s, store, "vec_id"))
-      else mergedKept,
-      s"$out/assignment", Seq("vec_id"))
-    // the increment lands rep-collapsed (the edge frame registered
-    // efo_grp/efo_repe): vecs/bands gain the NEW batch's reps only,
-    // grp gains its membership (the clusterStoreFoldInto discipline)
-    def withPrior(rel: String, inc: DataFrame): DataFrame =
-      if (delta) inc else StoreFiles.readRelChain(s, store, rel).union(inc)
-    StoreFiles.writeBucketed(
-      withPrior("vecs",
-        s.sql(s"SELECT vec_id, embedding, n2 FROM ${foldView("efo", store, "_repe")}")),
-      s"$out/vecs", Seq("vec_id"))
-    val bandSelects = (0 until CosBands)
-      .map(b => s"SELECT vec_id, $b AS band, element_at(bks, ${b + 1})" +
-        s" AS bkt FROM ${foldView("efo", store, "_repe")} WHERE n2 > 0")
-      .mkString(" UNION ALL ")
-    StoreFiles.writeBucketed(
-      withPrior("bands",
-        s.sql(s"SELECT vec_id, band, bkt FROM ($bandSelects)")),
-      s"$out/bands", Seq("band", "bkt"), Seq("vec_id"))
-    StoreFiles.writeBucketed(
-      if (delta) s.sql(s"SELECT vec_id, rep FROM ${foldView("efo", store, "_grp")}")
-      else storeGrp(s, store, "vec_id")
-        .union(s.sql(s"SELECT vec_id, rep FROM ${foldView("efo", store, "_grp")}")),
-      s"$out/grp", Seq("rep"), Seq("vec_id"))
-    if (delta)
-      StoreFiles.writeParent(out, StoreFiles.parentGenName(store))
-    // vecs are reps only now — docs = what the SERVED assignment covers
-    val n = if (delta) mergedKept.count()
-      // readRel, not raw parquet: an EMPTY fold's bucketed assignment
-      // has zero data files, and schema inference on it would abort a
-      // fold whose relations all landed (the sidecar carries the DDL)
-      else StoreFiles.readRel(s, s"$out/assignment").count()
-    EmbedClusterStore.writeManifest(out, n)
-  }
-
-  private val embedStoreLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]
-
-  /** Per-(process, corpus) scratch store, the ClusterStore/IvfPqStore
-    * convention: first caller builds+saves, later calls load+serve.
-    */
-  private[graft] def ensureEmbedStore(s: SparkSession,
-                                      dir: String): String = {
-    val store = StoreFiles.scratchDir("graft_estore_", dir)
-    StoreFiles.ensure(embedStoreLocks, store) {
-      embedStoreBuild(s, dir, store)
-    }
-  }
-
   /** [[evalPred]] over vec_id — one definition for the embed family's
     * eval slice, so the store build and the streaming feed cannot
     * drift (the text side's evalPred argument; the DuckDB oracles
     * state the same % 50 literally, next to the batch oracle's own).
     */
   private[graft] val evalVecPred = "vec_id % 50 = 0"
-
-  /** Per-(process, corpus) EVAL-SLICE embed store ([[evalVecPred]] —
-    * the semantic twin of [[ensureEvalClusterStore]]): the served
-    * index st_decontaminate_semantic_replay probes at ingest.
-    */
-  private[graft] def ensureEvalEmbedStore(s: SparkSession,
-                                          dir: String): String = {
-    val store = StoreFiles.scratchDir("graft_estore_eval_", dir)
-    StoreFiles.ensure(embedStoreLocks, store) {
-      embedStoreBuild(s, dir, store, evalVecPred)
-    }
-  }
 
   /** DuckDB restatement for st_decontaminate_semantic_replay: the
     * corpus-vs-eval slice of the BANDED cosine pair table (the
@@ -3918,7 +3152,7 @@ object Dedup extends QueryPack {
   // -- dd_embed_cluster_store: persist the old-half clustering, serve LOADED --
   private def ddEmbedClusterStore(s: SparkSession, dir: String)
       : DataFrame = {
-    val store = ensureEmbedStore(s, dir)
+    val store = BandedStore.ensure(StoreKind.Embed, s, dir)
     storeAssignment(s, store, "vec_id").orderBy(col("vec_id"))
   }
 
@@ -3927,7 +3161,8 @@ object Dedup extends QueryPack {
   // vectors must be bit-identical to batch re-clustering of everything.
   private def ddEmbedClusterFoldStored(s: SparkSession, dir: String)
       : DataFrame =
-    embedStoreFold(s, dir, ensureEmbedStore(s, dir))
+    BandedStore.fold(StoreKind.Embed, s, dir,
+      BandedStore.ensure(StoreKind.Embed, s, dir))
 
   /** Old-half restriction for the store oracle — the banded clustering
     * of the build's half alone, restated independently.

@@ -42,7 +42,7 @@ case class MediaFeatures(doc_id: Long, modality: String, n_bytes: Long,
 object Multimodal extends QueryPack {
 
   /** documents -> media view: opaque payload + metadata columns. */
-  private def media(s: SparkSession, dir: String): DataFrame =
+  private[graft] def media(s: SparkSession, dir: String): DataFrame =
     table(s, dir, "documents")
       .selectExpr("doc_id", "source AS modality",
         "cast(text AS binary) AS payload", "text", "n_chars")
@@ -340,7 +340,7 @@ object Multimodal extends QueryPack {
   // ones. Bit 63's weight is Long.MinValue, written (-MAX-1) because
   // both SQL dialects parse bare -9223372036854775808 as unary minus on
   // an out-of-range literal.
-  private val PhashBits = 64
+  private[graft] val PhashBits = 64
 
   private def phashTerm(i: Int): String = {
     val value =
@@ -363,8 +363,8 @@ object Multimodal extends QueryPack {
     * consumed by the 64 byte probes INSIDE this projection and never
     * survives it — the mm pack's payloads-never-shuffle invariant.
     */
-  private def phashSigsOf(df: DataFrame,
-                          carry: Seq[String] = Nil): DataFrame = {
+  private[graft] def phashSigsOf(df: DataFrame,
+                                 carry: Seq[String] = Nil): DataFrame = {
     val probes = (0 until PhashBits).map(i =>
       s"ascii(substring(text, 1 + $i * stride, 1)) AS p_$i")
     val sum = (0 until PhashBits).map(i => s"p_$i").mkString(" + ")
@@ -452,10 +452,10 @@ object Multimodal extends QueryPack {
     val sigs = phashSigs(s, dir).cache()
     sigs.createOrReplaceTempView(sv)
     Dedup.trackCached(s, dir, sigs)
-    collapseByPhash(s, sv, gv, rv, coalesceReps = true)
+    collapseByPhash(s, sv, gv, rv)
     val grp = s.table(gv)
     val ver = s.sql(
-      s"""WITH bands AS (${phashBandSelects(rv)}),
+      s"""WITH bands AS (${BandedStore.bandSelects(StoreKind.Phash, rv)}),
          |cand AS (
          |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
          |  FROM bands x JOIN bands y
@@ -516,37 +516,37 @@ object Multimodal extends QueryPack {
     * edges are carried by its identically-signed rep — the component
     * partition is bit-identical to the uncollapsed graph.
     */
-  /** The signature rep-collapse, ONE implementation for its three
-    * consumers (cluster edges, store build, fold increment) — the
-    * same single-point-of-truth treatment banding gets from
-    * phashBandSelects, so a tie-break change in the min-rep rule can
-    * never desynchronize the cluster index from the persisted store.
-    * Registers `grpView` (doc_id → min-doc_id rep per identical
-    * signature) and `repView` (the representatives' sig rows), both
-    * as eager truncated frames (multiply scanned downstream).
+  /** The signature rep-collapse membership (doc_id → min-doc_id rep
+    * per identical signature) over a registered sig view, eager (it is
+    * scanned several times downstream) — ONE min-rep rule for the pair
+    * family and the persisted store, so the two can never disagree.
     */
-  private def collapseByPhash(s: SparkSession, sigsView: String,
-                              grpView: String, repView: String,
-                              coalesceReps: Boolean = false): Unit = {
-    val grp = s.sql(
+  private[graft] def phashGrpFrame(s: SparkSession,
+                                   sigsView: String): DataFrame =
+    s.sql(
       s"""SELECT k.doc_id, g.rep FROM $sigsView k
          |JOIN (SELECT phash, min(doc_id) AS rep FROM $sigsView
          |      GROUP BY phash) g
          |ON k.phash = g.phash""".stripMargin)
       .truncated()
+
+  /** Register [[phashGrpFrame]] as `grpView` and the representatives'
+    * sig rows as `repView` (eager).
+    */
+  private def collapseByPhash(s: SparkSession, sigsView: String,
+                              grpView: String, repView: String): Unit = {
+    val grp = phashGrpFrame(s, sigsView)
     grp.createOrReplaceTempView(grpView)
-    val reps = s.sql(
+    // scale-adaptive (r22, was a literal coalesce(4)): membership count
+    // bounds the rep count from above, one cheap job over the
+    // just-checkpointed frame — see Dedup.repPartitions (reps are
+    // corpus-scale when signatures are mostly unique, so a constant
+    // here is wrong at 100 TB)
+    s.sql(
       s"""SELECT s.doc_id, s.phash FROM $sigsView s
          |JOIN (SELECT DISTINCT rep FROM $grpView) r ON s.doc_id = r.rep"""
         .stripMargin)
-    // scale-adaptive (r22, was a literal coalesce(4) at the relations
-    // site): membership count bounds the rep count from above, one
-    // cheap job over the just-checkpointed frame — see
-    // Dedup.repPartitions (reps are corpus-scale when signatures are
-    // mostly unique, so a constant here is wrong at 100 TB)
-    (if (coalesceReps)
-       reps.coalesce(graft.operators.Dedup.repPartitions(s, grp.count()))
-     else reps)
+      .coalesce(graft.operators.Dedup.repPartitions(s, grp.count()))
       .truncated().createOrReplaceTempView(repView)
   }
 
@@ -555,7 +555,7 @@ object Multimodal extends QueryPack {
     // ddClusterEdges treatment): the edge set is the rep-level
     // verified pair table plus the k-1 star edges — the collapse key
     // (the 64-bit signature itself), the banding (shared
-    // phashBandSelects) and the Hamming <= 3 verify are identical to
+    // phash band selects) and the Hamming <= 3 verify are identical to
     // what [[mmPhashRepVerifyFrame]] already materializes for
     // mm_phash_pairs, so this caller re-uses the registry frame
     // instead of re-running the banded self-join per call (guide
@@ -587,122 +587,6 @@ object Multimodal extends QueryPack {
       shareKey = Some(s"mm_phash_cluster_edges|$dir"))
       .orderBy(col("doc_id"))
 
-  // ---- persistent phash store + streaming ingest probe ----------------------
-  // The media modality's member of the served-store family (cluster
-  // store = text shingles, embed store = vectors, IvfPqStore = ANN
-  // codes): a catalog's perceptual-hash index persisted once, probed
-  // by every later ingest batch so near-identical media never lands
-  // twice. Layout (StoreFiles conventions — manifest temp+ATOMIC_MOVE
-  // last, per-(process, corpus) scratch dir, locked ensure):
-  //   sigs/   (doc_id, phash)     the exact Hamming-verify side
-  //   bands/  (doc_id, band, bv)  the 4x16-bit pigeonhole index
-  // Built from the docs matching Dedup.oldPred (the store family's
-  // shared old/new split). The pigeonhole guarantee is EXACT (<= 3
-  // differing bits leave >= 1 of 4 bands identical), so the banded
-  // probe's recall against the all-pairs spec is a theorem, not a
-  // probability — the oracle states the all-pairs form anyway, per
-  // the family discipline.
-  private val phashStoreLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]
-
-  private def phashBandSelects(view: String): String = (0 until 4)
-    .map(b => s"SELECT doc_id, $b AS band," +
-      s" shiftright(phash, ${16 * b}) & 65535 AS bv FROM $view")
-    .mkString(" UNION ALL ")
-
-  /** Build the store rep-collapsed (the r17 ClusterStore discipline,
-    * phash face): docs group by the SIGNATURE VALUE itself — exact by
-    * definition, since phash-equal is Hamming 0, a true pair
-    * regardless of payload bytes — the min-doc_id rep alone is banded
-    * and stored in sigs/, membership lands in grp/. A stored k-copy
-    * bomb costs one band row set, and a probe verifies once per
-    * group; member pairs are recovered by the grp fan-out.
-    */
-  private[graft] def phashStoreBuild(s: SparkSession, dir: String,
-                                     store: String,
-                                     pred: String = Dedup.oldPred): Unit = {
-    val sigs = phashSigsOf(media(s, dir).where(pred)).cache()
-    sigs.createOrReplaceTempView("pst_allsigs")
-    collapseByPhash(s, "pst_allsigs", "pst_grp", "pst_sigs")
-    new java.io.File(store).mkdirs()
-    // bucketed layout — see Dedup.clusterStoreBuild's note
-    StoreFiles.writeBucketed(
-      s.sql("SELECT doc_id, phash FROM pst_sigs"),
-      s"$store/sigs", Seq("doc_id"))
-    StoreFiles.writeBucketed(
-      s.sql(
-        s"SELECT doc_id, band, bv FROM (${phashBandSelects("pst_sigs")})"),
-      s"$store/bands", Seq("band", "bv"), Seq("doc_id"))
-    StoreFiles.writeBucketed(
-      s.sql("SELECT doc_id, rep FROM pst_grp"),
-      s"$store/grp", Seq("rep"), Seq("doc_id"))
-    val n = sigs.count()
-    sigs.unpersist()
-    StoreFiles.writeManifest(store,
-      s"""{"docs": $n, "bands": 4, "bits": $PhashBits, "hamming": 3}""")
-  }
-
-  private[graft] def ensurePhashStore(s: SparkSession, dir: String): String = {
-    val store = StoreFiles.scratchDir("graft_pstore_", dir)
-    StoreFiles.ensure(phashStoreLocks, store) {
-      phashStoreBuild(s, dir, store)
-    }
-  }
-
-  /** Write the NEXT-GENERATION store at `out`: sigs/bands = the prior
-    * store's parquet UNION the `where`-rows' freshly computed
-    * signatures. Stores are IMMUTABLE — the caller manages generation
-    * paths (the clusterStoreFoldInto / ivfPqStoreFoldInto
-    * discipline), so a reader serving the prior generation is never
-    * disturbed and old payloads are never re-read at any generation.
-    */
-  private[graft] def phashStoreFoldInto(s: SparkSession, dir: String,
-                                        store: String, out: String,
-                                        where: String,
-                                        delta: Boolean = false): Unit = {
-    if (delta)
-      require(StoreFiles.normParent(out) == StoreFiles.normParent(store),
-        "a delta generation links its parent by bare sibling name — " +
-          s"$out and $store must share a root")
-    val newSigs = phashSigsOf(media(s, dir).where(where)).cache()
-    newSigs.createOrReplaceTempView("pfi_allsigs")
-    // the increment lands rep-collapsed per batch (the
-    // clusterStoreFoldInto discipline): reps into sigs/bands,
-    // membership into grp — a group recurring across generations
-    // keeps one rep per generation, re-sealable by StoreCtl compact
-    collapseByPhash(s, "pfi_allsigs", "pfi_grp", "pfi_sigs")
-    new java.io.File(out).mkdirs()
-    // delta: the increment's rows alone land (bytes ∝ batch, not
-    // store); readers union the relations across the _PARENT chain
-    // (StoreFiles.readRelChain) and compact seals it nightly
-    def withPrior(rel: String, inc: org.apache.spark.sql.DataFrame) =
-      if (delta) inc
-      else StoreFiles.readRelChain(s, store, rel).union(inc)
-    StoreFiles.writeBucketed(
-      withPrior("sigs", s.sql("SELECT doc_id, phash FROM pfi_sigs")),
-      s"$out/sigs", Seq("doc_id"))
-    StoreFiles.writeBucketed(
-      withPrior("bands", s.sql(
-        s"SELECT doc_id, band, bv FROM (${phashBandSelects("pfi_sigs")})")),
-      s"$out/bands", Seq("band", "bv"), Seq("doc_id"))
-    StoreFiles.writeBucketed(
-      if (delta) s.sql("SELECT doc_id, rep FROM pfi_grp")
-      else Dedup.storeGrp(s, store, "doc_id")
-        .union(s.sql("SELECT doc_id, rep FROM pfi_grp")),
-      s"$out/grp", Seq("rep"), Seq("doc_id"))
-    val added = newSigs.count()
-    newSigs.unpersist()
-    if (delta)
-      StoreFiles.writeParent(out, StoreFiles.parentGenName(store))
-    val prior = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(store, "manifest.json")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val n = """"docs":\s*(\d+)""".r.findFirstMatchIn(prior)
-      .map(_.group(1).toLong).getOrElse(0L) + added
-    StoreFiles.writeManifest(out,
-      s"""{"docs": $n, "bands": 4, "bits": $PhashBits, "hamming": 3}""")
-  }
-
   // -- mm_phash_store: persist the catalog's phash index, serve the LOADED copy
   // The media twin of dd_cluster_store: round-trips the old-half
   // signature table through the persisted store and returns the
@@ -710,7 +594,7 @@ object Multimodal extends QueryPack {
   // so the gate pins the persist/load path against the independently
   // restated signature arithmetic narrowed to the store's rows.
   private def mmPhashStore(s: SparkSession, dir: String): DataFrame = {
-    val store = ensurePhashStore(s, dir)
+    val store = BandedStore.ensure(StoreKind.Phash, s, dir)
     // the store keeps rep sigs + grp membership; the full signature
     // table is one equi-join away, exact because a member's phash IS
     // its group key (identical to its rep's by construction)
@@ -725,17 +609,16 @@ object Multimodal extends QueryPack {
     s"""WITH ${phashSigsSqlWhere(Dedup.oldPred)}
        |SELECT doc_id, phash FROM sigs ORDER BY doc_id""".stripMargin
 
-  /** Per-(process, corpus) folded next generation: gen 0 is
-    * [[ensurePhashStore]]'s old-half store, gen 1 folds in everything
-    * else. First caller builds both; later calls are pure load+serve
-    * (the store family's rep-1-builds bench shape).
+  /** Per-(process, corpus) folded next generation: gen 0 is the
+    * old-half phash store, gen 1 folds in everything else. First
+    * caller builds both; later calls are pure load+serve (the store
+    * family's rep-1-builds bench shape).
     */
-  private[graft] def ensurePhashFoldStore(s: SparkSession,
-                                          dir: String): String = {
+  private def ensurePhashFoldStore(s: SparkSession, dir: String): String = {
     val out = StoreFiles.scratchDir("graft_pstore_g1_", dir)
-    StoreFiles.ensure(phashStoreLocks, out) {
-      phashStoreFoldInto(s, dir, ensurePhashStore(s, dir), out,
-        s"NOT (${Dedup.oldPred})")
+    StoreFiles.ensure(out) {
+      BandedStore.foldInto(StoreKind.Phash, s, dir,
+        BandedStore.ensure(StoreKind.Phash, s, dir), "", out)
     }
   }
 
@@ -789,27 +672,6 @@ object Multimodal extends QueryPack {
          |FROM pfs_grp x JOIN pfs_grp y
          |  ON x.rep = y.rep AND x.doc_id < y.doc_id
          |ORDER BY doc_a, doc_b""".stripMargin)
-  }
-
-  /** Streaming-side (doc_id, ts, phash, band, bv) expansion against
-    * the store's banding — lives next to [[ensurePhashStore]] so the
-    * probe and the index can never band differently. n_chars is
-    * derived from the payload in hand (`length(text)`; the corpus
-    * column is the same value — TESTDATA contract), the signature is
-    * computed MAP-SIDE, and the payload never survives the first
-    * projection. Input columns: doc_id, ts (epoch-nanos bigint), text.
-    */
-  private[graft] def phashProbeRows(mediaStream: DataFrame): DataFrame = {
-    val bandCols = (0 until 4).map(b =>
-      s"struct($b AS band, shiftright(phash, ${16 * b}) & 65535 AS bv)")
-    phashSigsOf(
-      mediaStream.selectExpr("doc_id", "ts", "text",
-        "length(text) AS n_chars"),
-      carry = Seq("ts"))
-      .selectExpr("doc_id", "ts", "phash",
-        s"explode(array(${bandCols.mkString(", ")})) AS bb")
-      .selectExpr("doc_id", "ts", "phash",
-        "bb.band AS band", "bb.bv AS bv")
   }
 
   /** DuckDB restatement for st_store_phash_replay: the INDEPENDENT

@@ -991,16 +991,12 @@ object Similarity extends QueryPack {
     }
   }
 
-  // One monitor per on-disk store dir (see simIvfPqStored).
-  private val storeLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]
-
   /** The cached-model lookup, SERIALIZED per (session, corpus):
     * TrieMap.getOrElseUpdate is not atomic in the update, so two
     * concurrent first callers would both run the full Lloyd round and
     * the loser's localCheckpoint'ed code table would leak until the
     * ContextCleaner collects it — the disk path already serializes
-    * through storeLocks; this is the in-memory equivalent.
+    * through StoreFiles.ensure; this is the in-memory equivalent.
     */
   private val modelLocks =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Object]
@@ -1213,10 +1209,6 @@ object Similarity extends QueryPack {
         // served generation's copy IS the chain's model
         graft.operators.StoreFiles.readRelChain(s, dir, "codes"))
     }
-
-    def exists(dir: String): Boolean =
-      java.nio.file.Files.exists(
-        java.nio.file.Paths.get(dir, "model.json"))
   }
 
   // -- sim_ivfpq_stored: serve from the DISK-persisted index ------------------
@@ -1245,13 +1237,10 @@ object Similarity extends QueryPack {
     // two sessions in one process hitting the same scratch dir must
     // not interleave a save with a load of the half-written store.
     // (Cross-process the pid-suffixed dir already isolates.)
-    storeLocks.computeIfAbsent(out, _ => new Object).synchronized {
-      if (!IvfPqStore.exists(out)) {
-        new java.io.File(out).mkdirs()
-        IvfPqStore.save(cachedModel(s, dir), out)
-      }
+    StoreFiles.ensure(out) {
+      new java.io.File(out).mkdirs()
+      IvfPqStore.save(cachedModel(s, dir), out)
     }
-    out
   }
 
   private def simIvfPqStored(s: SparkSession, dir: String): DataFrame = {
@@ -1303,8 +1292,8 @@ object Similarity extends QueryPack {
   /** Write the NEXT-GENERATION store at `out`: cents/codebooks frozen
     * (copied), codes = stored UNION the newly encoded rows. Stores
     * are IMMUTABLE — the caller manages generation paths like any
-    * object-store dataset version (the [[graft.operators.Dedup]]
-    * clusterStoreFoldInto discipline); the prior generation is never
+    * object-store dataset version (the [[BandedStore.foldInto]]
+    * discipline); the prior generation is never
     * touched, so a reader serving it is never disturbed.
     */
   private[graft] def ivfPqStoreFoldInto(s: SparkSession, dir: String,
@@ -1338,15 +1327,9 @@ object Similarity extends QueryPack {
                                          dir: String): String = {
     purgeDeadSessions()
     val store = StoreFiles.scratchDir("graft_ivfpq0_", dir)
-    storeLocks.computeIfAbsent(store, _ => new Object).synchronized {
-      if (!IvfPqStore.exists(store)) {
-        new java.io.File(store).mkdirs()
-        IvfPqStore.save(
-          trainIvfPq(s, dir, trainWhere = s"vec_id < $IvfTrainOld"),
-          store)
-      }
+    StoreFiles.ensure(store) {
+      StoreKind.IvfPq.build(s, dir, store, Some(s"vec_id < $IvfTrainOld"))
     }
-    store
   }
 
   /** Per-(process, corpus) three-generation IVF-PQ chain under a
@@ -1362,7 +1345,7 @@ object Similarity extends QueryPack {
                                          dir: String): String = {
     purgeDeadSessions()
     val root = graft.operators.StoreFiles.scratchDir("graft_ivfpqgen_", dir)
-    storeLocks.computeIfAbsent(root, _ => new Object).synchronized {
+    StoreFiles.locked(root) {
       // the chain's completion marker is the pointer NAMING gen-2 —
       // not merely a servable root: the pointer lands after every
       // generation, so a crash mid-chain leaves it at gen-0/gen-1 and
@@ -1371,10 +1354,8 @@ object Similarity extends QueryPack {
       // every landing is mode-overwrite with an atomic marker.
       if (graft.operators.StoreFiles.readCurrent(root)
           .map(_._1) != Some("gen-2")) {
-        new java.io.File(root, "gen-0").mkdirs()
-        IvfPqStore.save(
-          trainIvfPq(s, dir, trainWhere = s"vec_id < $IvfTrainOld"),
-          s"$root/gen-0")
+        StoreKind.IvfPq.build(s, dir, s"$root/gen-0",
+          Some(s"vec_id < $IvfTrainOld"))
         def flipOrThrow(gen: String): Unit =
           graft.operators.StoreFiles.flip(root, gen) match {
             case Left(e)  => throw new IllegalStateException(e)

@@ -3,19 +3,18 @@ package graft.operators
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 
-/** Shared plumbing for on-disk model/index stores (the persistent
-  * cluster stores in [[Dedup]]; `Similarity`'s IvfPqStore predates
-  * this helper and documents the same conventions inline):
+/** Shared plumbing for the on-disk model/index stores of every
+  * [[StoreKind]]:
   *
-  *  - `manifest.json` is the store's existence marker and is written
-  *    temp + ATOMIC_MOVE LAST, so a crash mid-build can never leave a
-  *    half-store that `exists()` accepts;
+  *  - the commit marker ([[Markers]]) is written temp + ATOMIC_MOVE
+  *    LAST, so a crash mid-build can never leave a half-store that
+  *    `committed()` accepts;
   *  - scratch stores are named per (process, corpus) so concurrent
   *    suites/processes cannot collide and a restarted process
   *    rebuilds rather than trusting another's leftovers;
-  *  - the ensure path is locked per store dir: the exists/build
-  *    check-then-act must not interleave with a concurrent load of a
-  *    half-written store.
+  *  - the ensure path is locked per store dir, one lock map for every
+  *    kind: the exists/build check-then-act must not interleave with a
+  *    concurrent load of a half-written store.
   */
 private[graft] object StoreFiles {
 
@@ -73,11 +72,18 @@ private[graft] object StoreFiles {
       Option(f.listFiles()).toSeq.flatten.map(treeBytes).sum
     else f.length()
 
-  def ensure(locks: java.util.concurrent.ConcurrentHashMap[String, Object],
-             store: String)(build: => Unit): String = {
-    locks.computeIfAbsent(store, _ => new Object).synchronized {
-      if (!exists(store)) build
-    }
+  // one monitor per store path, shared by every kind's ensure
+  private val locks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]
+
+  /** Run `body` holding `path`'s store lock: a check-then-act on a
+    * store must not interleave with a concurrent write of it. */
+  def locked[T](path: String)(body: => T): T =
+    locks.computeIfAbsent(path, _ => new Object).synchronized(body)
+
+  /** Build `store` unless it is committed, under its lock; the path. */
+  def ensure(store: String)(build: => Unit): String = {
+    locked(store) { if (marker(store).isEmpty) build }
     store
   }
 
@@ -93,12 +99,16 @@ private[graft] object StoreFiles {
 
   val CurrentName = "_CURRENT.json"
 
-  /** A dir is a committed store iff its marker landed (marker written
-    * ATOMIC_MOVE last, so existence = complete): manifest.json for the
-    * cluster/embed/phash kinds, model.json for ivfpq.
-    */
+  /** Commit markers, written ATOMIC_MOVE last so existence = complete:
+    * manifest.json for the banded kinds, model.json for ivfpq. */
+  val Markers = Seq("manifest.json", "model.json")
+
+  def marker(dir: String): Option[java.nio.file.Path] =
+    Markers.map(Paths.get(dir, _)).find(Files.exists(_))
+
+  /** A dir is a committed store iff its marker landed. */
   def committed(dir: java.nio.file.Path): Boolean =
-    Seq("manifest.json", "model.json").exists(m => Files.exists(dir.resolve(m)))
+    marker(dir.toString).nonEmpty
 
   // Generation names are validated printable (see flip), so the
   // writer needs only the two mandatory JSON escapes and the reader
@@ -454,6 +464,16 @@ private[graft] object StoreFiles {
     Files.write(bucketsSidecar(path),
       s"$n\n${keys.mkString(",")}\n${sortCols.mkString(",")}\n$ddl"
         .getBytes(StandardCharsets.UTF_8))
+  }
+
+  /** Write `df` in the serving layout `order` names: bucketed on the
+    * columns before the trailing id (a one-column order buckets on
+    * itself), the id sorted inside each bucket.
+    */
+  def writeOrdered(df: org.apache.spark.sql.DataFrame, path: String,
+                   order: Seq[String]): Unit = {
+    val keys = if (order.length > 1) order.dropRight(1) else order
+    writeBucketed(df, path, keys, order.drop(keys.length))
   }
 
   /** Read the relation at `path`: through its bucketed catalog table
@@ -881,8 +901,7 @@ private[graft] object StoreFiles {
         // half-gutted dir a later flip would happily serve (the
         // marker-last build protocol, inverted for teardown).
         val gone = victims.flatMap { f =>
-          val markerGone = Seq("manifest.json", "model.json")
-            .map(m => f.toPath.resolve(m).toFile)
+          val markerGone = Markers.map(m => f.toPath.resolve(m).toFile)
             .forall(m => !m.exists() || m.delete())
           if (markerGone) { rec(f); Some(f.getName) } else None
         }

@@ -2,7 +2,7 @@ package graft.run
 
 import org.apache.spark.sql.SparkSession
 import graft.Engine
-import graft.operators.{Dedup, Multimodal, Similarity, StoreFiles}
+import graft.operators.{StoreFiles, StoreKind}
 
 /** Delta-chain serve-cost probe: how much does READING a store
   * degrade as its `advance --delta` chain deepens? The write side is
@@ -13,15 +13,10 @@ import graft.operators.{Dedup, Multimodal, Similarity, StoreFiles}
   *
   * Per kind: build gen-0 from batch 0 of `depth` equal hash batches,
   * then `advance --delta` the rest, timing the kind's REAL serve
-  * read at checkpoint depths (1, 6, 12, `depth`):
-  *
-  *   - cluster/embed: `Dedup.storeAssignment` (the last-writer-wins
-  *     min-by-depth agg over the chain) + `Dedup.storeGrp` — the two
-  *     relations every stored-model consumer resolves;
-  *   - phash: `storeGrp` + the banded index union (`readRelChain
-  *     bands`) — the streaming probe's static side;
-  *   - ivfpq: `IvfPqStore.load` + a full `codes` chain count — the
-  *     serve path's ADC input.
+  * read at checkpoint depths (1, 6, 12, `depth`): a count of each
+  * relation the kind table lists as `served`, resolved the way
+  * readers resolve it (`StoreKind.readChain` — the assignment's
+  * last-writer-wins min-by-depth agg, grp, the plain chain unions).
   *
   * Each timing is min-of-2 on a warm session (the chain cost is
   * driver planning + k-way-union scan; caching would hide exactly
@@ -68,52 +63,36 @@ object ChainDepth {
     spark.conf.set(StoreCtl.ChainWarnKey, (depth + 1).toString)
     spark.conf.set(StoreCtl.ChainMaxKey, (depth + 1).toString)
 
-    val kinds = Seq(
-      ("cluster", "doc_id"),
-      ("embed", "vec_id"),
-      ("ivfpq", "vec_id"),
-      ("phash", "doc_id"))
-
-    def serveRead(kind: String, idCol: String, root: String)
-        : (Double, Long) = {
+    def serveRead(k: StoreKind, root: String): (Double, Long) = {
       val served = StoreFiles.serve(root)
         .fold(e => fail(s"serve $root: $e"), identity)
-      kind match {
-        case "cluster" | "embed" => timeMin2 {
-          Dedup.storeAssignment(spark, served, idCol).count() +
-            Dedup.storeGrp(spark, served, idCol).count()
-        }
-        case "phash" => timeMin2 {
-          Dedup.storeGrp(spark, served, idCol).count() +
-            StoreFiles.readRelChain(spark, served, "bands").count()
-        }
-        case "ivfpq" => timeMin2 {
-          Similarity.IvfPqStore.load(spark, served).codes.count()
-        }
+      timeMin2 {
+        k.served.map(StoreKind.readChain(spark, served, _, k.id).count()).sum
       }
     }
 
-    val out = kinds.map { case (kind, idCol) =>
+    val out = StoreKind.all.map { sk =>
+      val (kind, idCol) = (sk.name, sk.id)
       val root = new java.io.File(base, kind)
       root.mkdirs()
       runOrDie(Seq("build", kind, dir, s"$root/gen-0",
         s"$idCol % $depth = 0"))
       runOrDie(Seq("flip", root.toString, "gen-0"))
       val readAt = scala.collection.mutable.Map[Int, (Double, Long)]()
-      readAt(1) = serveRead(kind, idCol, root.toString)
+      readAt(1) = serveRead(sk, root.toString)
       (1 until depth).foreach { k =>
         runOrDie(Seq("advance", "--delta", kind, dir, root.toString,
           s"$idCol % $depth = $k"))
         val d = k + 1
         if (marks.contains(d))
-          readAt(d) = serveRead(kind, idCol, root.toString)
+          readAt(d) = serveRead(sk, root.toString)
       }
       val tCompact = {
         val t0 = System.nanoTime()
         runOrDie(Seq("compact", kind, root.toString))
         (System.nanoTime() - t0) / 1e9
       }
-      val sealedRead = serveRead(kind, idCol, root.toString)
+      val sealedRead = serveRead(sk, root.toString)
       val reads = marks.map(d => s""""$d":${
         "%.3f".format(readAt(d)._1)}""").mkString(",")
       s""""$kind":{"serve_s_by_depth":{$reads},""" +

@@ -38,12 +38,8 @@ object FoldAmp {
     }
     def runOrDie(cmd: Seq[String]): Unit =
       StoreCtl.run(spark, cmd).left.foreach(e => fail(s"$cmd: $e"))
-    val kinds = Seq(
-      ("cluster", "documents", "doc_id"),
-      ("embed", "embeddings", "vec_id"),
-      ("ivfpq", "embeddings", "vec_id"),
-      ("phash", "documents", "doc_id"))
-    val out = kinds.map { case (kind, tbl, idCol) =>
+    val out = graft.operators.StoreKind.all.map { k =>
+      val (kind, tbl, idCol) = (k.name, k.table, k.id)
       val root = new java.io.File(base, kind)
       root.mkdirs()
       def batchRows(third: Int): Long =

@@ -2,7 +2,7 @@ package graft.run
 
 import org.apache.spark.sql.SparkSession
 import graft.Engine
-import graft.operators.{Dedup, Multimodal, Similarity, StoreFiles}
+import graft.operators.{Similarity, StoreFiles, StoreKind}
 
 /** Operational CLI for the persistent model/index stores — the
   * named-path face of what the driver keys exercise through
@@ -160,7 +160,7 @@ object StoreCtl {
       case Seq("fold", "--delta", kind, corpus, store, out, pred) =>
         fold(spark, kind, corpus, store, out, pred, delta = true)
       case Seq("stats", store) =>
-        marker(store) match {
+        StoreFiles.marker(store) match {
           case None =>
             Left(s"no manifest at $store (not a committed store)")
           case Some(p) =>
@@ -292,45 +292,24 @@ object StoreCtl {
           "compact <kind> <root> | chain <root> | " +
           "doctor [--fix] <root> | " +
           "recall [--sample n] <root> <corpus>\n" +
-          "  kind = cluster | embed | ivfpq | phash (--delta: all " +
-          "kinds; --delta --compact-at n compacts inline at depth n)")
+          s"  kind = ${StoreKind.all.map(_.name).mkString(" | ")} " +
+          "(--delta: all kinds; --delta --compact-at n compacts inline " +
+          "at depth n)")
     }
 
-  /** Each kind's relations with their serve-key sort order: the band
-    * index sorts by (band, key) so a probe equi-join reads clustered
-    * runs, row relations by id, the PQ code table by (cell, vec_id)
-    * so cell-pruned serving scans are contiguous.
-    */
-  private val compactLayout: Map[String, Seq[(String, Seq[String])]] = Map(
-    "cluster" -> Seq(
-      "assignment" -> Seq("doc_id"),
-      "sigs" -> Seq("doc_id"),
-      "bands" -> Seq("band", "bk", "doc_id"),
-      "grp" -> Seq("rep", "doc_id")),
-    "embed" -> Seq(
-      "assignment" -> Seq("vec_id"),
-      "vecs" -> Seq("vec_id"),
-      "bands" -> Seq("band", "bkt", "vec_id"),
-      "grp" -> Seq("rep", "vec_id")),
-    "phash" -> Seq(
-      "sigs" -> Seq("doc_id"),
-      "bands" -> Seq("band", "bv", "doc_id"),
-      "grp" -> Seq("rep", "doc_id")),
-    "ivfpq" -> Seq(
-      "codes" -> Seq("cell", "vec_id")))
-
   /** Relations a generation may legitimately lack: `grp` appears only
-    * in rep-collapsed-layout cluster generations (r17) — compacting an
-    * older generation simply carries no membership (its bands are
+    * in rep-collapsed-layout generations (r17) — compacting an older
+    * generation simply carries no membership (its bands are
     * member-level, so readers' identity fallback still holds).
     */
   private val optionalRels = Set("grp")
 
   private def compact(spark: SparkSession, kind: String,
                       root: String): Either[String, String] =
-    compactLayout.get(kind) match {
+    StoreKind.named(kind) match {
       case None => Left(s"unknown store kind: $kind")
-      case Some(fullLayout) =>
+      case Some(k) =>
+        val fullLayout = k.rels
         StoreFiles.serve(root).flatMap { cur =>
           def present(rel: String): Boolean =
             java.nio.file.Files.isDirectory(
@@ -346,7 +325,7 @@ object StoreCtl {
           // leaving name-reserving litter — refuse while the target
           // dir is still untouched if the generation holds relations
           // this kind's layout does not know
-          val knownRels = compactLayout.values.flatten.map(_._1).toSet
+          val knownRels = StoreKind.all.flatMap(_.rels).map(_._1).toSet
           val foreign = knownRels.filterNot(fullLayout.map(_._1).toSet)
             .filter(present)
           if (foreign.nonEmpty)
@@ -371,24 +350,13 @@ object StoreCtl {
               return Left(s"cannot create $outPath: $e")
           }
           layout.foreach { case (rel, keys) =>
-            // chain-aware read: a DELTA chain's relations union across
-            // the _PARENT links (identity for self-contained
-            // generations) — compact is exactly the verb that seals a
-            // chain back into one generation, so the output carries no
-            // _PARENT by construction. grp goes through storeGrp so a
-            // chain with a pre-layout base still contributes that
-            // base's identity membership.
-            val frame =
-              if (rel == "grp")
-                Dedup.storeGrp(spark, cur, keys(1)).select(keys(1), "rep")
-              else if (rel == "assignment")
-                // last-writer-wins over the chain, never a plain
-                // union: a delta generation's assignment holds only
-                // changed rows, and an old row it relabeled must not
-                // resurface from the parent in the sealed output
-                Dedup.storeAssignment(spark, cur, keys.head)
-                  .select(keys.head, "cluster_id")
-              else StoreFiles.readRelChain(spark, cur, rel)
+            // chain-aware read, the way readers resolve it (a delta
+            // assignment last-writer-wins — a relabeled old row must
+            // not resurface from the parent; grp with a pre-layout
+            // base's identity membership) — compact is exactly the verb
+            // that seals a chain back into one generation, so the
+            // output carries no _PARENT by construction
+            val frame = StoreKind.readChain(spark, cur, rel, k.id)
             // the sealed layout is the SERVING layout: every relation
             // except codes lands BUCKETED on its probe key with the
             // trailing id as the in-bucket sort (StoreFiles
@@ -402,22 +370,20 @@ object StoreCtl {
             // the corpus scan at KmK tasks — the serve side is already
             // exchange-free there (the query side broadcasts), and
             // cell-pruned locality comes from the sort's row groups.
+            // Its file count scales with the codes, like every other
+            // corpus-scale frame (Dedup.repPartitions).
             if (rel == "codes")
               frame
                 .sort(keys.map(org.apache.spark.sql.functions.col): _*)
-                .coalesce(4)
+                .coalesce(graft.operators.Dedup.repPartitions(spark,
+                  frame.count()))
                 .write.mode("error").parquet(s"$outPath/$rel")
-            else {
-              val bucketKeys =
-                if (keys.length > 1) keys.dropRight(1) else keys
-              StoreFiles.writeBucketed(frame, s"$outPath/$rel",
-                bucketKeys, keys.drop(bucketKeys.length))
-            }
+            else StoreFiles.writeOrdered(frame, s"$outPath/$rel", keys)
           }
           // marker LAST, verbatim from the source generation (same
           // counts — a compact adds no rows), temp + ATOMIC_MOVE:
           // crash mid-compact leaves marker-less litter gc ignores
-          marker(cur) match {
+          StoreFiles.marker(cur) match {
             case None => Left(s"$cur lost its marker mid-compact")
             case Some(m) =>
               val json = new String(java.nio.file.Files.readAllBytes(m),
@@ -785,17 +751,8 @@ object StoreCtl {
       }
   }
 
-  /** The store's commit marker: manifest.json for the cluster /
-    * embed / phash kinds, model.json for ivfpq (both land temp +
-    * ATOMIC_MOVE last, so existence = complete).
-    */
-  private def marker(store: String): Option[java.nio.file.Path] =
-    Seq("manifest.json", "model.json")
-      .map(java.nio.file.Paths.get(store, _))
-      .find(java.nio.file.Files.exists(_))
-
   private def refuseCommitted(store: String): Option[String] =
-    marker(store).map(_ =>
+    StoreFiles.marker(store).map(_ =>
       s"$store already holds a committed store — generations are " +
         "immutable; fold into a new path instead")
 
@@ -803,54 +760,25 @@ object StoreCtl {
                     store: String,
                     pred: Option[String]): Either[String, String] =
     refuseCommitted(store).map(Left(_)).getOrElse {
-      val all = pred.getOrElse("true")
-      kind match {
-        case "cluster" =>
-          Dedup.clusterStoreBuild(spark, corpus, store, all)
-          Right(s"[build] cluster store at $store")
-        case "embed" =>
-          Dedup.embedStoreBuild(spark, corpus, store,
-            pred.getOrElse("vec_id >= 0"))
-          Right(s"[build] embed store at $store")
-        case "ivfpq" =>
-          new java.io.File(store).mkdirs()
-          Similarity.IvfPqStore.save(
-            Similarity.trainIvfPq(spark, corpus,
-              trainWhere = pred.getOrElse("")), store)
-          Right(s"[build] ivfpq store at $store")
-        case "phash" =>
-          Multimodal.phashStoreBuild(spark, corpus, store, all)
-          Right(s"[build] phash store at $store")
-        case other => Left(s"unknown store kind: $other")
+      StoreKind.named(kind).toRight(s"unknown store kind: $kind").map { k =>
+        k.build(spark, corpus, store, pred)
+        s"[build] $kind store at $store"
       }
     }
 
   private def fold(spark: SparkSession, kind: String, corpus: String,
                    store: String, out: String, pred: String,
                    delta: Boolean = false): Either[String, String] = {
-    if (marker(store).isEmpty)
+    if (StoreFiles.marker(store).isEmpty)
       return Left(s"$store holds no committed $kind store to fold into")
     refuseCommitted(out) match {
       case Some(m) => return Left(m)
       case None    => ()
     }
     val face = if (delta) "fold --delta" else "fold"
-    kind match {
-      case "cluster" =>
-        Dedup.clusterStoreFoldInto(spark, corpus, store, pred, out, delta)
-        Right(s"[$face] cluster generation at $out")
-      case "embed" =>
-        Dedup.embedStoreFoldInto(spark, corpus, store, pred, out, delta)
-        Right(s"[$face] embed generation at $out")
-      case "ivfpq" =>
-        Similarity.ivfPqStoreFoldInto(spark, corpus, store, out, pred,
-          delta)
-        Right(s"[$face] ivfpq generation at $out")
-      case "phash" =>
-        Multimodal.phashStoreFoldInto(spark, corpus, store, out, pred,
-          delta)
-        Right(s"[$face] phash generation at $out")
-      case other => Left(s"unknown store kind: $other")
+    StoreKind.named(kind).toRight(s"unknown store kind: $kind").map { k =>
+      k.foldInto(spark, corpus, store, out, pred, delta)
+      s"[$face] $kind generation at $out"
     }
   }
 

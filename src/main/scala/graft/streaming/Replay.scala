@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.Engine._
 import graft.QueryPack
-import graft.operators.Dedup
+import graft.operators.{BandedStore, Dedup, StoreKind}
 
 /** Oracle gate for the Structured Streaming surface: replay the
   * `documents` fixture through [[Streams.nearDupStream]] as a real
@@ -223,7 +223,7 @@ object StreamReplay extends QueryPack {
   // -- st_store_dedup_replay: ingest vectors deduped against the SERVED store -
   // The streaming serve path of the persistent embed-cluster store:
   // the store is built ONCE from the old vector half (the same
-  // ensureEmbedStore instance dd_embed_cluster_store gates), the
+  // scratch store dd_embed_cluster_store gates), the
   // stream feeds the NEW half as ticked vectors, and the sink must
   // equal the batch restatement — every (new, stored) pair that
   // shares an RH-LSH band bucket AND cosine-verifies at >= 0.4,
@@ -246,7 +246,7 @@ object StreamReplay extends QueryPack {
                                    vecs: Seq[StreamVec]): DataFrame = {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val store = Dedup.ensureEmbedStore(s, dir)
+    val store = BandedStore.ensure(StoreKind.Embed, s, dir)
     val in = MemoryStream[StreamVec]
     val sink = s"st_store_dedup_replay_sink_${sinkSeq.incrementAndGet()}"
     withReplayPartitions(s) {
@@ -296,7 +296,7 @@ object StreamReplay extends QueryPack {
   // -- st_store_neardup_replay: ingest TEXT deduped against the SERVED store --
   // The MinHash twin of st_store_dedup_replay: the persistent cluster
   // store is built ONCE from the old document half (the same
-  // ensureClusterStore instance dd_cluster_store gates), the stream
+  // scratch store dd_cluster_store gates), the stream
   // feeds the NEW half as ticked docs, and the sink must equal the
   // INDEPENDENT all-pairs old-new Jaccard spec (Dedup's oracle
   // discipline for this family: the banding is never restated, so the
@@ -318,7 +318,7 @@ object StreamReplay extends QueryPack {
                                      docs: Seq[StreamDoc]): DataFrame = {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val store = Dedup.ensureClusterStore(s, dir)
+    val store = BandedStore.ensure(StoreKind.Cluster, s, dir)
     val in = MemoryStream[StreamDoc]
     val sink = s"st_store_neardup_replay_sink_${sinkSeq.incrementAndGet()}"
     withReplayPartitions(s) {
@@ -349,8 +349,8 @@ object StreamReplay extends QueryPack {
 
   // -- st_decontaminate_replay: ingest docs screened against the SERVED eval --
   // The streaming face of dd_decontaminate: the eval slice's signature
-  // store is built ONCE (Dedup.ensureEvalClusterStore — at deployment
-  // scale, once per eval release), the stream feeds every CORPUS doc
+  // store is built ONCE (BandedStore.ensure over evalPred — at
+  // deployment scale, once per eval release), the stream feeds every CORPUS doc
   // as ticked ingest, and each arrival that Jaccard-matches a stored
   // eval doc is flagged ON ARRIVAL as (doc_id, owner_id = the leaked
   // eval doc) — contamination never waits for the nightly batch pass.
@@ -375,7 +375,7 @@ object StreamReplay extends QueryPack {
                                       docs: Seq[StreamDoc]): DataFrame = {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val store = Dedup.ensureEvalClusterStore(s, dir)
+    val store = BandedStore.ensure(StoreKind.Cluster, s, dir, Dedup.evalPred)
     val in = MemoryStream[StreamDoc]
     val sink = s"st_decontaminate_replay_sink_${sinkSeq.incrementAndGet()}"
     withReplayPartitions(s) {
@@ -408,7 +408,7 @@ object StreamReplay extends QueryPack {
   // -- st_decontaminate_semantic_replay: embedding-space eval screening -------
   // The SEMANTIC twin of st_decontaminate_replay (lexical leakage
   // escapes paraphrase; embedding similarity does not): the eval
-  // slice's embed store is built once (Dedup.ensureEvalEmbedStore),
+  // slice's embed store is built once (BandedStore.ensure, evalVecPred),
   // every corpus vector streams through the unchanged storeDedupStream
   // probe, and arrivals that cosine-match (>= 0.4) a stored eval
   // vector are flagged online. Gated against the banded corpus-vs-eval
@@ -428,7 +428,7 @@ object StreamReplay extends QueryPack {
       s: SparkSession, dir: String, vecs: Seq[StreamVec]): DataFrame = {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val store = Dedup.ensureEvalEmbedStore(s, dir)
+    val store = BandedStore.ensure(StoreKind.Embed, s, dir, Dedup.evalVecPred)
     val in = MemoryStream[StreamVec]
     val sink =
       s"st_decontaminate_semantic_replay_sink_${sinkSeq.incrementAndGet()}"
@@ -466,7 +466,7 @@ object StreamReplay extends QueryPack {
                                    docs: Seq[StreamDoc]): DataFrame = {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val store = graft.operators.Multimodal.ensurePhashStore(s, dir)
+    val store = BandedStore.ensure(StoreKind.Phash, s, dir)
     val in = MemoryStream[StreamDoc]
     val sink = s"st_store_phash_replay_sink_${sinkSeq.incrementAndGet()}"
     withReplayPartitions(s) {

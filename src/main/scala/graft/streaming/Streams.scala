@@ -440,51 +440,6 @@ object Streams {
       }
   }
 
-  /** Online semantic dedup at INGEST against a SERVED persistent
-    * embed-cluster store ([[graft.operators.Dedup]]'s
-    * embedStoreBuild layout): flag each incoming vector that
-    * cosine-matches a stored one — the streaming face of
-    * dd_embed_cluster_fold_stored's probe, sharing its banding and
-    * verify arithmetic term-for-term.
-    *
-    * Shape: two STREAM-STATIC equi-joins with the per-pair dedup in
-    * BETWEEN — the vector's 12 RH-LSH band keys probe the stored band
-    * index on (band, bkt); a watermark-TTL'd dropDuplicates collapses
-    * the up-to-12 per-band hits of a candidate pair to ONE
-    * (vec_id, owner_id) row (the batch path's DISTINCT-before-verify,
-    * streamed); only then do survivors join the stored
-    * (embedding, n2) relation for the exact graft_cos verify — so the
-    * full-width relation is touched once per distinct candidate pair,
-    * and the cosine runs once per pair, not once per band hit. The
-    * pipeline is STATELESS apart from the dedup (state = pairs inside
-    * the watermark delay; a pair's band copies all carry the same
-    * event time, so keying on it keeps the dedup exact under any
-    * disorder bounded by the delay, and append-mode emission is
-    * immediate — dedup state never defers output). Input columns:
-    * vec_id, ts (epoch-nanos bigint), embedding.
-    *
-    * At 100 TB this is the serve path: the store is immutable and
-    * never re-derived, bands/ is an equi-join a deployment
-    * co-locates by bucketing on (band, bkt), vecs/ — the only
-    * full-width relation — is touched solely by band-verified
-    * candidates, and the corpus itself is never read. Zero-norm
-    * vectors are off the band side (the ZeroNormGuardSpec argument:
-    * constant buckets + NaN cosines).
-    *
-    * POINTER-ADVANCE CONTRACT (all served-store streams — this one,
-    * [[storeNearDupStream]], [[storePhashStream]], [[annServeStream]]):
-    * `store` is a resolved GENERATION path and its delta chain is
-    * read ONCE, here at stream construction, over immutable
-    * generations — a `StoreCtl advance` landing mid-stream changes
-    * NOTHING this stream emits (its frozen chain stays readable:
-    * generations never mutate and gc's grace window keeps a displaced
-    * chain alive for in-flight readers). Serving the advanced store
-    * requires a STREAM RESTART against the re-resolved pointer. This
-    * is deliberate: a static side that mutated between micro-batches
-    * would emit pair sets no single store version justifies —
-    * restart-to-advance is the blue/green discipline the pointer file
-    * exists for (PointerAdvanceContractSpec pins both halves).
-    */
   /** Materialize a stream-static join's STATIC side once per stream
     * construction (r22): Spark re-executes the static plan on EVERY
     * micro-batch, so an uncached store relation pays its full scan —
@@ -495,160 +450,108 @@ object Streams {
     * PlanSpec re-pins the shape through the cache), and spills rather
     * than OOMs (MEMORY_AND_DISK). Never stale by construction: the
     * served generation chain is immutable for the stream's lifetime
-    * (the pointer-advance contract above). The replay harness's
+    * (the pointer-advance contract below). The replay harness's
     * clearCache between reps drops it, so every bench rep still
     * computes from parquet.
     */
   private def staticSide(df: DataFrame): DataFrame = df.cache()
 
+  /** Online near-dup at INGEST against a SERVED banded store of kind
+    * `k` (the [[graft.operators.StoreKind]] table): flag each incoming
+    * row that verifies against a stored one — the streaming face of
+    * the kind's fold probe, sharing its banding and verify arithmetic
+    * term-for-term through the table.
+    *
+    * Shape: two STREAM-STATIC equi-joins with the per-pair dedup in
+    * BETWEEN — the row's band keys probe the stored `bands/` index on
+    * (band, key); a watermark-TTL'd dropDuplicates collapses the
+    * per-band hits of a candidate pair to ONE (id, owner_id) row (the
+    * batch path's DISTINCT-before-verify, streamed); only then do
+    * survivors join the stored payload relation for the exact verify —
+    * the full-width relation is touched, and the verify runs, once per
+    * distinct candidate pair, not once per band hit. Stateless apart
+    * from the dedup (state = candidate pairs inside the watermark
+    * delay, carrying the incoming row's own payload; a pair's band
+    * copies all carry the same event time, so keying on it keeps the
+    * dedup exact under any disorder bounded by the delay, and
+    * append-mode emission is immediate). The verified REP pair then
+    * fans out to member pairs by one equi-join through the stored
+    * membership (identity for pre-layout generations) — true output,
+    * linear in real matches. Unbandable rows (empty shingle sets,
+    * zero vectors) never reach the band side.
+    *
+    * At 100 TB this is the serve path: the store is immutable and
+    * never re-derived, `bands/` and the payload relation are bucketed
+    * on their probe keys (exchange-free store sides, PlanSpec), and
+    * per-row work is its band keys plus one verify per distinct
+    * candidate — independent of corpus size.
+    *
+    * POINTER-ADVANCE CONTRACT (all served-store streams — these and
+    * [[annServeStream]]): `store` is a resolved GENERATION path and
+    * its delta chain is read ONCE, here at stream construction, over
+    * immutable generations — a `StoreCtl advance` landing mid-stream
+    * changes NOTHING this stream emits (its frozen chain stays
+    * readable: generations never mutate and gc's grace window keeps a
+    * displaced chain alive for in-flight readers). Serving the
+    * advanced store requires a STREAM RESTART against the re-resolved
+    * pointer. This is deliberate: a static side that mutated between
+    * micro-batches would emit pair sets no single store version
+    * justifies — restart-to-advance is the blue/green discipline the
+    * pointer file exists for (PointerAdvanceContractSpec pins both
+    * halves).
+    */
+  private[graft] def storeStream(k: graft.operators.Banded, in: DataFrame,
+                                 store: String, delay: String,
+                                 metrics: Option[DisorderMetrics])
+      : DataFrame = {
+    val s = in.sparkSession
+    graft.functions.VectorFunctions.ensureRegistered(s)
+    val oldBands = staticSide(graft.operators.StoreFiles
+      .readRelChain(s, store, "bands")
+      .toDF("owner_id", "band", k.key))
+    val oldPayload = staticSide(graft.operators.StoreFiles
+      .readRelChain(s, store, k.payload)
+      .toDF("owner_id" +: k.payloadCols.map("old_" + _): _*))
+    val grp = staticSide(
+      graft.operators.Dedup.storeGrp(s, store, "member_id"))
+    k.probe(observeArrivals(in, k.id, metrics))
+      .join(oldBands, Seq("band", k.key))
+      .transform(eventTimed(_, delay))
+      .select(k.id, "owner_id" +: "event_time" +: k.payloadCols: _*)
+      .dropDuplicates(k.id, "owner_id", "event_time")
+      .join(oldPayload, Seq("owner_id"))
+      .transform(k.probeVerify)
+      .select(col(k.id), col("owner_id").as("rep"))
+      .join(grp, Seq("rep"))
+      .select(col(k.id), col("member_id").as("owner_id"))
+  }
+
+  /** Semantic dedup against an embed store (cosine >= 0.4). Input
+    * columns: vec_id, ts (epoch-nanos bigint), embedding. */
   def storeDedupStream(vecs: DataFrame, store: String,
                        delay: String = "10 minutes",
                        metrics: Option[DisorderMetrics] = None)
-      : DataFrame = {
-    val s = vecs.sparkSession
-    graft.functions.VectorFunctions.ensureRegistered(s)
-    val oldBands = staticSide(graft.operators.StoreFiles
-      .readRelChain(s, store, "bands")
-      .toDF("owner_id", "band", "bkt"))
-    val oldVecs = staticSide(graft.operators.StoreFiles
-      .readRelChain(s, store, "vecs")
-      .toDF("owner_id", "old_embedding", "old_n2"))
-    // rep-collapsed store membership (identity for pre-layout
-    // generations): band/verify once per stored GROUP, one equi-join
-    // fans the verified rep pair out to member pairs (Dedup.storeGrp)
-    val grp = staticSide(
-      graft.operators.Dedup.storeGrp(s, store, "member_id"))
-    observeArrivals(vecs, "vec_id", metrics)
-      .selectExpr("vec_id", "ts", "embedding",
-        "graft_dot(embedding, embedding) AS n2",
-        "graft_rh_buckets(embedding) AS bks")
-      .where("n2 > 0")
-      .select(col("vec_id"), col("ts"), col("embedding"), col("n2"),
-        posexplode(col("bks")).as(Seq("band", "bkt")))
-      .join(oldBands, Seq("band", "bkt"))
-      .transform(eventTimed(_, delay))
-      .select("vec_id", "owner_id", "event_time", "embedding", "n2")
-      .dropDuplicates("vec_id", "owner_id", "event_time")
-      .join(oldVecs, Seq("owner_id"))
-      .withColumn("cs",
-        expr("graft_cos(embedding, old_embedding, n2, old_n2)"))
-      .where("cs > 0.3999994 AND round(cs, 6) >= 0.4")
-      .select(col("vec_id"), col("owner_id").as("rep"))
-      .join(grp, Seq("rep"))
-      .select(col("vec_id"), col("member_id").as("owner_id"))
-  }
+      : DataFrame =
+    storeStream(graft.operators.StoreKind.Embed, vecs, store, delay, metrics)
 
-  /** Online TEXT near-dup at ingest against a SERVED persistent
-    * cluster store ([[graft.operators.Dedup]]'s clusterStoreBuild
-    * layout) — the MinHash twin of [[storeDedupStream]]: flag each
-    * incoming document that Jaccard-matches a stored one, the
-    * streaming face of dd_cluster_fold_stored's probe, sharing its
-    * banding and verify arithmetic term-for-term.
-    *
-    * Shape: two STREAM-STATIC equi-joins with the per-pair dedup in
-    * between — the document's 8 MinHash band keys probe the stored
-    * `bands/` index on (band, bk); a watermark-TTL'd dropDuplicates
-    * collapses the up-to-8 per-band hits of a candidate pair to ONE
-    * (doc_id, owner_id) row; only then do survivors join the stored
-    * `sigs/` relation for the exact graft_isect Jaccard verify — the
-    * sorted-shingle arrays are touched once per distinct candidate
-    * pair and the two-pointer merge runs once per pair, not once per
-    * band hit. Stateless apart from the dedup (state = candidate
-    * pairs inside the watermark delay, carrying the incoming doc's
-    * OWN hs so the verify needs no second stream-side pass; a pair's
-    * band copies all carry the same event time, so keying on it keeps
-    * the dedup exact under any disorder bounded by the delay, and
-    * append-mode emission is immediate). Input columns: doc_id, ts
-    * (epoch-nanos bigint), text.
-    *
-    * At 100 TB this is the text serve path: the store is immutable
-    * and never re-derived, `bands/` is an equi-join a deployment
-    * co-locates by bucketing on (band, bk), `sigs/` by owner_id, and
-    * per-document work is 8 band keys + one verify per distinct
-    * candidate — independent of corpus size.
-    */
+  /** Text near-dup against a cluster store (Jaccard >= 0.6). Input
+    * columns: doc_id, ts (epoch-nanos bigint), text. */
   def storeNearDupStream(docs: DataFrame, store: String,
                          delay: String = "10 minutes",
                          metrics: Option[DisorderMetrics] = None)
-      : DataFrame = {
-    val s = docs.sparkSession
-    graft.functions.VectorFunctions.ensureRegistered(s)
-    // static sides cached once per stream — see staticSide
-    val oldBands = staticSide(graft.operators.StoreFiles
-      .readRelChain(s, store, "bands")
-      .toDF("owner_id", "band", "bk"))
-    val oldSigs = staticSide(graft.operators.StoreFiles
-      .readRelChain(s, store, "sigs")
-      .toDF("owner_id", "old_hs"))
-    // the rep-collapsed store's membership (identity for pre-layout
-    // generations): band/verify work runs once per stored GROUP, then
-    // one equi-join fans the verified rep pair out to member pairs —
-    // true output, linear in real matches (Dedup.storeGrp)
-    val grp = staticSide(
-      graft.operators.Dedup.storeGrp(s, store, "member_id"))
-    graft.operators.Dedup.jacStoreProbeRows(
-        observeArrivals(docs, "doc_id", metrics))
-      .join(oldBands, Seq("band", "bk"))
-      .transform(eventTimed(_, delay))
-      .select("doc_id", "owner_id", "event_time", "hs")
-      .dropDuplicates("doc_id", "owner_id", "event_time")
-      .join(oldSigs, Seq("owner_id"))
-      .where(graft.operators.Dedup.jacVerifySpark("hs", "old_hs"))
-      .select(col("doc_id"), col("owner_id").as("rep"))
-      .join(grp, Seq("rep"))
-      .select(col("doc_id"), col("member_id").as("owner_id"))
-  }
+      : DataFrame =
+    storeStream(graft.operators.StoreKind.Cluster, docs, store, delay,
+      metrics)
 
-  /** Online MEDIA near-dup at ingest against a SERVED persistent
-    * phash store ([[graft.operators.Multimodal]]'s ensurePhashStore
-    * layout) — the perceptual-hash member of the served-store family:
-    * flag each incoming media item whose signature sits within
-    * Hamming 3 of a stored one, so near-identical media never lands
-    * twice. Same two-joins-with-dedup-between shape as
-    * [[storeDedupStream]]/[[storeNearDupStream]]: the item's 4
-    * pigeonhole band values probe the stored `bands/` index (the
-    * payload is consumed map-side by the signature probes and never
-    * survives the first projection — payloads never shuffle), a
-    * watermark-TTL'd dropDuplicates collapses the up-to-4 per-band
-    * hits of a pair to one row, and survivors verify by ONE
-    * bit_count(xor) against stored `sigs/`. State per candidate pair
-    * is a single BIGINT signature. Recall is a THEOREM here (<= 3
-    * differing bits leave >= 1 of 4 16-bit bands identical), so the
-    * stream equals the all-pairs spec exactly. Input columns: doc_id,
-    * ts (epoch-nanos bigint), text (payload).
-    */
+  /** Media near-dup against a phash store (Hamming <= 3; the payload
+    * never survives the signature projection). Input columns: doc_id,
+    * ts (epoch-nanos bigint), text (payload). */
   def storePhashStream(media: DataFrame, store: String,
                        delay: String = "10 minutes",
                        metrics: Option[DisorderMetrics] = None)
-      : DataFrame = {
-    val s = media.sparkSession
-    // chain-aware (StoreCtl --delta lands increment-only phash
-    // generations): the probe serves the union across the pointed
-    // generation's _PARENT chain — identity for self-contained gens.
-    // Static sides cached once per stream — see staticSide.
-    val oldBands = staticSide(graft.operators.StoreFiles
-      .readRelChain(s, store, "bands")
-      .toDF("owner_id", "band", "bv"))
-    val oldSigs = staticSide(graft.operators.StoreFiles
-      .readRelChain(s, store, "sigs")
-      .toDF("owner_id", "old_phash"))
-    // rep-collapsed store membership (identity for pre-layout
-    // generations): band/verify once per stored GROUP, one equi-join
-    // fans the verified rep pair out to member pairs (Dedup.storeGrp)
-    val grp = staticSide(
-      graft.operators.Dedup.storeGrp(s, store, "member_id"))
-    graft.operators.Multimodal.phashProbeRows(
-        observeArrivals(media, "doc_id", metrics))
-      .join(oldBands, Seq("band", "bv"))
-      .transform(eventTimed(_, delay))
-      .select("doc_id", "owner_id", "event_time", "phash")
-      .dropDuplicates("doc_id", "owner_id", "event_time")
-      .join(oldSigs, Seq("owner_id"))
-      .where("bit_count(phash ^ old_phash) <= 3")
-      .select(col("doc_id"), col("owner_id").as("rep"))
-      .join(grp, Seq("rep"))
-      .select(col("doc_id"), col("member_id").as("owner_id"))
-  }
+      : DataFrame =
+    storeStream(graft.operators.StoreKind.Phash, media, store, delay,
+      metrics)
 
   /** Online ANN retrieval against the DISK-persisted IVF-PQ index —
     * the streaming twin of sim_ivfpq_stored: each incoming query

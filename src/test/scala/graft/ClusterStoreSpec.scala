@@ -2,9 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
+import graft.operators.{BandedStore, StoreFiles, StoreKind}
 
-/** The persistent cluster store (Dedup.clusterStoreBuild/clusterStoreFold):
+/** The persistent cluster store (BandedStore.build/fold, cluster kind):
   * the fold's contract is that it folds a new batch into the STORED
   * clustering reading only the store (assignment + sigs + band index)
   * and the NEW docs' text, and that the result is bit-identical to
@@ -30,7 +30,7 @@ class ClusterStoreSpec extends AnyFunSuite {
        "— the fold provably never re-reads old documents' text") {
     val store = java.nio.file.Files
       .createTempDirectory("graft_cstore_spec").toString
-    Dedup.clusterStoreBuild(spark, dir, store)
+    BandedStore.build(StoreKind.Cluster, spark, dir, store)
     // doctor: every OLD doc's text becomes per-doc garbage (unique, so
     // an accidental re-read cannot luck into the original clustering);
     // new docs keep their real text — the fold legitimately needs it
@@ -42,7 +42,8 @@ class ClusterStoreSpec extends AnyFunSuite {
           concat(lit("DESTROYED AFTER BUILD "), col("doc_id")))
           .otherwise(col("text")))
       .write.mode("overwrite").parquet(s"$doctored/documents.parquet")
-    val folded = clusters(Dedup.clusterStoreFold(spark, doctored, store))
+    val folded = clusters(
+      BandedStore.fold(StoreKind.Cluster, spark, doctored, store))
     val batch = clusters(SparkEntry.queries("dd_cluster")(spark, dir))
     assert(folded == batch,
       "fold over the doctored corpus diverged from batch re-clustering " +
@@ -69,13 +70,13 @@ class ClusterStoreSpec extends AnyFunSuite {
     val m2 = "doc_id % 3 = 2"
     val g1 = java.nio.file.Files
       .createTempDirectory("graft_cstore_g1").toString
-    Dedup.clusterStoreBuild(spark, dir, g1, m0)
+    BandedStore.build(StoreKind.Cluster, spark, dir, g1, m0)
     val g2 = java.nio.file.Files
       .createTempDirectory("graft_cstore_g2").toString
-    Dedup.clusterStoreFoldInto(spark, doctored(m0), g1, m1, g2)
+    BandedStore.foldInto(StoreKind.Cluster, spark, doctored(m0), g1, m1, g2)
     val g3 = java.nio.file.Files
       .createTempDirectory("graft_cstore_g3").toString
-    Dedup.clusterStoreFoldInto(spark, doctored(m0, m1), g2, m2, g3)
+    BandedStore.foldInto(StoreKind.Cluster, spark, doctored(m0, m1), g2, m2, g3)
     val got = clusters(
       spark.read.parquet(s"$g3/assignment").orderBy("doc_id"))
     val batch = clusters(SparkEntry.queries("dd_cluster")(spark, dir))
@@ -89,11 +90,11 @@ class ClusterStoreSpec extends AnyFunSuite {
        "manifest.json is the exists() marker and lands last") {
     val store = java.nio.file.Files
       .createTempDirectory("graft_cstore_half").toString
-    Dedup.clusterStoreBuild(spark, dir, store)
-    assert(Dedup.ClusterStore.exists(store))
+    BandedStore.build(StoreKind.Cluster, spark, dir, store)
+    assert(StoreFiles.exists(store))
     java.nio.file.Files.delete(
       java.nio.file.Paths.get(store, "manifest.json"))
-    assert(!Dedup.ClusterStore.exists(store),
+    assert(!StoreFiles.exists(store),
       "a store without its manifest must not be accepted as complete")
   }
 }

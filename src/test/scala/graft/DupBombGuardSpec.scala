@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Dedup, Multimodal}
+import graft.operators.{BandedStore, Dedup, Multimodal, StoreKind}
 
 /** The exact-duplicate bucket bomb — the classic production failure of
   * minhash/phash LSH at corpus scale: k byte-identical copies of one
@@ -444,7 +444,7 @@ class DupBombGuardSpec extends AnyFunSuite {
       "the grp fan-out") {
     val store = java.nio.file.Files
       .createTempDirectory("graft_bombstore").toString
-    Dedup.clusterStoreBuild(spark, storeDir, store)
+    BandedStore.build(StoreKind.Cluster, spark, storeDir, store)
     // the band index is O(groups): the 20-copy bomb holds exactly 8
     // band rows, all the rep's — the k×-collision exposure is gone
     val bandDocs = spark.read.parquet(s"$store/bands")
@@ -464,7 +464,7 @@ class DupBombGuardSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$store/assignment").count() == 21L)
     // the fold's edge frame: ONE rep-rep crossing edge for the
     // arriving identical doc, nothing quadratic
-    val (_, foldEdges) = Dedup.clusterStoreEdgeFrame(
+    val (_, foldEdges) = BandedStore.edgeFrame(StoreKind.Cluster,
       spark, storeDir, store, s"NOT (${Dedup.oldPred})")
     assert(foldEdges.collect().map(r => (r.getLong(0), r.getLong(1)))
       .toSeq == Seq((0L, 300L)))
@@ -477,7 +477,7 @@ class DupBombGuardSpec extends AnyFunSuite {
       uncollapsed.select("doc_a", "doc_b"),
       Engine.table(spark, storeDir, "documents").select("doc_id")))
     assert(assignment(
-      Dedup.clusterStoreFold(spark, storeDir, store)) == expected)
+      BandedStore.fold(StoreKind.Cluster, spark, storeDir, store)) == expected)
     // the streaming probe: the arriving twin verifies against the rep
     // once and fans out to ALL 20 member pairs through grp/
     val s0 = spark
@@ -513,7 +513,7 @@ class DupBombGuardSpec extends AnyFunSuite {
     // dir's embeddings: bomb vecs 0-39 identical, 100 a scaled copy
     // (cos 1, different bytes — its OWN group, reached by banding),
     // 200/201 distinct, 300/301 zero (excluded: vec_id >= split)
-    Dedup.embedStoreBuild(spark, dir, store)
+    BandedStore.build(StoreKind.Embed, spark, dir, store)
     val bandVecs = spark.read.parquet(s"$store/bands")
       .select("vec_id").collect().map(_.getLong(0))
     assert(bandVecs.count(_ < 40L) == 12,
@@ -557,7 +557,7 @@ class DupBombGuardSpec extends AnyFunSuite {
       "arrival out to every member") {
     val store = java.nio.file.Files
       .createTempDirectory("graft_bombpstore").toString
-    Multimodal.phashStoreBuild(spark, storeDir, store)
+    BandedStore.build(StoreKind.Phash, spark, storeDir, store)
     val bandDocs = spark.read.parquet(s"$store/bands")
       .select("doc_id").collect().map(_.getLong(0))
     assert(bandDocs.count(_ < 20L) == 4,

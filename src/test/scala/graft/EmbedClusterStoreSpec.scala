@@ -2,10 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
+import graft.operators.{BandedStore, StoreKind}
 
-/** The persistent EMBED cluster store (Dedup.embedStoreBuild/
-  * embedStoreFold): the fold folds a new vector batch into the STORED
+/** The persistent EMBED cluster store (BandedStore.build/fold,
+  * embed kind): the fold folds a new vector batch into the STORED
   * semantic clustering reading only the store (assignment + vecs +
   * band index) and the NEW vectors, bit-identical to batch banded
   * re-clustering of the full corpus.
@@ -30,7 +30,7 @@ class EmbedClusterStoreSpec extends AnyFunSuite {
       "the fold provably never re-reads old vectors from the corpus") {
     val store = java.nio.file.Files
       .createTempDirectory("graft_estore_spec").toString
-    Dedup.embedStoreBuild(spark, dir, store)
+    BandedStore.build(StoreKind.Embed, spark, dir, store)
     // doctor: every OLD vector becomes the zero vector — if the fold
     // re-read the corpus old half, zero vectors band nowhere (the
     // zero-norm guard) so every old-new edge would vanish and the
@@ -45,7 +45,8 @@ class EmbedClusterStoreSpec extends AnyFunSuite {
           expr("transform(embedding, x -> float(0.0))"))
           .otherwise(col("embedding")))
       .write.mode("overwrite").parquet(s"$doctored/embeddings.parquet")
-    val folded = clusters(Dedup.embedStoreFold(spark, doctored, store))
+    val folded = clusters(
+      BandedStore.fold(StoreKind.Embed, spark, doctored, store))
     val batch = clusters(SparkEntry.queries("dd_embed_cluster")(spark, dir))
     assert(folded == batch,
       "fold over the doctored corpus diverged from batch re-clustering " +
@@ -79,12 +80,12 @@ class EmbedClusterStoreSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
     val store = java.nio.file.Files
       .createTempDirectory("graft_estore_mstore").toString
-    Dedup.embedStoreBuild(spark, d, store)
+    BandedStore.build(StoreKind.Embed, spark, d, store)
     val built = clusters(
       spark.read.parquet(s"$store/assignment"))
     assert(built == Map(0L -> 0L, 1L -> 1L, 2L -> 2L),
       s"build must cluster the old half {0, 1, 2} as singletons: $built")
-    val folded = clusters(Dedup.embedStoreFold(spark, d, store))
+    val folded = clusters(BandedStore.fold(StoreKind.Embed, spark, d, store))
     // banding recall note: the 0-4 and 1-4 edges survive only if
     // banding buckets them together; with cos ~0.707 over 12 bands x
     // 5 bits that holds on this construction — assert the MERGE
@@ -113,12 +114,12 @@ class EmbedClusterStoreSpec extends AnyFunSuite {
     def tmp(p: String): String =
       java.nio.file.Files.createTempDirectory(p).toString
     val g0 = tmp("graft_estore_g0")
-    Dedup.embedStoreBuild(spark, dir, g0, "vec_id < 167")
+    BandedStore.build(StoreKind.Embed, spark, dir, g0, "vec_id < 167")
     val g1 = tmp("graft_estore_g1")
-    Dedup.embedStoreFoldInto(spark, doctored("vec_id < 167"), g0,
+    BandedStore.foldInto(StoreKind.Embed, spark, doctored("vec_id < 167"), g0,
       "vec_id >= 167 AND vec_id < 334", g1)
     val g2 = tmp("graft_estore_g2")
-    Dedup.embedStoreFoldInto(spark, doctored("vec_id < 334"), g1,
+    BandedStore.foldInto(StoreKind.Embed, spark, doctored("vec_id < 334"), g1,
       "vec_id >= 334", g2)
     val chained = clusters(
       spark.read.parquet(s"$g2/assignment").orderBy("vec_id"))

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.{BandedStore, StoreKind}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
 import org.scalatest.funsuite.AnyFunSuite
@@ -456,8 +457,8 @@ class PlanSpec extends AnyFunSuite {
     // shape of the verified-edge frame (exposed lazily by
     // clusterStoreEdgeFrame, the exact frame the fold checkpoints)
     // under the same AQE-off planning scope the fold executes under.
-    val store = operators.Dedup.ensureClusterStore(spark, dir)
-    val (_, edges) = operators.Dedup.clusterStoreEdgeFrame(
+    val store = BandedStore.ensure(StoreKind.Cluster, spark, dir)
+    val (_, edges) = BandedStore.edgeFrame(StoreKind.Cluster,
       spark, dir, store, "cast(substring(source, 4) as int) >= 10")
     val p = operators.Dedup.withAqeOff(spark)(
       edges.queryExecution.executedPlan.toString)
@@ -476,8 +477,9 @@ class PlanSpec extends AnyFunSuite {
     // Same 100 TB claim as the jaccard-side fold: a vector increment
     // costs bands(new) probing the STORED RH-LSH index — equi-join on
     // (band, bkt) — plus verify joins on vec_id against stored vecs.
-    val store = operators.Dedup.ensureEmbedStore(spark, dir)
-    val (_, edges) = operators.Dedup.embedStoreEdgeFrame(spark, dir, store)
+    val store = BandedStore.ensure(StoreKind.Embed, spark, dir)
+    val (_, edges) =
+      BandedStore.edgeFrame(StoreKind.Embed, spark, dir, store)
     val p = operators.Dedup.withAqeOff(spark)(
       edges.queryExecution.executedPlan.toString)
     assert(!p.contains("CartesianProduct"), p.take(4000))
@@ -494,7 +496,7 @@ class PlanSpec extends AnyFunSuite {
     // physical shape on a batch shadow of the same pipeline (the
     // stream-static joins plan identically; EliminateEventTimeWatermark
     // drops the watermark node in batch).
-    val store = operators.Dedup.ensureClusterStore(spark, dir)
+    val store = BandedStore.ensure(StoreKind.Cluster, spark, dir)
     val docs = Engine.table(spark, dir, "documents")
       .selectExpr("doc_id", "(doc_id + 1) * 1000000000L AS ts", "text")
     val p = streaming.Streams.storeNearDupStream(docs, store)
@@ -510,7 +512,7 @@ class PlanSpec extends AnyFunSuite {
   test("storePhashStream: the media serve path is equi-joins only — " +
       "(band, bv) into the stored index, owner_id into stored sigs — " +
       "and the payload never reaches a join") {
-    val store = operators.Multimodal.ensurePhashStore(spark, dir)
+    val store = BandedStore.ensure(StoreKind.Phash, spark, dir)
     val docs = Engine.table(spark, dir, "documents")
       .selectExpr("doc_id", "(doc_id + 1) * 1000000000L AS ts", "text")
     val p = streaming.Streams.storePhashStream(docs, store)
@@ -600,10 +602,10 @@ class PlanSpec extends AnyFunSuite {
   test("dd_cluster_fold_stored probe: the sealed store's bands side " +
       "is a bucketed scan with NO exchange — the fold probe is " +
       "co-located by layout, not by a per-fold shuffle") {
-    val store = operators.Dedup.ensureClusterStore(spark, dir)
+    val store = BandedStore.ensure(StoreKind.Cluster, spark, dir)
     withNoBroadcast {
       operators.Dedup.withAqeOff(spark) {
-        val (_, edges) = operators.Dedup.clusterStoreEdgeFrame(
+        val (_, edges) = BandedStore.edgeFrame(StoreKind.Cluster,
           spark, dir, store, "cast(substring(source, 4) as int) >= 10")
         assertStoreSideExchangeFree(
           edges.queryExecution.executedPlan, "/bands")
@@ -615,10 +617,10 @@ class PlanSpec extends AnyFunSuite {
       "is a bucketed scan with NO exchange — the r22 side-split; " +
       "before it, stored signature arrays re-shuffled through the " +
       "allsigs union on every fold") {
-    val store = operators.Dedup.ensureClusterStore(spark, dir)
+    val store = BandedStore.ensure(StoreKind.Cluster, spark, dir)
     withNoBroadcast {
       operators.Dedup.withAqeOff(spark) {
-        val (_, edges) = operators.Dedup.clusterStoreEdgeFrame(
+        val (_, edges) = BandedStore.edgeFrame(StoreKind.Cluster,
           spark, dir, store, "cast(substring(source, 4) as int) >= 10")
         assertStoreSideExchangeFree(
           edges.queryExecution.executedPlan, "/sigs")
@@ -629,10 +631,10 @@ class PlanSpec extends AnyFunSuite {
   test("dd_embed_cluster_fold_stored verify: the sealed store's VECS " +
       "side is a bucketed scan with NO exchange — the r22 side-split " +
       "for the embedding payloads") {
-    val store = operators.Dedup.ensureEmbedStore(spark, dir)
+    val store = BandedStore.ensure(StoreKind.Embed, spark, dir)
     withNoBroadcast {
       operators.Dedup.withAqeOff(spark) {
-        val (_, edges) = operators.Dedup.embedStoreEdgeFrame(
+        val (_, edges) = BandedStore.edgeFrame(StoreKind.Embed,
           spark, dir, store)
         assertStoreSideExchangeFree(
           edges.queryExecution.executedPlan, "/vecs")
@@ -644,7 +646,7 @@ class PlanSpec extends AnyFunSuite {
       "sides are bucketed scans with NO exchange — each micro-batch " +
       "shuffles only the arriving vectors, never the corpus-scale " +
       "index or the full-width verify relation") {
-    val store = operators.Dedup.ensureEmbedStore(spark, dir)
+    val store = BandedStore.ensure(StoreKind.Embed, spark, dir)
     val vecs = Engine.table(spark, dir, "embeddings")
       .selectExpr("vec_id", "(vec_id + 1) * 1000000000L AS ts",
         "embedding")
@@ -663,7 +665,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("storeNearDupStream probe: the sealed cluster store's bands " +
       "and sigs sides are bucketed scans with NO exchange") {
-    val store = operators.Dedup.ensureClusterStore(spark, dir)
+    val store = BandedStore.ensure(StoreKind.Cluster, spark, dir)
     val docs = Engine.table(spark, dir, "documents")
       .selectExpr("doc_id", "(doc_id + 1) * 1000000000L AS ts", "text")
     withNoBroadcast {
@@ -678,7 +680,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("storePhashStream probe: the sealed phash store's bands and " +
       "sigs sides are bucketed scans with NO exchange") {
-    val store = operators.Multimodal.ensurePhashStore(spark, dir)
+    val store = BandedStore.ensure(StoreKind.Phash, spark, dir)
     val docs = Engine.table(spark, dir, "documents")
       .selectExpr("doc_id", "(doc_id + 1) * 1000000000L AS ts", "text")
     withNoBroadcast {

@@ -1,8 +1,12 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.concurrent.{Callable, Executors}
+
+import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 import graft.run.StoreCtl
-import graft.operators.Dedup
+import graft.operators.{Banded, Dedup, StoreFiles, StoreKind}
 
 /** The named-path operational face of the persistent stores: build /
   * fold / stats round-trips through StoreCtl.run for each store kind,
@@ -1101,5 +1105,132 @@ class StoreCtlSpec extends AnyFunSuite {
     }
     assert(healed,
       "a healed registration must return within one re-probe window")
+  }
+
+  // ---- crash windows, every kind in the StoreKind table ------------------
+  // An advance writes the kind's relations in table order, then
+  // `_PARENT`, then the commit marker, then flips the pointer; each cut
+  // is simulated on a finished advance by deleting what the crash would
+  // not yet have written, so no fault hook lives in the engine.
+
+  private def ok(args: String*): String =
+    StoreCtl.run(spark, args).fold(e => fail(s"$args: $e"), identity)
+
+  private def copyTree(from: Path, to: Path): Unit =
+    Files.walk(from).forEach(p =>
+      Files.copy(p, to.resolve(from.relativize(p).toString)))
+
+  /** Every relation of the served chain, as readers resolve it. */
+  private def served(k: StoreKind, root: Path): Map[String, Set[Row]] = {
+    val gen = ok("serve", root.toString)
+    k.rels.map { case (rel, _) =>
+      rel -> StoreKind.readChain(spark, gen, rel, k.id).collect().toSet
+    }.toMap
+  }
+
+  // (cut, what the crash had not written yet in gen-2, what doctor says)
+  private val cuts: Seq[(String, (StoreKind, Path) => Seq[Path], String)] =
+    Seq(
+      ("between relations", (k, gen) =>
+        k.rels.drop(1).map(r => gen.resolve(r._1)) ++
+          Seq(gen.resolve(StoreFiles.ParentName)),
+        "uncommitted dir(s) gen-2"),
+      ("before the manifest", (_, _) => Nil, "uncommitted dir(s) gen-2"),
+      ("after the manifest, before the flip", (_, _) => Nil,
+        "committed generation(s) gen-2 sit ABOVE the pointer"))
+
+  StoreKind.all.foreach { k =>
+    test(s"${k.name}: a cut advance is named by doctor and the next " +
+        "advance --delta serves what the uncut chain serves") {
+      val batch = (i: Int) => s"${k.id} % 4 = $i"
+      val base = Files.createTempDirectory(s"graft_crash_${k.name}")
+      val uncut = base.resolve("uncut")
+      Files.createDirectories(uncut)
+      ok("build", k.name, dir, uncut.resolve("gen-0").toString, batch(0))
+      ok("flip", uncut.toString, "gen-0")
+      ok("advance", "--delta", k.name, dir, uncut.toString, batch(1))
+      val pointerAt1 =
+        Files.readAllBytes(uncut.resolve(StoreFiles.CurrentName))
+      ok("advance", "--delta", k.name, dir, uncut.toString, batch(2))
+      val advanced = base.resolve("advanced")
+      copyTree(uncut, advanced)
+      val served2 = served(k, uncut)
+      ok("advance", "--delta", k.name, dir, uncut.toString, batch(3))
+      val served3 = served(k, uncut)
+
+      cuts.zipWithIndex.foreach { case ((cut, unwritten, named), i) =>
+        val root = base.resolve(s"cut$i")
+        copyTree(advanced, root)
+        val gen2 = root.resolve("gen-2")
+        Files.write(root.resolve(StoreFiles.CurrentName), pointerAt1)
+        if (i < 2)
+          Files.delete(StoreFiles.marker(gen2.toString).get)
+        unwritten(k, gen2).foreach(p => StoreFiles.deleteTree(p.toFile))
+        val report = ok("doctor", root.toString)
+        assert(report.contains(named), s"$cut: $report")
+        // the cron re-runs the cut batch; past a committed orphan the
+        // advance refuses until the operator flips to it, and then the
+        // next batch lands on top
+        val retry = StoreCtl.run(spark,
+          Seq("advance", "--delta", k.name, dir, root.toString, batch(2)))
+        if (i < 2) {
+          assert(retry.isRight, s"$cut: $retry")
+          assert(served(k, root) == served2, s"$cut: batch 2 diverged")
+        } else {
+          assert(retry.left.exists(_.contains("`flip`")), s"$cut: $retry")
+          ok("flip", root.toString, "gen-2")
+          ok("advance", "--delta", k.name, dir, root.toString, batch(3))
+          assert(served(k, root) == served3, s"$cut: batch 3 diverged")
+        }
+      }
+      StoreFiles.deleteTree(base.toFile)
+    }
+  }
+
+  // ---- concurrent builds, every banded kind --------------------------------
+  // A build's session views are qualified by its store path, so two
+  // builds of one kind running in one session can never analyze each
+  // other's rows.
+
+  StoreKind.all.collect { case k: Banded => k }.foreach { k =>
+    test(s"${k.name}: two builds running concurrently in one session " +
+        "over different predicates equal their sequential builds") {
+      val preds = Seq(s"${k.id} % 2 = 0", s"${k.id} % 3 = 0")
+      def build(p: String, store: String): Unit =
+        ok("build", k.name, dir, store, p)
+      def contents(store: String) =
+        (new String(Files.readAllBytes(
+          java.nio.file.Paths.get(store, "manifest.json"))),
+          k.rels.map { case (rel, _) =>
+            rel -> StoreFiles.readRel(spark, s"$store/$rel").collect().toSet
+          }.toMap)
+      val sequential = preds.map { p =>
+        val st = tmp(s"seq_${k.name}_${preds.indexOf(p)}")
+        build(p, st)
+        st
+      }
+      val concurrent = preds.indices.map(i => tmp(s"conc_${k.name}_$i"))
+      // the label-propagation loop swaps these session confs without
+      // a lock (a known non-atomic save/restore), so two concurrent LP
+      // loops can leave the loser's values behind: restore them for
+      // the suites that share this session
+      val confKeys =
+        Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+      val confWas = confKeys.map(c => c -> spark.conf.getOption(c))
+      val pool = Executors.newFixedThreadPool(2)
+      try preds.zip(concurrent).map { case (p, st) =>
+        pool.submit(new Callable[Unit] { def call(): Unit = build(p, st) })
+      }.foreach(_.get())
+      finally {
+        pool.shutdown()
+        confWas.foreach {
+          case (c, Some(v)) => spark.conf.set(c, v)
+          case (c, None)    => spark.conf.unset(c)
+        }
+      }
+      sequential.zip(concurrent).foreach { case (a, b) =>
+        assert(contents(a) == contents(b), s"$a vs $b")
+      }
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Dedup
+import graft.operators.{BandedStore, Dedup, StoreKind}
 
 /** The streaming serve path (Streams.storeDedupStream via the
   * st_store_dedup_replay gates): ingest vectors deduped against the
@@ -30,7 +30,7 @@ class StoreDedupReplaySpec extends AnyFunSuite {
   test("the stream's pair set equals the batch fold's old-new edge " +
       "slice against the same store, expanded through the rep groups") {
     val split = Dedup.embedSplit(spark, dir)
-    val store = Dedup.ensureEmbedStore(spark, dir)
+    val store = BandedStore.ensure(StoreKind.Embed, spark, dir)
     val streamed = pairs(
       SparkEntry.queries("st_store_dedup_replay")(spark, dir))
     // fold edges are (vec_a < vec_b), REP-level on both sides (the
@@ -39,14 +39,14 @@ class StoreDedupReplaySpec extends AnyFunSuite {
     // vec_a < split <= vec_b. Stream rows are (new, owner=old),
     // member-level after the grp fan-out — expand the fold slice the
     // same way before comparing.
-    val (_, edges) = Dedup.embedStoreEdgeFrame(spark, dir, store)
+    val (_, edges) = BandedStore.edgeFrame(StoreKind.Embed, spark, dir, store)
     val edgeRows = edges
       .where(s"vec_a < $split AND vec_b >= $split")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val oldMembers = Dedup.storeGrp(spark, store, "member_id")
       .collect().map(r => (r.getLong(1), r.getLong(0)))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
-    val newMembers = spark.table(Dedup.foldView("efo", store, "_grp"))
+    val newMembers = spark.table(BandedStore.storeView("efo", store, "_grp"))
       .collect().map(r => (r.getLong(1), r.getLong(0)))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
     val foldOldNew = edgeRows.flatMap { case (o, n) =>

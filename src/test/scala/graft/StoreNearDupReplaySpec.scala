@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Dedup
+import graft.operators.{BandedStore, Dedup, StoreKind}
 
 /** The streaming TEXT serve path (Streams.storeNearDupStream via the
   * st_store_neardup_replay gates): ingest documents near-dup-flagged
@@ -36,7 +36,7 @@ class StoreNearDupReplaySpec extends AnyFunSuite {
   test("the stream's pair set equals the batch fold's old-new edge " +
       "slice against the same store, expanded through the rep groups") {
     val olds = oldIds
-    val store = Dedup.ensureClusterStore(spark, dir)
+    val store = BandedStore.ensure(StoreKind.Cluster, spark, dir)
     val streamed = pairs(
       SparkEntry.queries("st_store_neardup_replay")(spark, dir))
     // fold edges are least/greatest-normalized (old/new doc ids
@@ -46,13 +46,13 @@ class StoreNearDupReplaySpec extends AnyFunSuite {
     // include new-new pairs + star edges the store probe must NOT
     // emit; the old-new slice, expanded rep→members on both sides and
     // re-oriented as (new, owner=old), is what the stream must match.
-    val (_, edges) = Dedup.clusterStoreEdgeFrame(
+    val (_, edges) = BandedStore.edgeFrame(StoreKind.Cluster,
       spark, dir, store, s"NOT (${Dedup.oldPred})")
     val edgeRows = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
     val oldMembers = Dedup.storeGrp(spark, store, "member_id")
       .collect().map(r => (r.getLong(1), r.getLong(0)))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
-    val newMembers = spark.table(Dedup.foldView("cfo", store, "_grp"))
+    val newMembers = spark.table(BandedStore.storeView("cfo", store, "_grp"))
       .collect().map(r => (r.getLong(1), r.getLong(0)))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
     val foldOldNew = edgeRows.flatMap { case (a, b) =>

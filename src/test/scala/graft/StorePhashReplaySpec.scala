@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Dedup, Multimodal}
+import graft.operators.{BandedStore, Dedup, StoreKind}
 
 /** The streaming MEDIA serve path (Streams.storePhashStream via the
   * st_store_phash_replay gates): ingest payloads near-dup-flagged
@@ -23,7 +23,7 @@ class StorePhashReplaySpec extends AnyFunSuite {
 
   test("in-order and bounded-disorder replays emit the identical pair " +
       "set, equal to the batch pair query's old-new slice") {
-    Multimodal.ensurePhashStore(spark, dir)
+    BandedStore.ensure(StoreKind.Phash, spark, dir)
     val olds = Engine.table(spark, dir, "documents")
       .where(Dedup.oldPred).select("doc_id")
       .collect().map(_.getLong(0)).toSet
@@ -80,7 +80,7 @@ class StorePhashReplaySpec extends AnyFunSuite {
         .selectExpr("doc_id", "cast(band as bigint)", "bv")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .toSet
-    val store = Multimodal.ensurePhashStore(spark, dir)
+    val store = BandedStore.ensure(StoreKind.Phash, spark, dir)
     val gen0Sigs = sigSet(store)
     val newPred = s"NOT (${Dedup.oldPred})"
     val g1 = store + "_chain_g1"
@@ -91,11 +91,11 @@ class StorePhashReplaySpec extends AnyFunSuite {
       f.delete()
     }
     Seq(g1, g2, one).foreach(p => deleteRec(new java.io.File(p)))
-    Multimodal.phashStoreFoldInto(spark, dir, store, g1,
-      s"$newPred AND doc_id % 2 = 0")
-    Multimodal.phashStoreFoldInto(spark, dir, g1, g2,
-      s"$newPred AND doc_id % 2 = 1")
-    Multimodal.phashStoreFoldInto(spark, dir, store, one, newPred)
+    BandedStore.foldInto(StoreKind.Phash, spark, dir, store,
+      s"$newPred AND doc_id % 2 = 0", g1)
+    BandedStore.foldInto(StoreKind.Phash, spark, dir, g1,
+      s"$newPred AND doc_id % 2 = 1", g2)
+    BandedStore.foldInto(StoreKind.Phash, spark, dir, store, newPred, one)
     assert(sigSet(g2) == sigSet(one))
     assert(bandSet(g2) == bandSet(one))
     assert(sigSet(g2).size > gen0Sigs.size,

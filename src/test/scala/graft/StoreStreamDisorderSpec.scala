@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Dedup, Multimodal, Similarity}
+import graft.operators.{BandedStore, Dedup, Similarity, StoreKind}
 import graft.streaming.{StreamDoc, StreamVec, Streams}
 
 /** Seeded RANDOM bounded-disorder sweeps for the served-store probe
@@ -157,7 +157,7 @@ class StoreStreamDisorderSpec extends AnyFunSuite {
   test("storePhashStream lands on the batch old-new Hamming slice " +
       "under random bounded disorder (3 seeds)") {
     val s0 = spark; import s0.implicits._
-    val store = Multimodal.ensurePhashStore(spark, dir)
+    val store = BandedStore.ensure(StoreKind.Phash, spark, dir)
     val olds = oldDocIds()
     sweep("store_phash",
       oldNewSlice("mm_phash_pairs", "doc_a", "doc_b", olds),
@@ -168,7 +168,7 @@ class StoreStreamDisorderSpec extends AnyFunSuite {
   test("storeNearDupStream lands on the batch old-new Jaccard slice " +
       "under random bounded disorder (3 seeds)") {
     val s0 = spark; import s0.implicits._
-    val store = Dedup.ensureClusterStore(spark, dir)
+    val store = BandedStore.ensure(StoreKind.Cluster, spark, dir)
     val olds = oldDocIds()
     sweep("store_neardup",
       oldNewSlice("dd_jaccard", "doc_a", "doc_b", olds),
@@ -179,7 +179,7 @@ class StoreStreamDisorderSpec extends AnyFunSuite {
   test("storeDedupStream lands on the banded old-new cosine slice " +
       "under random bounded disorder (3 seeds)") {
     val s0 = spark; import s0.implicits._
-    val store = Dedup.ensureEmbedStore(spark, dir)
+    val store = BandedStore.ensure(StoreKind.Embed, spark, dir)
     val split = Dedup.embedSplit(spark, dir)
     // banded pair query's slice: the store probe is banded, so banded
     // — not all-pairs — is the contract
@@ -214,7 +214,7 @@ class StoreStreamDisorderSpec extends AnyFunSuite {
   test("decontamination probe (eval cluster store) lands on the " +
       "corpus-vs-eval Jaccard slice under random bounded disorder") {
     val s0 = spark; import s0.implicits._
-    val store = Dedup.ensureEvalClusterStore(spark, dir)
+    val store = BandedStore.ensure(StoreKind.Cluster, spark, dir, Dedup.evalPred)
     sweep("decon_text",
       oldNewSlice("dd_jaccard", "doc_a", "doc_b", _ % 50 == 0),
       tickedDocsWhere("doc_id % 50 <> 0"), "doc_id")(_.ts, _.doc_id)(
@@ -225,7 +225,8 @@ class StoreStreamDisorderSpec extends AnyFunSuite {
       "the banded corpus-vs-eval cosine slice under random bounded " +
       "disorder") {
     val s0 = spark; import s0.implicits._
-    val store = Dedup.ensureEvalEmbedStore(spark, dir)
+    val store =
+      BandedStore.ensure(StoreKind.Embed, spark, dir, Dedup.evalVecPred)
     sweep("decon_embed",
       oldNewSlice("dd_embed_cosine_lsh", "vec_a", "vec_b", _ % 50 == 0),
       tickedVecsWhere("vec_id % 50 <> 0"), "vec_id")(_.ts, _.vec_id)(
