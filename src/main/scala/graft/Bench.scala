@@ -91,7 +91,7 @@ object Bench {
     * its build number then reads ≈warm, which is the correct
     * attribution (the build was charged to the key that paid it).
     */
-  private val StoreBuildKeys: Set[String] = Set(
+  private[graft] val StoreBuildKeys: Set[String] = Set(
     "dd_cluster_store", "dd_cluster_fold_stored",
     "dd_embed_cluster_store", "dd_embed_cluster_fold_stored",
     "mm_phash_store", "mm_phash_fold_stored",
@@ -130,15 +130,9 @@ object Bench {
     // accounting note in BENCHING.md's r18 section adjudicates this
     // (the build stays priced, in the build channel, exactly like
     // the r17 jaccard/cosine shift priced theirs in dd_decontaminate)
-    "dd_containment", "dd_containment_smallside",
+    "dd_containment", "dd_containment_smallside") ++
     // the served-store replay gates: rep 1 builds the probed store
-    "st_store_dedup_replay", "st_store_dedup_ooo_replay",
-    "st_store_neardup_replay", "st_store_neardup_ooo_replay",
-    "st_store_phash_replay", "st_store_phash_ooo_replay",
-    "st_ann_serve_replay", "st_ann_serve_ooo_replay",
-    "st_decontaminate_replay", "st_decontaminate_ooo_replay",
-    "st_decontaminate_semantic_replay",
-    "st_decontaminate_semantic_ooo_replay")
+    graft.streaming.StreamReplay.servedStoreKeys
 
   private final case class M(
       name: String, median: Double, spread: Double, jobsPerRep: Int,

@@ -215,6 +215,25 @@ object Engine {
         }
     }
 
+  /** Run `body` with the given session conf values set, restoring each
+    * key in `finally` — to its prior value, or unset if it was unset.
+    * The ONE save/set/restore scope for every harness-local conf flip,
+    * so none can drift or leak. The flip is session-global for its
+    * duration (safe for the sequential Verify/Bench harnesses), and it
+    * only covers work the body forces inside the scope: a lazily
+    * returned DataFrame plans after the restore.
+    */
+  def withConf[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val was = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
+    try {
+      kvs.foreach { case (k, v) => s.conf.set(k, v) }
+      body
+    } finally was.reverse.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None)    => s.conf.unset(k)
+    }
+  }
+
   /** Postfix face of [[truncate]] — the engine's truncation points
     * read `frame.truncated()` where they once read
     * `frame.localCheckpoint()`.

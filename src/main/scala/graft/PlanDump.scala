@@ -39,13 +39,11 @@ object PlanDump {
       val text =
         try {
           if (name.startsWith("edge:")) {
-            val k = "spark.sql.autoBroadcastJoinThreshold"
-            val was = spark.conf.get(k)
-            spark.conf.set(k, "-1")
-            try graft.operators.Dedup.withAqeOff(spark)(
-              edgeFrame(name.stripPrefix("edge:")).queryExecution
-                .explainString(org.apache.spark.sql.execution.FormattedMode))
-            finally spark.conf.set(k, was)
+            Engine.withConf(spark,
+                "spark.sql.autoBroadcastJoinThreshold" -> "-1")(
+              graft.operators.Dedup.withAqeOff(spark)(
+                edgeFrame(name.stripPrefix("edge:")).queryExecution
+                  .explainString(org.apache.spark.sql.execution.FormattedMode)))
           } else {
             val df = SparkEntry.queries(name)(spark, dir)
             df.queryExecution.explainString(

@@ -26,9 +26,18 @@ object Verify {
       // relations) must not accumulate across the 60+-query session
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    writeOracleSql(outDir, SparkEntry.oracleSql)
+    spark.stop()
+  }
+
+  /** Write `oracles` as `outDir/oracle_sql.json`. The string escape
+    * covers backslash, quote, and ALL control chars (<0x20) — a tab or
+    * CR in an oracle's SQL would otherwise make the reader's json.load
+    * (tools/compare_oracle.py) fail and silently zero the correctness
+    * check.
+    */
+  private[graft] def writeOracleSql(outDir: String,
+                                    oracles: Map[String, String]): Unit = {
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -38,9 +47,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = oracles
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import java.nio.file.{Files, Paths}
 /** Dev helper: dump ONE SparkEntry query (plus oracle_sql.json) so
   * tools/compare_oracle.py can gate it without the full all-query run.
   * Usage: runMain graft.VerifyOne <name>[,<name>...] <sfDir> <outDir>
@@ -15,18 +14,8 @@ object VerifyOne {
         .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       spark.catalog.clearCache()
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => names.contains(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Verify.writeOracleSql(outDir,
+      SparkEntry.oracleSql.filter(kv => names.contains(kv._1)))
     spark.stop()
   }
 }

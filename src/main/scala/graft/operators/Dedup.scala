@@ -152,15 +152,8 @@ object Dedup extends QueryPack {
     * executedPlan access) — a lazily-returned DataFrame plans after
     * the finally has already restored the conf.
     */
-  private[graft] def withAqeOff[T](s: SparkSession)(body: => T): T = {
-    val k = "spark.sql.adaptive.enabled"
-    val was = s.conf.getOption(k)
-    s.conf.set(k, "false")
-    try body finally was match {
-      case Some(v) => s.conf.set(k, v)
-      case None    => s.conf.unset(k)
-    }
-  }
+  private[graft] def withAqeOff[T](s: SparkSession)(body: => T): T =
+    withConf(s, "spark.sql.adaptive.enabled" -> "false")(body)
 
   /** Per-call-unique temp view name for the shared-frame BUILDERS'
     * CHECKPOINT-BACKED intermediates. They run OUTSIDE the registry
@@ -2366,20 +2359,13 @@ object Dedup extends QueryPack {
     // NOTE: the conf flip is session-global for its duration — safe
     // for the sequential Verify/Bench harnesses; a concurrent query
     // on the same session would silently lose AQE until the finally.
-    val aqeKey = "spark.sql.adaptive.enabled"
     val shufKey = "spark.sql.shuffle.partitions"
-    val aqeWas = session.conf.getOption(aqeKey)
     val shufWas = session.conf.get(shufKey)
-    def withLoopConf[T](body: => T): T = {
-      session.conf.set(aqeKey, "false")
-      try body finally {
-        aqeWas match {
-          case Some(v) => session.conf.set(aqeKey, v)
-          case None    => session.conf.unset(aqeKey)
-        }
-        session.conf.set(shufKey, shufWas)
-      }
-    }
+    // the body sets the loop's own shuffle partitions; the scope's
+    // shufWas entry restores them
+    def withLoopConf[T](body: => T): T =
+      withConf(session, "spark.sql.adaptive.enabled" -> "false",
+        shufKey -> shufWas)(body)
     var converged = false
     var iter = 0
     def prepEdges(): LpEdges =

@@ -1630,15 +1630,10 @@ object Similarity extends QueryPack {
 
   private def simAnnRecallGlobalSampled(s: SparkSession,
                                         dir: String): DataFrame = {
-    val was = s.conf.getOption(RecallSampleKey)
-    s.conf.set(RecallSampleKey, RecallBenchSample.toString)
     // the view rebinding happens eagerly inside the frame builder, so
     // the conf restore cannot un-sample the returned plan
-    try simAnnRecallGlobal(s, dir)
-    finally was match {
-      case Some(v) => s.conf.set(RecallSampleKey, v)
-      case None    => s.conf.unset(RecallSampleKey)
-    }
+    withConf(s, RecallSampleKey -> RecallBenchSample.toString)(
+      simAnnRecallGlobal(s, dir))
   }
 
   /** The sampled oracle: the FULL report's CTE chain, restricted at

@@ -254,13 +254,8 @@ object StoreCtl {
         // exact side affordable on a production store
         if (!n.toIntOption.exists(_ >= 1))
           return Left(s"--sample wants a positive int, got '$n'")
-        val was = spark.conf.getOption(Similarity.RecallSampleKey)
-        spark.conf.set(Similarity.RecallSampleKey, n)
-        try run(spark, Seq("recall", root, corpus))
-        finally was match {
-          case Some(v) => spark.conf.set(Similarity.RecallSampleKey, v)
-          case None    => spark.conf.unset(Similarity.RecallSampleKey)
-        }
+        Engine.withConf(spark, Similarity.RecallSampleKey -> n)(
+          run(spark, Seq("recall", root, corpus)))
       case Seq("recall", root, corpus) =>
         StoreFiles.serve(root).flatMap { cur =>
           if (!java.nio.file.Files.exists(

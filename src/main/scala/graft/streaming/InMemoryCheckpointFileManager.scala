@@ -25,9 +25,10 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * read-back of state deltas across micro-batches.
   *
   * SCOPE: local-mode measurement harness ONLY (the replay gates set it
-  * through StreamReplay's scoped conf, next to their 2-partition
-  * scope). Tasks and driver share one JVM in local mode, so the global
-  * map is visible to both; on a real cluster this class would be
+  * through the replay driver's conf scope, StreamReplay's
+  * withReplayPartitions, next to its 2-partition setting). Tasks and
+  * driver share one JVM in local mode, so the global map is visible
+  * to both; on a real cluster this class would be
   * wrong (executors cannot see driver heap) and recovery-after-crash
   * is explicitly out of scope — the replay protocol creates a fresh
   * temp checkpoint per run and never restarts from one. The

@@ -1047,9 +1047,10 @@ case class FunnelAdvance(user_id: Long, step: Int, at_us: Long)
     disorderMetrics(spark)
 
   /** Default day-offset ceiling (day-7 retention). Shared with the
-    * replay gate's window-lapse guard (StreamReplay) so the state-
-    * removal boundary `(cohortDay + maxOffset + 1) * dayNs` and the
-    * guard that asserts no cohort crosses it mid-replay cannot drift.
+    * replay gate's window-lapse guard
+    * (StreamReplay.retentionWindowGuard) so the state-removal boundary
+    * `(cohortDay + maxOffset + 1) * dayNs` and the guard that asserts
+    * no cohort crosses it mid-replay cannot drift.
     */
   val RetentionMaxOffset: Int = 7
 
@@ -1088,7 +1089,7 @@ case class FunnelAdvance(user_id: Long, step: Int, at_us: Long)
     * therefore sets `delay` to the replay's study horizon so no cohort
     * expires before the stream drains — backfill lateness and
     * steady-state lateness are different deployment knobs (see
-    * StreamReplay.stRetentionReplay).
+    * the retention row of StreamReplay's family table).
     */
   def retentionStream(events: Dataset[Event],
                       dayNs: Long = 86400000000000L,
@@ -1224,8 +1225,9 @@ case class FunnelAdvance(user_id: Long, step: Int, at_us: Long)
   /** Default idle TTL, in days of event-time inactivity, after which a
     * funnel user's state is dropped (see [[funnelStream]]'s state
     * lifecycle note). Shared with the replay gate's no-mid-replay-
-    * expiry guard (StreamReplay) so the operator's expiry boundary and
-    * the guard that asserts no user crosses it cannot drift.
+    * expiry guard (StreamReplay.funnelTtlGuard) so the operator's
+    * expiry boundary and the guard that asserts no user crosses it
+    * cannot drift.
     */
   val FunnelIdleTtlDays: Long = 90L
 
@@ -1265,7 +1267,7 @@ case class FunnelAdvance(user_id: Long, step: Int, at_us: Long)
     * engine). A full-history REPLAY that must reproduce the batch
     * table exactly therefore needs the TTL to exceed the largest
     * per-user event-time gap in the feed, which
-    * StreamReplay.stFunnelReplay asserts against the actual fixture.
+    * StreamReplay.funnelTtlGuard asserts against the actual fixture.
     *
     * The stream clock advances on step traffic only: the step filter
     * sits below the watermark node (Catalyst pushes it there anyway —

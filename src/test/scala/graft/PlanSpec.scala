@@ -710,4 +710,36 @@ class PlanSpec extends AnyFunSuite {
     assert("(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin) \\[cell".r
       .findAllIn(p).nonEmpty, p.take(4000))
   }
+
+  // Engine.withConf is the one save/set/restore scope every harness
+  // conf flip (replay partitions, AQE-off, the LP loop, recall
+  // sampling) goes through; a leak would change every later plan.
+  private val setKey = "graft.test.withconf.set"
+  private val unsetKey = "graft.test.withconf.unset"
+
+  private def confScopeRestores(body: => Unit): Unit = {
+    spark.conf.set(setKey, "before")
+    spark.conf.unset(unsetKey)
+    try Engine.withConf(spark, setKey -> "inside", unsetKey -> "inside") {
+      assert(spark.conf.get(setKey) == "inside")
+      assert(spark.conf.get(unsetKey) == "inside")
+      body
+    } finally {
+      assert(spark.conf.getOption(setKey).contains("before"))
+      assert(spark.conf.getOption(unsetKey).isEmpty)
+      spark.conf.unset(setKey)
+    }
+  }
+
+  test("withConf restores a key set before the scope and unsets one " +
+       "that was unset") {
+    confScopeRestores(())
+  }
+
+  test("withConf restores both keys when the body throws") {
+    val e = intercept[IllegalStateException] {
+      confScopeRestores(throw new IllegalStateException("body failed"))
+    }
+    assert(e.getMessage == "body failed")
+  }
 }
