@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 import java.time.Instant
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,6 +11,11 @@ import graft.run.{Main, Worker}
   * plus EP1 CLI flag parsing (`main.py:98-120`).
   */
 class WorkerSpec extends AnyFunSuite {
+
+  /** A file of the committed Jira fixture set (`src/test/resources/jira`,
+    * provenance in its README.md). */
+  private def fixture(name: String): Path =
+    Paths.get(getClass.getResource(s"/jira/$name").toURI)
 
   /** Virtual clock advanced by the injected sleep. */
   private class Clock(start: Long = 0L) {
@@ -81,9 +86,7 @@ class WorkerSpec extends AnyFunSuite {
     val raw = dir.resolve("raw")
     Files.createDirectories(raw)
     // copy one small fixture page into our data dir
-    val src = java.nio.file.Paths.get("/root/reference/data/raw")
-    val one = Files.list(src).filter(_.toString.endsWith("HADOOP_50.json"))
-      .findFirst().get()
+    val one = fixture("raw/HADOOP_50.json")
     Files.copy(one, raw.resolve(one.getFileName.toString))
     val ok = Main.runPipeline(
       Main.Options(runExtract = false, dataDir = dir),
@@ -94,7 +97,7 @@ class WorkerSpec extends AnyFunSuite {
 
   test("Config.load parses the reference config.json with defaults") {
     val cfg = graft.run.Config
-      .load(java.nio.file.Paths.get("/root/reference/config.json"))
+      .load(fixture("config.json"))
       .toOption.get
     assert(cfg.projects == Seq("HADOOP", "SPARK", "KAFKA"))
     assert(cfg.maxResults == 50 && cfg.maxRetries == 5)
@@ -125,9 +128,7 @@ class WorkerSpec extends AnyFunSuite {
     // processed output of the configured project still being written
     val raw = dir.resolve("raw")
     Files.createDirectories(raw)
-    val src = java.nio.file.Paths.get("/root/reference/data/raw")
-    val one = Files.list(src).filter(_.toString.endsWith("HADOOP_50.json"))
-      .findFirst().get()
+    val one = fixture("raw/HADOOP_50.json")
     Files.copy(one, raw.resolve(one.getFileName.toString))
     val ok = Main.runPipeline(
       Main.Options(runExtract = false, dataDir = dir,
