@@ -15,6 +15,28 @@ import org.apache.spark.sql.types.{DoubleType, LongType, TimestampNTZType, Times
   */
 object Engine {
 
+  /** Confs fixed for the life of the JVM or the SparkContext: a session
+    * built after the first one ignores them. [[session]] and the test
+    * suite's session apply this one list, so the tests run under the
+    * production settings.
+    *
+    * `spark.sql.codegen.cache.maxEntries` sizes the process-wide cache
+    * of Janino-compiled generated classes (Spark's default is 100). A
+    * Worker runs the same fetch → transform → store cycle every few
+    * hours in one process, so a warm cycle should compile nothing, but
+    * an LRU cache smaller than the cycle's working set evicts every
+    * class before its reuse. Measured on `perfbench` `hourly_refresh`
+    * (4 cores): the process generates ~400 distinct classes and one
+    * `advance --delta --compact-at 2` needs ~160 of them. At 100 each
+    * timed advance recompiled 300–305 classes (~5 s of Janino time,
+    * and each recompiled class is a new class for the JIT); at 1000
+    * the warm advances compile 4–8, the classes whose code inlines the
+    * batch predicate's literal. CodegenReuseSpec holds the bound.
+    */
+  val StaticConfs: Map[String, String] = Map(
+    "spark.sql.codegen.cache.maxEntries" -> "1000",
+    "spark.ui.enabled" -> "false")
+
   def session(appName: String = "graft",
               cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       : SparkSession = {
@@ -36,7 +58,7 @@ object Engine {
       // distribution requirements without an exchange (storage-
       // partitioned joins / pre-partitioned aggregation).
       .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.ui.enabled", "false")
+      .config(StaticConfs)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // deployment/bench face of the reliable-checkpoint escape hatch

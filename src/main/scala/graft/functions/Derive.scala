@@ -16,7 +16,6 @@ object Derive {
   case class QaPair(question: String, answer: String)
 
   private val U = Pattern.UNICODE_CHARACTER_CLASS
-  private val questionRe = Pattern.compile("([^.!?]+\\?)", U)
   private val sentenceSplit = Pattern.compile("[.!?]")
   private val dateRe =
     Pattern.compile("\\d{4}-\\d{2}-\\d{2}T\\d{2}:\\d{2}:\\d{2}", U)
@@ -50,10 +49,7 @@ object Derive {
   def extractQaPairs(description: String,
                      commentBodies: Seq[String]): Seq[QaPair] = {
     if (description == null) return Nil
-    val questions = Seq.newBuilder[String]
-    val m = questionRe.matcher(description)
-    while (m.find()) questions += m.group(1)
-    val qs = questions.result()
+    val qs = questions(description)
     if (qs.isEmpty) return Nil
     val answer = commentBodies
       .find(b => b != null && b.nonEmpty && pyLen(b) > 10)
@@ -62,6 +58,28 @@ object Derive {
       case None      => Nil
       case Some(ans) => qs.map(q => QaPair(pyStrip(q), ans))
     }
+  }
+
+  /** The spans `re.findall(r'([^.!?]+\?)', s)` returns, in one pass:
+    * every non-empty run of non-terminators that ends in `?`, with the
+    * `?`. The regex, run with `find()`, retries each start inside an
+    * unpunctuated run that no `?` ends, so it is quadratic in such runs
+    * (log blocks); this scan is linear. The terminators are ASCII, so a
+    * run never splits a surrogate pair.
+    */
+  private[graft] def questions(s: String): Seq[String] = {
+    val out = Seq.newBuilder[String]
+    var start = 0
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c == '.' || c == '!' || c == '?') {
+        if (c == '?' && i > start) out += s.substring(start, i + 1)
+        start = i + 1
+      }
+      i += 1
+    }
+    out.result()
   }
 
   /** Classification signal whitelists (`transformer.py:167-186`). */

@@ -58,11 +58,11 @@ object Dedup extends QueryPack {
     "list_distinct(list_transform(range(1, len(toks))," +
       " i -> toks[i] || ' ' || toks[i + 1]))"
 
-  /** 32-bit shingle hash from the md5 hex prefix — the fused
-    * [[graft.functions.Md5PrefixHash]] kernel (digest -> long, no hex
-    * string round-trip); value-identical to the unfused DuckDB form.
+  /** DuckDB form of the 32-bit shingle hash from the md5 hex prefix;
+    * value-identical to the fused [[graft.functions.Md5PrefixHash]]
+    * kernel (digest -> long, no hex string round-trip) the Spark side
+    * calls as `graft_h32a`.
     */
-  private def sparkH(v: String) = s"graft_h32($v)"
   private def duckH(v: String) =
     s"CAST('0x' || substr(md5($v), 1, 8) AS BIGINT)"
 
@@ -1437,7 +1437,6 @@ object Dedup extends QueryPack {
   private def ddSimhash(s: SparkSession, dir: String): DataFrame =
     simhashCore(s, dir).orderBy(col("doc_id"))
 
-  private def sparkH16(v: String) = s"graft_h16($v)"
   private def duckH16(v: String) =
     s"CAST('0x' || substr(md5($v), 1, 4) AS BIGINT)"
 

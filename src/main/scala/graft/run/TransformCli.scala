@@ -1,7 +1,6 @@
 package graft.run
 
-import org.apache.spark.sql.SparkSession
-
+import graft.Engine
 import graft.etl.{JiraTransform, JsonlSink}
 
 /** EP2 parity entry point (`python main.py --transform`, `main.py:98-192`):
@@ -23,14 +22,7 @@ object TransformCli {
 
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-transform")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-transform", cpus)
 
     val records = JiraTransform.transform(
       JiraTransform.readRawPages(spark, rawGlob))

@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole test JVM (Test / fork := true). */
+/** One shared local session for the whole test JVM (Test / fork := true),
+  * under the engine's static confs ([[Engine.StaticConfs]]).
+  */
 object SparkSessionHelper {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -11,7 +13,7 @@ object SparkSessionHelper {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+      .config(Engine.StaticConfs)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

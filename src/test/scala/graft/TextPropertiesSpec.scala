@@ -95,6 +95,37 @@ class TextPropertiesSpec extends AnyFunSuite {
     })
   }
 
+  test("the linear question scan finds exactly the regex's spans") {
+    // the reference: the regex form of the scan (`transformer.py`'s
+    // re.findall pattern, run with find())
+    val re = java.util.regex.Pattern.compile("([^.!?]+\\?)",
+      java.util.regex.Pattern.UNICODE_CHARACTER_CLASS)
+    def regexSpans(s: String): Seq[String] = {
+      val m = re.matcher(s)
+      val out = Seq.newBuilder[String]
+      while (m.find()) out += m.group(1)
+      out.result()
+    }
+    val longBlock = "at org.apache.hadoop.Foo(Foo.java:1) INFO x " * 60
+    val piece: Gen[String] = Gen.frequency(
+      6 -> Gen.oneOf("a", "Why", " ", "\t", "\n", "\r\n", "é"),
+      4 -> Gen.oneOf("?", "??", ".", "!", "...", "?!", "!?"),
+      2 -> Gen.oneOf("\uD83D\uDE00", "\uD835\uDD18", "x\uD83D\uDE00?"),
+      1 -> Gen.oneOf(longBlock, longBlock.replace(".", " ")))
+    val str = Gen.choose(0, 40).flatMap(n => Gen.listOfN(n, piece))
+      .map(_.mkString)
+    check("qa-scan", Prop.forAll(str) { s =>
+      Derive.questions(s) == regexSpans(s)
+    })
+    val unpunctuated = "log line without a terminator " * 400
+    for (s <- Seq("", "?", "??", "?!.??!", ".!?", "a?", "a??b?",
+        "\n?\n", "x\uD83D\uDE00?\uD83D\uDE00", unpunctuated,
+        unpunctuated + "?", "Q? " + unpunctuated + ". Why?"))
+      assert(Derive.questions(s) == regexSpans(s), s.take(40))
+    assert(Derive.questions("?!.??!").isEmpty)
+    assert(Derive.questions(unpunctuated + "?") == Seq(unpunctuated + "?"))
+  }
+
   test("validateIssue flags exactly the malformed timestamps") {
     val goodTs = "2025-01-15T12:34:56.000+0000"
     val badTs = Gen.oneOf("2025-01-15", "not-a-date", "2025/01/15T00:00:00")
