@@ -238,7 +238,7 @@ object Bench {
   /** Cumulative JVM stop-the-world GC time (ms). Per-query deltas are
     * the heap-weather channel: a wall/CPU spike at unchanged jobs AND
     * high gc is the JVM, not the plan (the r15 postmortem's missing
-    * evidence — see BENCHING.md). Shared with TimeOne so the dev tool
+    * evidence — see BENCHING.md). Shared with graft.Probe so the dev tool
     * and the bench can never report different GC accountings.
     */
   private[graft] def gcMsTotal(): Long = {

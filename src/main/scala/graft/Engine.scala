@@ -61,9 +61,9 @@ object Engine {
       .config(StaticConfs)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // deployment/bench face of the reliable-checkpoint escape hatch
-    // (see the lineage-truncation section below): lets every main
-    // (StoreCtl, Bench, TimeOne, Verify) engage it without code
+    GraftExtensions.attach(spark)
+    // deployment face of the reliable-checkpoint escape hatch (see the
+    // lineage-truncation section below): every main engages it unedited
     sys.env.get("GRAFT_CHECKPOINT_DIR")
       .foreach(d => spark.conf.set(CheckpointDirKey, d))
     spark

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -16,11 +16,11 @@ import graft.functions._
   *
   * Injects every graft kernel as a session-bound SQL function and the
   * TopKPerKey planner strategy at SESSION BUILD time — the front door
-  * Spark provides for libraries. The runtime-attach path
-  * ([[graft.functions.VectorFunctions.ensureRegistered]] via the
-  * package-bridge registry) stays for sessions the library did not
-  * create (a notebook user's existing session); both register the same
-  * builders, so either path yields the same query surface.
+  * Spark provides for libraries. Sessions the library did not build
+  * (a notebook user's existing session, `spark.newSession()`) get the
+  * same functions from [[GraftExtensions.attach]] where they enter the
+  * library; both iterate [[VectorFunctions.builders]], so either path
+  * yields the same function surface.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -30,12 +30,25 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo("graft.functions", name), builder)
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // the one canonical builder list — shared with the runtime-attach
-    // path, so the two front doors expose the identical function surface
+    // the one canonical builder list — shared with the runtime attach,
+    // so the two front doors expose the identical function surface
     VectorFunctions.builders.foreach { case (name, builder) =>
       ext.injectFunction(fn(name, builder))
     }
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
     ext.injectOptimizerRule(_ => graft.plans.WindowTopKRewrite)
   }
+}
+
+object GraftExtensions {
+  /** The runtime front door: binds every graft SQL function on `spark`.
+    * Idempotent and cheap (one registry lookup per name), so it runs
+    * wherever a session enters the library — [[Engine.session]], the
+    * [[SparkEntry.queries]] boundary, `StoreCtl.run` and the public
+    * stream builders — and operators assume an attached session.
+    */
+  def attach(spark: SparkSession): Unit =
+    VectorFunctions.builders.foreach { case (name, builder) =>
+      org.apache.spark.sql.GraftRegistry.register(spark, name, builder)
+    }
 }

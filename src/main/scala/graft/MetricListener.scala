@@ -4,7 +4,7 @@ import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 
 /** THE jobs/CPU/shuffle accumulator for the measurement mains (Bench,
-  * TimeOne, DevAb) — one copy of the attribution rules instead of one
+  * Probe, perfbench) — one copy of the attribution rules instead of one
   * hand-rolled listener per tool:
   *
   *   - executor CPU = `executorCpuTime + executorDeserializeCpuTime`

@@ -28,9 +28,17 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q04_multiway_join")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each entry
+    * attaches the graft functions to the caller's session first
+    * ([[GraftExtensions.attach]]), so a session the library did not
+    * build (a caller's own session, a `newSession()`) resolves them too.
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    packs.flatMap(_.queries).toMap
+    packs.flatMap(_.queries).toMap.map { case (name, q) =>
+      name -> { (s: SparkSession, dir: String) =>
+        GraftExtensions.attach(s); q(s, dir)
+      }
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.

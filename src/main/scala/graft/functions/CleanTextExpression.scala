@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
@@ -52,11 +51,4 @@ case class CleanTextExpression(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression)
       : CleanTextExpression = copy(child = newChild)
-}
-
-object CleanTextExpression {
-  /** Idempotent registration of `graft_clean_text` on any session. */
-  def ensureRegistered(spark: SparkSession): Unit =
-    org.apache.spark.sql.GraftRegistry.register(spark, "graft_clean_text",
-      (children: Seq[Expression]) => CleanTextExpression(children.head))
 }

@@ -1,6 +1,8 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.aggregate.ScalaAggregator
+import org.apache.spark.sql.expressions.{UserDefinedAggregator, UserDefinedFunction}
 
 /** Minimal bridge into the session's function registry, which is
   * `private[sql]`. Lives in Spark's package solely to expose temp-function
@@ -11,28 +13,29 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftRegistry {
   def register(spark: SparkSession, name: String,
                builder: Seq[Expression] => Expression): Unit = {
-    // Registration is per-session but ensureRegistered runs per QUERY
-    // CALL: an unconditional createOrReplaceTempFunction re-wrote the
-    // registry entry (and logged a SimpleFunctionRegistry "replaced"
-    // WARN) dozens of times per bench/test run. All graft names are
-    // namespaced (graft_*), so an existing binding can only be a
-    // previous call's identical builder — skip it.
+    // The attach runs wherever a session enters the library, so the
+    // same session is attached many times: an unconditional
+    // createOrReplaceTempFunction re-wrote the registry entry (and
+    // logged a SimpleFunctionRegistry "replaced" WARN) on every entry.
+    // All graft names are namespaced (graft_*), so an existing binding
+    // can only be a previous attach's identical builder — skip it.
     val registry = spark.sessionState.functionRegistry
     if (!registry.functionExists(
         org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
       registry.createOrReplaceTempFunction(name, builder, "scala_udf")
   }
 
-  /** Skip-if-bound guard for registrations that go through other
-    * front doors (`spark.udf.register` for UDAFs): same rationale as
-    * [[register]] — graft names are namespaced, so an existing
-    * binding is a previous call's identical registration.
+  /** A typed `Aggregator` (wrapped by `functions.udaf`) as a function
+    * builder: the `ScalaAggregator` that `spark.udf.register(name, udaf)`
+    * binds, but usable in a builder list, so an aggregate reaches a
+    * session through the same front doors as the graft expressions.
     */
-  def registerOnce(spark: SparkSession, name: String)
-                  (doRegister: => Unit): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-      doRegister
+  def aggregate(name: String, fn: UserDefinedFunction)
+      : Seq[Expression] => Expression = fn.withName(name) match {
+    case a: UserDefinedAggregator[_, _, _] => children => ScalaAggregator(a, children)
+    case other => throw new IllegalArgumentException(
+      s"$name: not an aggregator (${other.getClass.getSimpleName})")
+  }
 
   /** Wrap a custom logical plan back into the public DataFrame API
     * (`Dataset.ofRows` is `private[sql]`).

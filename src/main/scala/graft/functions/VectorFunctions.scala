@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -364,16 +363,15 @@ case class CosineSim(first: Expression, second: Expression,
       fourth = newFourth)
 }
 
-/** Registration of graft's native expressions on an arbitrary session
-  * (including one the harness created), via the catalyst registry shim.
-  */
+/** The graft SQL function surface, as one builder list. */
 object VectorFunctions {
   /** THE canonical (name -> builder) list for every graft SQL function.
-    * Both registration paths — [[ensureRegistered]] (runtime attach to
-    * an existing session) and [[graft.GraftExtensions]] (session-build
-    * injection via `spark.sql.extensions`) — iterate this single list,
-    * so the two paths cannot drift apart: a kernel added here is
-    * resolvable through either front door.
+    * Both front doors — [[graft.GraftExtensions.attach]] (runtime attach
+    * to a session where it enters the library) and
+    * [[graft.GraftExtensions]] (session-build injection via
+    * `spark.sql.extensions`) — iterate this single list, so the two
+    * paths cannot drift apart: a kernel added here is resolvable
+    * through either front door.
     */
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "graft_dot" -> (c => FloatDotProduct(c(0), c(1))),
@@ -387,6 +385,9 @@ object VectorFunctions {
     "graft_simhash16" -> (c => Simhash16(c(0))),
     "graft_simhash64" -> (c => Simhash64(c(0), c(1))),
     "graft_bloom_contains" -> (c => BloomContains(c(0), c(1))),
+    // the build side of graft_bloom_contains (q31, dd_incremental_bloom)
+    "graft_bloom_agg" -> org.apache.spark.sql.GraftRegistry
+      .aggregate("graft_bloom_agg", org.apache.spark.sql.functions.udaf(BloomAgg)),
     "graft_h16" -> (c => Md5PrefixHash(c(0), 4)),
     "graft_h32" -> (c => Md5PrefixHash(c(0), 8)),
     "graft_h64" -> (c => Md5PrefixHash(c(0), 15)),
@@ -399,17 +400,7 @@ object VectorFunctions {
     "graft_word8grams" -> (c => WordNgrams(c(0), 8)),
     "graft_char3grams" -> (c => CharNgrams(c(0), 3)),
     "graft_char5grams" -> (c => CharNgrams(c(0), 5)),
-    // the ETL state machine's codegen face — in THIS list (not only
-    // CleanTextExpression.ensureRegistered) so a session built with
-    // spark.sql.extensions=graft.GraftExtensions resolves it too: the
-    // side-door-only registration was exactly the two-paths-drift the
-    // list exists to prevent
+    // the ETL state machine's codegen face (etl_clean_docs)
     "graft_clean_text" -> (c => CleanTextExpression(c.head))
   )
-
-  /** Idempotent: makes graft's native expressions resolvable in SQL. */
-  def ensureRegistered(spark: SparkSession): Unit =
-    builders.foreach { case (name, builder) =>
-      org.apache.spark.sql.GraftRegistry.register(spark, name, builder)
-    }
 }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 
 import graft.Engine._
 import graft.QueryPack
-import graft.functions.VectorFunctions
 
 /** Deduplication operators over the `documents` / `embeddings` tables:
   * exact (hash group-by), n-gram Jaccard (inverted-index join), MinHash +
@@ -276,7 +275,6 @@ object Dedup extends QueryPack {
     */
   private def bandedSigRelation(s: SparkSession, dir: String,
                                 view: String): String = {
-    VectorFunctions.ensureRegistered(s)
     val sigs = jacSigsOf(table(s, dir, "documents")).cache()
     sigs.createOrReplaceTempView(view)
     trackCached(s, dir, sigs)
@@ -1002,7 +1000,6 @@ object Dedup extends QueryPack {
   // INDEPENDENT all-pairs formulation (no banding), so this row also
   // gates banding recall at the 0.6 threshold, like dd_jaccard's.
   private def ddIncremental(s: SparkSession, dir: String): DataFrame = {
-    VectorFunctions.ensureRegistered(s)
     val incSigs = table(s, dir, "documents")
       .selectExpr("doc_id", "md5(text) AS th",
         "cast(substring(source, 4) as int) >= 10 AS is_new",
@@ -1063,11 +1060,6 @@ object Dedup extends QueryPack {
   // collision only adds a false positive, which the th equality then
   // discards.
   private def ddIncrementalBloom(s: SparkSession, dir: String): DataFrame = {
-    VectorFunctions.ensureRegistered(s) // graft_bloom_contains et al.
-    org.apache.spark.sql.GraftRegistry.registerOnce(s, "graft_bloom_agg") {
-      s.udf.register("graft_bloom_agg", udaf(graft.functions.BloomAgg))
-      ()
-    }
     val incbSigs = table(s, dir, "documents")
       .selectExpr("doc_id", "md5(text) AS th",
         "cast(substring(source, 4) as int) >= 10 AS is_new",
@@ -1289,7 +1281,6 @@ object Dedup extends QueryPack {
     * pass would. Input columns: doc_id, ts, text.
     */
   private[graft] def bandRows(docs: DataFrame): DataFrame = {
-    VectorFunctions.ensureRegistered(docs.sparkSession)
     val bandCols = (0 until Bands).map(b =>
       s"struct($b AS band, ${bandKeySpark(b)} AS bkey)")
     docs
@@ -1333,7 +1324,6 @@ object Dedup extends QueryPack {
 
   /** documents -> (doc_id, ghs: array<bigint>) hashed-shingle pipeline. */
   private def sigInput(s: SparkSession, dir: String): DataFrame = {
-    VectorFunctions.ensureRegistered(s)
     table(s, dir, "documents")
       .selectExpr("doc_id", "split(text, ' ') AS toks")
       .selectExpr("doc_id", s"$sparkGrams AS grams")
@@ -1427,7 +1417,6 @@ object Dedup extends QueryPack {
   // (graft_simhash16); integer addition is order-independent, so the
   // unfused per-bit DuckDB formulation below is value-identical.
   private def simhashCore(s: SparkSession, dir: String): DataFrame = {
-    VectorFunctions.ensureRegistered(s)
     table(s, dir, "documents")
       .selectExpr("doc_id", "split(text, ' ') AS toks")
       .selectExpr("doc_id", "graft_h16a(toks) AS hts")
@@ -1514,7 +1503,6 @@ object Dedup extends QueryPack {
   // two's-complement-safe: the mask keeps only low bits, so arithmetic
   // vs logical shift cannot differ.
   private def ddSimhash64(s: SparkSession, dir: String): DataFrame = {
-    VectorFunctions.ensureRegistered(s)
     val sims = table(s, dir, "documents")
       .selectExpr("doc_id", "split(text, ' ') AS toks")
       .selectExpr("doc_id",
@@ -1677,7 +1665,6 @@ object Dedup extends QueryPack {
     * spec, like sim_topk_brute.
     */
   private def ddEmbedExactPairs(s: SparkSession, dir: String): DataFrame = {
-    VectorFunctions.ensureRegistered(s)
     val e = table(s, dir, "embeddings")
       .selectExpr("vec_id", "embedding",
         "graft_dot(embedding, embedding) AS n2")
@@ -1731,7 +1718,6 @@ object Dedup extends QueryPack {
     * so probe and index can never band differently.
     */
   private def ensureCosE(s: SparkSession, dir: String): String = {
-    VectorFunctions.ensureRegistered(s)
     val v = cview("cos_e", dir)
     // cached: the bucketed relation feeds all 12 band sides and both
     // re-score join-backs — the 60 hyperplane folds run once per
@@ -1851,7 +1837,6 @@ object Dedup extends QueryPack {
     */
   private[graft] def embedLshCandidates(emb: DataFrame, bands: Int,
                                         rows: Int): DataFrame = {
-    VectorFunctions.ensureRegistered(emb.sparkSession)
     val bandsDf = emb
       .selectExpr("vec_id", "embedding",
         s"graft_rh_buckets_n(embedding, $bands, $rows) AS bks")
@@ -1988,18 +1973,9 @@ object Dedup extends QueryPack {
     * once the loop drops its references.
     */
   /** Propagate+shortcut passes folded into each LP round's single
-    * checkpoint job (override with GRAFT_LP_PASSES for measurement).
-    * See the round-loop comment for the measured trade.
+    * checkpoint job. See the round-loop comment for the measured trade.
     */
-  private val LpPassesPerRound = {
-    val p = sys.env.getOrElse("GRAFT_LP_PASSES", "2").toInt
-    // 0 would make every round after the first a no-op whose
-    // convergence tap sees prev == cluster_id — the loop would
-    // "converge" immediately and hand back under-propagated clusters
-    // silently; fail loudly instead
-    require(p >= 1, s"GRAFT_LP_PASSES must be >= 1, got $p")
-    p
-  }
+  private val LpPassesPerRound = 2
 
   /** A prepared LP edge structure: the symmetric closure, hash-
     * partitioned by the neighbor-join key and checkpointed (see the
@@ -2016,8 +1992,6 @@ object Dedup extends QueryPack {
     */
   private def prepLpEdges(session: SparkSession, pairs: => DataFrame,
                           defaultP: Int): LpEdges = {
-    val lpDebug = sys.env.contains("GRAFT_LP_DEBUG")
-    val tE = System.nanoTime()
     // Both checkpointed frames are exactly two BIGINT columns per
     // edge — any column the pair pipeline carried (cos_sim, band,
     // shingle sets) is projected away by the caller, so the
@@ -2055,8 +2029,6 @@ object Dedup extends QueryPack {
       .repartition(loopP, col("dst"))
       .sortWithinPartitions(col("dst"))
       .truncated()
-    if (lpDebug) System.err.println(
-      f"LP edges took ${(System.nanoTime() - tE) / 1e9}%.2f s")
     LpEdges(edgesBoth, nEdges, loopP)
   }
 
@@ -2088,11 +2060,7 @@ object Dedup extends QueryPack {
     *     watch the filesystem, so staleness is the CALLER's contract,
     *     exactly like Spark's own `REFRESH TABLE`.
     */
-  private val LpEdgeCacheMax: Int = {
-    val m = sys.env.getOrElse("GRAFT_LP_EDGE_CACHE_MAX", "8").toInt
-    require(m >= 1, s"GRAFT_LP_EDGE_CACHE_MAX must be >= 1, got $m")
-    m
-  }
+  private val LpEdgeCacheMax = 8
 
   /** Generic bounded, invalidatable, session-bound registry of
     * materialized frames — the lifecycle mechanics behind the shared
@@ -2272,9 +2240,8 @@ object Dedup extends QueryPack {
     builderViews.foreach(session.catalog.dropTempView)
   }
 
-  /** Test/A-B hook: drop ALL shared frames (TimeOne's GRAFT_LP_COLD=1
-    * uses this between reps to measure LP consumers cold; see
-    * BENCHING.md).
+  /** Test/A-B hook: drop ALL shared frames (`Probe time --cold` uses
+    * this between reps to measure LP consumers cold; see BENCHING.md).
     */
   private[graft] def clearLpEdgeCache(): Unit = {
     lpEdgeCache.clear()
@@ -2299,8 +2266,8 @@ object Dedup extends QueryPack {
     * filter rides every reference, so the round's DRIVER planning
     * cost balloons — vs 5 rounds, no tail, with full passes; the
     * frontier-restricted pointer-jump also skips shortcuts, hence the
-    * extra round). The global GRAFT_LP_FRONTIER=0 escape still wins
-    * over a `frontier = true` call for A/B runs.
+    * extra round). LpFrontierSpec holds the two paths to identical
+    * fixed points.
     */
   private[graft] def labelPropagate(op: String,
                                     pairs: => DataFrame,
@@ -2308,17 +2275,6 @@ object Dedup extends QueryPack {
                                     shareKey: Option[String] = None,
                                     frontier: Boolean = true)
       : DataFrame = {
-    val lpDebug = sys.env.contains("GRAFT_LP_DEBUG")
-    // Semi-naive (frontier) rounds are the default; GRAFT_LP_FRONTIER=0
-    // (or the system property, which wins — it's what lets
-    // LpFrontierSpec flip paths in-process) restores full passes for
-    // A/B measurement (LpFrontierSpec holds the two paths to identical
-    // fixed points).
-    val frontierOn = frontier && sys.props.get("graft.lp.frontier")
-      .orElse(sys.env.get("GRAFT_LP_FRONTIER"))
-      .getOrElse("1") != "0"
-    def stamp(what: String, t0: Long): Unit = if (lpDebug)
-      System.err.println(f"LP $what took ${(System.nanoTime() - t0) / 1e9}%.2f s")
     // The edge list is localCheckpoint'd (eager), not cached: every round
     // references it, and a checkpoint both materializes the (possibly
     // expensive) pair pipeline exactly once AND collapses its logical
@@ -2469,26 +2425,25 @@ object Dedup extends QueryPack {
       // ever needing reach (shallow graphs: dd_cluster compounded
       // round 0 cost +5 CPU-s at sf0.1 and saved nothing). Hence
       // adaptive: round 0 single, chain-tail rounds compounded.
-      // GRAFT_LP_PASSES=1 restores hop-per-round everywhere for
-      // quiet-box wall runs; deeper than two grows the duplicated
-      // subtree 3x per pass for one fewer barrier — measured slower
-      // everywhere.
+      // One pass per round (hop-per-round everywhere) suits quiet-box
+      // wall runs; deeper than two grows the duplicated subtree 3x per
+      // pass for one fewer barrier — measured slower everywhere.
       val seeded = labels.select(col("doc_id"),
         col("cluster_id").as("prev"), col("cluster_id"))
       val passes = if (iter == 0) 1 else LpPassesPerRound
-      // Round 0 and the GRAFT_LP_FRONTIER=0 escape hatch run full
-      // passes; later rounds run semi-naive, seeding pass 1's frontier
+      // Round 0 and `frontier = false` calls run full passes; later
+      // rounds run semi-naive, seeding pass 1's frontier
       // from the previous round's checkpointed step (prev there is
       // that round's start label, so the filter is changed-during-
       // round — a superset of changed-in-last-pass, which is all
       // soundness needs) and pass 2's from pass 1's unmaterialized
       // output (changed-since-round-start = changed-in-pass-1).
       var stepPlan = seeded
-      var frontier: Option[DataFrame] =
-        if (iter == 0 || !frontierOn) None else Some(mkFrontier(lastStep))
+      var front: Option[DataFrame] =
+        if (iter == 0 || !frontier) None else Some(mkFrontier(lastStep))
       for (_ <- 1 to passes) {
-        stepPlan = onePass(stepPlan, frontier)
-        if (frontier.isDefined) frontier = Some(mkFrontier(stepPlan))
+        stepPlan = onePass(stepPlan, front)
+        if (front.isDefined) front = Some(mkFrontier(stepPlan))
       }
       // localCheckpoint EVERY round (eager). This is lineage control, not
       // caching: step N's logical plan embeds TWO copies of step N-1's
@@ -2510,19 +2465,17 @@ object Dedup extends QueryPack {
       // the contended-box floor is ~1-2 s per job regardless of data).
       // Task retries can only over-count — rows that DID change counted
       // twice — never under-count, so `changed == 0` stays exact: a
-      // benign extra round in the worst case, and only on retry.
+      // benign extra round in the worst case, and only on retry. The
+      // accumulator is named, so `graft.Probe stages` prints each
+      // round's changed count on the line of the stage that ran it.
       val acc = session.sparkContext.longAccumulator(s"$op-lp-changed-$iter")
       val tapped = stepPlan.as[(Long, Long, Long)]
         .mapPartitions { it =>
           it.map { r => if (r._2 != r._3) acc.add(1L); r }
         }
         .toDF("doc_id", "prev", "cluster_id")
-      val tCk = System.nanoTime()
       val step = tapped.truncated()
-      stamp(s"checkpoint $iter", tCk)
       val changed = acc.value
-      if (lpDebug)
-        System.err.println(s"LP round $iter changed=$changed")
       lastStep = step
       labels = step.drop("prev")
       converged = changed == 0

@@ -89,7 +89,6 @@ object JiraEtl extends QueryPack {
   // restates the cross-line state machine as a list_reduce struct fold
   // (see cleanDocsSql below).
   private def etlCleanDocs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.CleanTextExpression.ensureRegistered(s)
     graft.Engine.table(s, dir, "documents")
       .selectExpr("doc_id",
         "graft_clean_text(text) AS cleaned",

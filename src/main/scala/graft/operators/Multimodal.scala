@@ -188,7 +188,6 @@ object Multimodal extends QueryPack {
   // aggregation carries only small derived values (norms), never the
   // payloads.
   private def mmEmbedJoin(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(s)
     table(s, dir, "documents")
       .join(table(s, dir, "embeddings"), col("doc_id") === col("vec_id"))
       .selectExpr("lang", "label",

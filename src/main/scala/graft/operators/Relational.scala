@@ -740,7 +740,6 @@ object Relational extends QueryPack {
   // show the sketch's error on real data.
   private def q30(s: SparkSession, dir: String): DataFrame = {
     val kmv = udaf(graft.functions.KmvDistinct)
-    graft.functions.VectorFunctions.ensureRegistered(s)
     table(s, dir, "lineitem")
       .selectExpr("l_returnflag", "l_partkey",
         // fused md5-prefix kernel (see Md5PrefixHash) — same value as
@@ -778,11 +777,6 @@ object Relational extends QueryPack {
   // re-checked by the join), which is exactly why the DuckDB oracle is
   // the PLAIN join — an independent spec, not a mirror of the bloom.
   private def q31(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(s)
-    org.apache.spark.sql.GraftRegistry.registerOnce(s, "graft_bloom_agg") {
-      s.udf.register("graft_bloom_agg", udaf(graft.functions.BloomAgg))
-      ()
-    }
     table(s, dir, "orders").where("o_totalprice > 480000")
       .createOrReplaceTempView("bj_dims")
     table(s, dir, "lineitem").createOrReplaceTempView("bj_lineitem")

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 
 import graft.Engine._
 import graft.QueryPack
-import graft.functions.VectorFunctions
 
 /** Similarity-search operators over the `embeddings` table
   * (`vec_id: bigint, embedding: array<float>, label: int`):
@@ -54,7 +53,6 @@ object Similarity extends QueryPack {
 
   // -- sim_norms: per-vector statistics ---------------------------------------
   private def simNorms(s: SparkSession, dir: String): DataFrame = {
-    VectorFunctions.ensureRegistered(s)
     table(s, dir, "embeddings")
       .selectExpr("vec_id", "label",
         "cast(size(embedding) as bigint) AS dim",
@@ -71,7 +69,6 @@ object Similarity extends QueryPack {
 
   // -- sim_topk_brute: exact cosine top-5 for the first 8 query vectors -------
   private def simTopkBrute(s: SparkSession, dir: String): DataFrame = {
-    VectorFunctions.ensureRegistered(s)
     table(s, dir, "embeddings")
       .selectExpr("vec_id", "embedding",
         s"${dotS("embedding", "embedding")} AS n2")
@@ -117,7 +114,6 @@ object Similarity extends QueryPack {
   // here: 8 fixed queries x corpus is linear work, unlike the labeled
   // all-pairs spec oracles.
   private def simRangeSearch(s: SparkSession, dir: String): DataFrame = {
-    VectorFunctions.ensureRegistered(s)
     table(s, dir, "embeddings")
       .selectExpr("vec_id", "embedding",
         s"${dotS("embedding", "embedding")} AS n2")
@@ -157,7 +153,6 @@ object Similarity extends QueryPack {
   // sim_range_search: one corpus scan, windows partitioned per query,
   // nothing global.
   private def simNegatives(s: SparkSession, dir: String): DataFrame = {
-    VectorFunctions.ensureRegistered(s)
     table(s, dir, "embeddings")
       .selectExpr("vec_id", "embedding",
         s"${dotS("embedding", "embedding")} AS n2")
@@ -221,7 +216,6 @@ object Similarity extends QueryPack {
 
   // -- sim_lsh_buckets: bucket histogram --------------------------------------
   private def simLshBuckets(s: SparkSession, dir: String): DataFrame = {
-    VectorFunctions.ensureRegistered(s)
     table(s, dir, "embeddings")
       .selectExpr("vec_id", s"${bucketExpr(planeDotS)} AS bucket")
       .groupBy(col("bucket"))
@@ -239,7 +233,6 @@ object Similarity extends QueryPack {
   // The ANN scale path: only pairs sharing an LSH bucket are scored, so the
   // join is bucket-partitioned instead of a full cross product.
   private def simLshAnn(s: SparkSession, dir: String): DataFrame = {
-    VectorFunctions.ensureRegistered(s)
     // bucket equi-join generates the candidates; the pair projection is
     // persisted before the threshold filter (see Dedup.ddEmbedCosine for
     // the pushdown rationale)
@@ -314,7 +307,6 @@ object Similarity extends QueryPack {
        |  AND cb.vec_id <> qb.vec_id""".stripMargin
 
   private def registerRecallView(s: SparkSession, dir: String): Unit = {
-    VectorFunctions.ensureRegistered(s)
     // cached + tracked: the recall SQL scans this view ~6 times (qb/cb
     // in the candidate join, q/c in both top-5 sides) and Spark
     // inlines views, so an uncached projection re-runs the 8-plane
@@ -403,7 +395,6 @@ object Similarity extends QueryPack {
   // Centroids = vectors 0..3 (stand-in for a k-means codebook); each vector
   // goes to the centroid with max rounded cosine (ties -> lower centroid id).
   private def simIvfAssign(s: SparkSession, dir: String): DataFrame = {
-    VectorFunctions.ensureRegistered(s)
     table(s, dir, "embeddings")
       .selectExpr("vec_id", "embedding",
         s"${dotS("embedding", "embedding")} AS n2")
@@ -447,7 +438,6 @@ object Similarity extends QueryPack {
   private[graft] val IvfQ = 492
 
   private def simIvfProbe(s: SparkSession, dir: String): DataFrame = {
-    VectorFunctions.ensureRegistered(s)
     trackCached(s, dir, table(s, dir, "embeddings")
       .selectExpr("vec_id", "embedding",
         s"${dotS("embedding", "embedding")} AS n2")
@@ -510,7 +500,6 @@ object Similarity extends QueryPack {
 
   // -- sim_knn_label: 5-NN majority-label vote for held-out queries -----------
   private def simKnnLabel(s: SparkSession, dir: String): DataFrame = {
-    VectorFunctions.ensureRegistered(s)
     val base = table(s, dir, "embeddings")
       .selectExpr("vec_id", "label", "embedding",
         s"${dotS("embedding", "embedding")} AS n2")
@@ -1064,7 +1053,6 @@ object Similarity extends QueryPack {
   private[graft] def trainIvfPq(s: SparkSession, dir: String,
                                 kCells: Int = KmK,
                                 trainWhere: String = ""): IvfPqModel = {
-    VectorFunctions.ensureRegistered(s)
     // Optional training restriction (sim_ivfpq_fold_stored trains its
     // generation-0 codebooks on the first candidate half): the Lloyd
     // statistics AND the emitted code table narrow to the matching
@@ -1140,7 +1128,6 @@ object Similarity extends QueryPack {
   }
 
   private def registerServing(s: SparkSession, dir: String): IvfPqModel = {
-    VectorFunctions.ensureRegistered(s)
     purgeDeadSessions()
     val model = cachedModel(s, dir)
     registerServingViews(s, dir, model)
@@ -1226,7 +1213,6 @@ object Similarity extends QueryPack {
     * provably serve the SAME persisted index.
     */
   private[graft] def ensureIvfPqStore(s: SparkSession, dir: String): String = {
-    VectorFunctions.ensureRegistered(s)
     purgeDeadSessions()
     // the ONE scratch-naming idiom (StoreFiles.scratchDir) — this was
     // its fourth inline copy; a normalization fix there must reach the
@@ -1277,7 +1263,6 @@ object Similarity extends QueryPack {
   private[graft] def ivfPqEncode(s: SparkSession, dir: String,
                                  model: IvfPqModel,
                                  where: String): DataFrame = {
-    VectorFunctions.ensureRegistered(s)
     val codeCols = (0 until PqM).map { m =>
       s"${argminS(ipqSliceS(m), model.codebooks(m))} AS code_$m"
     }
@@ -1403,7 +1388,6 @@ object Similarity extends QueryPack {
   // hash-verifies cross-engine against the self-contained
   // train-narrowed oracle.
   private def simAnnRecallStored(s: SparkSession, dir: String): DataFrame = {
-    VectorFunctions.ensureRegistered(s)
     annRecallStoredFrame(s, dir,
       IvfPqStore.load(s, ensureIvfPqGenChain(s, dir)))
   }
@@ -1518,7 +1502,6 @@ object Similarity extends QueryPack {
   // serve fails it) lives in AnnRecallGlobalSpec; this key keeps the
   // same measurement continuously verified on the driver data.
   private def simAnnRecallGlobal(s: SparkSession, dir: String): DataFrame = {
-    VectorFunctions.ensureRegistered(s)
     annRecallGlobalFrame(s, dir,
       IvfPqStore.load(s, ensureIvfPqGenChain(s, dir)))
   }
@@ -1654,7 +1637,6 @@ object Similarity extends QueryPack {
        |ORDER BY rep.query_id""".stripMargin
 
   private def simIvfPqFoldStored(s: SparkSession, dir: String): DataFrame = {
-    VectorFunctions.ensureRegistered(s)
     val store = ensureIvfPqOldStore(s, dir)
     val prior = IvfPqStore.load(s, store)
     // the measured add: encode everything past the training half with
@@ -1803,7 +1785,6 @@ object Similarity extends QueryPack {
     */
   private[graft] def annServeCandidates(queries: DataFrame,
                                         model: IvfPqModel): DataFrame = {
-    VectorFunctions.ensureRegistered(queries.sparkSession)
     val sorted = model.cents.sortBy(_._1)
     val cellsArr = sorted.map { case (c, _) => s"${c}L" }
       .mkString("array(", ",", ")")

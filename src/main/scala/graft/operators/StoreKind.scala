@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Engine._
-import graft.functions.VectorFunctions
 
 /** One persistent store kind — a row of the [[StoreKind.all]] table
   * that the build/fold/serve path ([[BandedStore]]), the streaming
@@ -346,7 +345,6 @@ private[graft] object BandedStore {
     */
   def build(k: Banded, s: SparkSession, dir: String, store: String,
             pred: String = ""): Unit = {
-    VectorFunctions.ensureRegistered(s)
     val v = (sfx: String) => storeView(k.tag + "st", store, sfx)
     val sigs = k.sigs(s, dir,
       if (pred.isEmpty) k.oldPred(s, dir) else pred).cache()
@@ -397,7 +395,6 @@ private[graft] object BandedStore {
                 newPred: String = ""): (DataFrame, DataFrame) = {
     val verify = k.verify.get
     val v = (sfx: String) => storeView(k.tag + "fo", store, sfx)
-    VectorFunctions.ensureRegistered(s)
     // localCheckpoint (EAGER), not cache: the relation feeds every band
     // side, both verify join-backs and the node list inside ONE edge
     // job, and a lazy cache populating mid-job let the racing scans

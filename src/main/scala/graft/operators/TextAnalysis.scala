@@ -174,7 +174,6 @@ object TextAnalysis extends QueryPack {
   // chars where Spark's descending sequence(1, 0) would emit bogus
   // grams). KernelDifferentialSpec pins kernel == HOF.
   private def txtTrigrams(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(s)
     val w = Window.partitionBy(col("lang"))
       .orderBy(col("cnt").desc, col("gram"))
     table(s, dir, "documents")
@@ -366,7 +365,6 @@ object TextAnalysis extends QueryPack {
   // kernel == HOF on the corpus). Chunk rows explode with their index,
   // and only (doc_id, idx, start, len, digest) flow on — never the text.
   private def txtCdcChunks(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(s)
     table(s, dir, "documents")
       .selectExpr("doc_id", "text", "length(text) AS n")
       .filter("n >= 1")
@@ -903,7 +901,6 @@ object TextAnalysis extends QueryPack {
   // one 0.2-CPU stage). The exploded frame is cached: both aggregates
   // scan it (the uncached-twice gotcha).
   private def txtNovelty(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(s)
     val grams = table(s, dir, "documents")
       .selectExpr("doc_id", "split(text, ' ') AS toks")
       .where("size(toks) >= 8")
@@ -1049,7 +1046,6 @@ object TextAnalysis extends QueryPack {
   // pass, no shuffle; the fingerprint arrays are what a downstream
   // inverted-index join would bucket on.
   private def txtWinnow(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(s)
     table(s, dir, "documents")
       .selectExpr("doc_id",
         "CASE WHEN length(text) >= 8 THEN" +

@@ -141,7 +141,7 @@ object StoreCtl {
     */
   private[graft] def run(spark: SparkSession,
                          args: Seq[String]): Either[String, String] =
-    try dispatch(spark, args)
+    try { graft.GraftExtensions.attach(spark); dispatch(spark, args) }
     catch {
       case e @ (_: IllegalArgumentException | _: IllegalStateException |
                 _: java.io.IOException) =>
@@ -262,7 +262,6 @@ object StoreCtl {
               java.nio.file.Paths.get(cur, "model.json")))
             return Left(s"$cur is not an ivfpq generation (no " +
               "model.json) — recall measures the IVF-PQ kind")
-          graft.functions.VectorFunctions.ensureRegistered(spark)
           val model = Similarity.IvfPqStore.load(spark, cur)
           val report = Similarity
             .annRecallStoredFrame(spark, corpus, model)

@@ -374,6 +374,7 @@ object Streams {
                     horizonNs: Long = 30L * 60 * 1000000000L,
                     metrics: Option[DisorderMetrics] = None)
       : Dataset[BandMatch] = {
+    graft.GraftExtensions.attach(docs.sparkSession)
     import docs.sparkSession.implicits._
     // serialize only the accumulator into the state closure
     val absorbedAcc = metrics.map(_.absorbed)
@@ -505,7 +506,7 @@ object Streams {
                                  metrics: Option[DisorderMetrics])
       : DataFrame = {
     val s = in.sparkSession
-    graft.functions.VectorFunctions.ensureRegistered(s)
+    graft.GraftExtensions.attach(s)
     val oldBands = staticSide(graft.operators.StoreFiles
       .readRelChain(s, store, "bands")
       .toDF("owner_id", "band", k.key))
@@ -582,6 +583,7 @@ object Streams {
                      metrics: Option[DisorderMetrics] = None)
       : Dataset[AnnHit] = {
     val s = queries.sparkSession
+    graft.GraftExtensions.attach(s)
     import s.implicits._
     val loaded = graft.operators.Similarity.IvfPqStore.load(s, store)
     // the code table is the stream-static join's static side — cached

@@ -84,7 +84,6 @@ class AnnRecallGlobalSpec extends AnyFunSuite {
       "the declared 0.9 floor on planted clusters, and a mis-probed " +
       "serve fails it") {
     val s = spark
-    graft.functions.VectorFunctions.ensureRegistered(s)
     // pointer-served DELTA chain: even half self-contained (covers
     // the coarse seeds 0..3), odd half increment-only
     val root = new java.io.File(

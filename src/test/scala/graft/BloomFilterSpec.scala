@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions.udaf
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{BloomAgg, BloomFns}
@@ -75,12 +74,6 @@ class BloomFilterSpec extends AnyFunSuite {
   }
 
   test("scan-side pruning actually drops rows before the join at sf0.001") {
-    org.apache.spark.sql.GraftRegistry.registerOnce(spark,
-      "graft_bloom_agg") {
-      spark.udf.register("graft_bloom_agg", udaf(BloomAgg))
-      ()
-    }
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val li = Engine.table(spark, dir, "lineitem")
     val dims = Engine.table(spark, dir, "orders")
       .where("o_totalprice > 480000")

@@ -211,7 +211,6 @@ class ChainAlignedSpec extends AnyFunSuite {
       Seq("vec_id % 3 = 0", "vec_id % 3 = 1", "vec_id % 3 = 2"))
     val cur = StoreFiles.serve(root).toOption.get
     assert(StoreFiles.chainPaths(cur).exists(_.length == 3))
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val queries = Engine.table(spark, dir, "embeddings")
       .where(s"vec_id >= ${graft.operators.Similarity.IvfQ}")
       .selectExpr("vec_id", "cast(1 as bigint) AS ts", "embedding")

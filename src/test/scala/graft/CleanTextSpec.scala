@@ -113,7 +113,6 @@ class CleanTextSpec extends AnyFunSuite {
 
   test("graft_clean_text expression matches CleanText on a DataFrame") {
     val spark = SparkSessionHelper.spark
-    graft.functions.CleanTextExpression.ensureRegistered(spark)
     import spark.implicits._
     val samples = Seq(
       "  Hello  World  ",

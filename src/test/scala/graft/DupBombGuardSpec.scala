@@ -359,7 +359,6 @@ class DupBombGuardSpec extends AnyFunSuite {
     // a scaled copy + two distinct + two zero vectors) and demand
     // exact row-sequence equality with the production frame.
     val s = spark
-    graft.functions.VectorFunctions.ensureRegistered(s)
     Engine.table(s, dir, "embeddings").createOrReplaceTempView("lpb_emb")
     val ref = s.sql(
       """WITH e AS (

@@ -3,9 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.BloomAgg
+
 /** The builder-time extension entry point: a session built with
   * `withExtensions(new GraftExtensions)` has every graft_* function and
-  * the TopKPerKey strategy WITHOUT any runtime ensureRegistered call.
+  * the TopKPerKey strategy WITHOUT any runtime attach call.
   */
 class GraftExtensionsSpec extends AnyFunSuite {
 
@@ -36,6 +38,15 @@ class GraftExtensionsSpec extends AnyFunSuite {
       graft.functions.VectorFunctions.builders.foreach { case (name, _) =>
         assert(s2.catalog.functionExists(name), s"$name not injected")
       }
+      // the aggregate builds through the same list: graft_bloom_agg
+      // resolves and folds 0..99 into the bits BloomAgg folds locally
+      val bits = s2.sql("SELECT graft_bloom_agg(id) FROM range(100)")
+        .collect()(0).getSeq[Long](0)
+      val expect = (0L until 100L).foldLeft(BloomAgg.zero)(
+        (b, k) => BloomAgg.reduce(b, Long.box(k)))
+      assert(bits == expect.toSeq)
+      assert(s2.sql("SELECT graft_bloom_contains((SELECT " +
+        "graft_bloom_agg(id) FROM range(100)), 42L)").collect()(0).getBoolean(0))
       assert(s2.sessionState.planner.strategies
         .contains(graft.plans.TopKPerKeyStrategy))
       // the injected optimizer rule retargets the plain window-top-k

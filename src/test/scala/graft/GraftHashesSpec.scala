@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.SparkException
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.VectorFunctions
 
 /** Defensive-input contract of the fused sketch kernels
   * (functions/GraftHashExpressions.scala): the call sites feed dense
@@ -17,7 +16,6 @@ import graft.functions.VectorFunctions
 class GraftHashesSpec extends AnyFunSuite {
 
   private val spark = SparkSessionHelper.spark
-  VectorFunctions.ensureRegistered(spark)
 
   private def one(expr: String): Any =
     spark.sql(s"SELECT $expr AS v").collect()(0).get(0)

@@ -4,7 +4,6 @@ import scala.util.Random
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.VectorFunctions
 
 /** The broadcast-codebook quantization kernels (`graft_argmin_cell`,
   * `graft_dist_lut`) at a PRODUCTION cell count. The literal-argmin SQL
@@ -20,7 +19,6 @@ import graft.functions.VectorFunctions
 class IvfPqKernelSpec extends AnyFunSuite {
 
   private val spark = SparkSessionHelper.spark
-  VectorFunctions.ensureRegistered(spark)
   import spark.implicits._
 
   private val rnd = new Random(20260814L)

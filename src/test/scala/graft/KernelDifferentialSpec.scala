@@ -4,7 +4,6 @@ import scala.util.Random
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.VectorFunctions
 
 /** Differential testing of the fused codegen kernels against the unfused
   * higher-order-function formulations they replaced (the formulations the
@@ -16,7 +15,6 @@ import graft.functions.VectorFunctions
 class KernelDifferentialSpec extends AnyFunSuite {
 
   private val spark = SparkSessionHelper.spark
-  VectorFunctions.ensureRegistered(spark)
   import spark.implicits._
 
   private val rnd = new Random(20260812L)

@@ -15,7 +15,7 @@ import graft.operators.Dedup
   *   2. INVALIDATION — [[Dedup.invalidateLpEdges]] drops exactly that
   *      corpus dir's entries, and the next consumer rebuilds over the
   *      CURRENT pair data (the rewritten-dir staleness hook).
-  *   3. BOUND — the registry holds at most GRAFT_LP_EDGE_CACHE_MAX
+  *   3. BOUND — the registry holds at most Dedup's LpEdgeCacheMax (8)
   *      entries, evicting least-recently-used, so a long-lived session
   *      touring many corpora cannot pin unbounded checkpoint blocks.
   */
@@ -112,8 +112,7 @@ class LpEdgeCacheSpec extends AnyFunSuite {
   test("bound: the registry is LRU-capped, never unbounded") {
     Dedup.clearLpEdgeCache()
     val builds = new java.util.concurrent.atomic.AtomicInteger
-    val cap = 8 // GRAFT_LP_EDGE_CACHE_MAX default; env overrides are
-                // a measurement-only knob, not set under sbt test
+    val cap = 8 // Dedup's LpEdgeCacheMax
     (0 to cap).foreach { i =>
       run(s"lpspec_cap|/tmp/lpspec_corpus_$i", builds, Seq((1L, 2L)))
     }

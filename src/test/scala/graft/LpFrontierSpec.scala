@@ -45,12 +45,13 @@ class LpFrontierSpec extends AnyFunSuite {
     allNodes.map(n => n -> find(n)).toMap
   }
 
-  private def propagate(): Map[Long, Long] = {
+  private def propagate(frontier: Boolean = true): Map[Long, Long] = {
     val pairs = allEdges.toDF("pa", "pb")
       // shuffle the edge order so no pass benefits from input order
       .orderBy(xxhash64(col("pa"), col("pb")))
     val nodes = allNodes.toDF("doc_id")
-    Dedup.labelPropagate("lp_frontier_spec", pairs, nodes)
+    Dedup.labelPropagate("lp_frontier_spec", pairs, nodes,
+      frontier = frontier)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
@@ -60,9 +61,7 @@ class LpFrontierSpec extends AnyFunSuite {
 
   test("frontier and full-pass rounds agree (and on the oracle)") {
     val frontier = propagate()
-    val full =
-      try { sys.props("graft.lp.frontier") = "0"; propagate() }
-      finally sys.props -= "graft.lp.frontier"
+    val full = propagate(frontier = false)
     assert(frontier === full)
     assert(full === expected)
   }

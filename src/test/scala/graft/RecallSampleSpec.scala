@@ -43,7 +43,6 @@ class RecallSampleSpec extends AnyFunSuite {
 
   test("sampled global-recall report == full report restricted to the " +
       "deterministic hash subset; off by default") {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val root = tmp("gl"); new java.io.File(root).mkdirs()
     assert(StoreCtl.run(spark,
       Seq("build", "ivfpq", dir, s"$root/gen-0")).isRight)

@@ -3,9 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test JVM (Test / fork := true),
-  * under the engine's static confs ([[Engine.StaticConfs]]).
+  * under the engine's static confs ([[Engine.StaticConfs]]) and with the
+  * graft functions attached, as [[Engine.session]] leaves a session.
   */
 object SparkSessionHelper {
+  /** The smallest committed fixture scale (TESTDATA.md). */
+  val Sf0001 = "/root/testdata/sf0.001"
+
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
@@ -16,6 +20,7 @@ object SparkSessionHelper {
       .config(Engine.StaticConfs)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    GraftExtensions.attach(s)
     s
   }
 }
