@@ -256,6 +256,25 @@ object Engine {
     }
   }
 
+  /** Run `body` with every job it starts named `name`: the call site
+    * (stage names) and job description are SparkContext local
+    * properties, which the threads AQE and broadcasts submit their
+    * stage jobs from copy from this one — unnamed, those jobs report a
+    * `CompletableFuture` frame. Restores the enclosing name on exit,
+    * so phases nest.
+    */
+  def phase[T](s: SparkSession, name: String)(body: => T): T = {
+    val sc = s.sparkContext
+    val keys =
+      Seq("callSite.short", "callSite.long", "spark.job.description")
+    val was = keys.map(sc.getLocalProperty)
+    try {
+      keys.foreach(sc.setLocalProperty(_, name))
+      body
+    } finally
+      keys.zip(was).foreach { case (k, v) => sc.setLocalProperty(k, v) }
+  }
+
   /** Postfix face of [[truncate]] — the engine's truncation points
     * read `frame.truncated()` where they once read
     * `frame.localCheckpoint()`.

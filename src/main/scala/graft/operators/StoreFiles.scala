@@ -445,12 +445,20 @@ private[graft] object StoreFiles {
     // opens a file per bucket it sees (tasks x buckets small files),
     // and multi-file buckets forfeit the scan's sort-order claim
     val t = bucketTable(path, n, keys, sortCols, ddl)
-    df.repartition(n, keys.map(org.apache.spark.sql.functions.col): _*)
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(n, keys.head, keys.tail: _*)
-      .sortBy(sortCols.head, sortCols.tail: _*)
-      .option("path", path)
-      .saveAsTable(t)
+    // over an input already hash-partitioned like the buckets (a
+    // bucketed read of the same layout: compact's chain, a fold's
+    // stored side) the repartition plans away, and the write then
+    // relies on that read staying bucketed; Spark's pruning of
+    // bucketed scans no operator needs would split it by file size
+    // instead and land several files per bucket
+    graft.Engine.withConf(s, AutoBucketedScanKey -> "false") {
+      hashed(df, n, keys)
+        .write.mode("overwrite").format("parquet")
+        .bucketBy(n, keys.head, keys.tail: _*)
+        .sortBy(sortCols.head, sortCols.tail: _*)
+        .option("path", path)
+        .saveAsTable(t)
+    }
     // saveAsTable just made a catalog entry — same reclamation
     // contract as the read-side registrations: gc drops it when it
     // deletes this generation's files
@@ -472,9 +480,29 @@ private[graft] object StoreFiles {
     */
   def writeOrdered(df: org.apache.spark.sql.DataFrame, path: String,
                    order: Seq[String]): Unit = {
-    val keys = if (order.length > 1) order.dropRight(1) else order
+    val keys = bucketKeys(order)
     writeBucketed(df, path, keys, order.drop(keys.length))
   }
+
+  private val AutoBucketedScanKey =
+    "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+
+  /** The bucket keys of serving order `order`: the columns before the
+    * trailing id, or the one column itself. */
+  private def bucketKeys(order: Seq[String]): Seq[String] =
+    if (order.length > 1) order.dropRight(1) else order
+
+  private def hashed(df: org.apache.spark.sql.DataFrame, n: Int,
+                     keys: Seq[String]): org.apache.spark.sql.DataFrame =
+    df.repartition(n, keys.map(org.apache.spark.sql.functions.col): _*)
+
+  /** `df` hash-partitioned the way [[writeOrdered]] buckets `order`.
+    * Unioned with a bucketed read of the same layout, the union keeps
+    * that partitioning, and the write's own repartition plans away.
+    */
+  def inBucketLayout(df: org.apache.spark.sql.DataFrame,
+                     order: Seq[String]): org.apache.spark.sql.DataFrame =
+    hashed(df, bucketCount(df.sparkSession), bucketKeys(order))
 
   /** Read the relation at `path`: through its bucketed catalog table
     * when the sidecar says one was written (registering the external

@@ -302,6 +302,12 @@ private[graft] object BandedStore {
         keep ++ Seq("bb.band AS band", s"bb.${k.key} AS ${k.key}"): _*)
   }
 
+  /** Run `body` with its jobs named after the store phase `what`
+    * (Engine.phase). */
+  private def named[T](k: Banded, s: SparkSession, what: String)(
+      body: => T): T =
+    phase(s, s"${k.name} store: $what")(body)
+
   /** Register `sigs` as view `_sigs`, its collapse membership as
     * `_grp`, and the representatives' rows (eager) as `_rep`. */
   private def collapse(k: Banded, s: SparkSession, sigs: DataFrame,
@@ -318,7 +324,11 @@ private[graft] object BandedStore {
   /** Write the collapsed increment's relations at `out` in the kind's
     * serving layout: each append-only relation unioned with `prior`'s
     * chain when one is given (a self-contained generation), the
-    * assignment as computed. */
+    * assignment as computed. The increment is hash-partitioned to the
+    * bucket layout before that union: the stored side's bucketed scan
+    * already has it, so the union keeps it and only the increment
+    * shuffles (a stored side of another bucket count, or unbucketed,
+    * still writes correctly through the write's own repartition). */
   private def land(k: Banded, s: SparkSession, out: String,
                    v: String => String, assignment: Option[DataFrame],
                    prior: Option[String]): Unit = {
@@ -331,8 +341,10 @@ private[graft] object BandedStore {
       val df =
         if (rel == "assignment") assignment.get
         else prior.fold(s.sql(inc(rel)))(p =>
-          StoreKind.readChain(s, p, rel, k.id).union(s.sql(inc(rel))))
-      StoreFiles.writeOrdered(df, s"$out/$rel", order)
+          StoreKind.readChain(s, p, rel, k.id)
+            .union(StoreFiles.inBucketLayout(s.sql(inc(rel)), order)))
+      named(k, s, s"write $rel")(
+        StoreFiles.writeOrdered(df, s"$out/$rel", order))
     }
   }
 
@@ -369,7 +381,7 @@ private[graft] object BandedStore {
     }
     new java.io.File(store).mkdirs()
     land(k, s, store, v, lbl, prior = None)
-    val n = sigs.count()
+    val n = named(k, s, "seal")(sigs.count())
     sigs.unpersist()
     lbl.foreach(_.unpersist())
     StoreFiles.writeManifest(store, k.manifest(n))
@@ -399,8 +411,11 @@ private[graft] object BandedStore {
     // side, both verify join-backs and the node list inside ONE edge
     // job, and a lazy cache populating mid-job let the racing scans
     // each recompute the signature chains (measured ~10x the cost)
-    val newSigs = k.sigs(s, dir, newHalf(k, s, dir, newPred)).truncated()
-    collapse(k, s, newSigs, v)
+    val newSigs = named(k, s, "sigs") {
+      val sigs = k.sigs(s, dir, newHalf(k, s, dir, newPred)).truncated()
+      collapse(k, s, sigs, v)
+      sigs
+    }
     StoreFiles.readRelChain(s, store, "bands")
       .createOrReplaceTempView(v("_oldbands"))
     StoreFiles.readRelChain(s, store, k.payload)
@@ -445,11 +460,12 @@ private[graft] object BandedStore {
                         store: String, newPred: String)
       : (DataFrame, DataFrame) = {
     val (newSigs, edgesLazy) = edgeFrame(k, s, dir, store, newPred)
-    val edges = edgesLazy.truncated()
+    val edges = named(k, s, "edges")(edgesLazy.truncated())
     val lblA = Dedup.storeAssignment(s, store, "doc_id")
-    val merged = Dedup.contractedMerge(k.foldKey + "#merge", lblA,
-      renamed(edges, "doc_a", "doc_b"),
-      renamed(newSigs.select(k.id), "doc_id"))
+    val merged = named(k, s, "merge")(
+      Dedup.contractedMerge(k.foldKey + "#merge", lblA,
+        renamed(edges, "doc_a", "doc_b"),
+        renamed(newSigs.select(k.id), "doc_id")))
     (newSigs, renamed(merged, k.id, "cluster_id"))
   }
 
@@ -481,8 +497,8 @@ private[graft] object BandedStore {
     val (newSigs, merged) =
       if (k.verify.isDefined) {
         val (sigs, m) = increment(k, s, dir, store, np)
-        (sigs, Some(m.truncated()))
-      } else {
+        (sigs, Some(named(k, s, "merge")(m.truncated())))
+      } else named(k, s, "sigs") {
         val sigs = k.sigs(s, dir, np).cache()
         collapse(k, s, sigs, v)
         (sigs, None)
@@ -497,13 +513,14 @@ private[graft] object BandedStore {
       prior = if (delta) None else Some(store))
     if (delta)
       StoreFiles.writeParent(out, StoreFiles.parentGenName(store))
-    // docs = everything the SERVED store covers: the merge for LP
-    // kinds (readRel, never inference — an empty fold's assignment has
-    // no data files), the prior count plus the batch otherwise
-    val n = merged match {
-      case Some(m) =>
-        if (delta) m.count()
-        else StoreFiles.readRel(s, s"$out/assignment").count()
+    // docs = everything the SERVED store covers, from rows the fold
+    // holds, never a re-read of the relations just written: the
+    // checkpointed merge for LP kinds (the rows the self-contained
+    // assignment holds; a batch that re-selects stored ids lands more
+    // than prior + batch there), the prior count plus the batch
+    // otherwise
+    val n = named(k, s, "seal")(merged match {
+      case Some(m) => m.count()
       case None =>
         val added = newSigs.count()
         newSigs.unpersist()
@@ -512,7 +529,7 @@ private[graft] object BandedStore {
           java.nio.charset.StandardCharsets.UTF_8)
         """"docs":\s*(\d+)""".r.findFirstMatchIn(prior)
           .map(_.group(1).toLong).getOrElse(0L) + added
-    }
+    })
     StoreFiles.writeManifest(out, k.manifest(n))
   }
 

@@ -2,7 +2,7 @@ package graft.run
 
 import org.apache.spark.sql.SparkSession
 import graft.Engine
-import graft.operators.{Similarity, StoreFiles, StoreKind}
+import graft.operators.{Banded, Similarity, StoreFiles, StoreKind}
 
 /** Operational CLI for the persistent model/index stores — the
   * named-path face of what the driver keys exercise through
@@ -87,6 +87,16 @@ import graft.operators.{Similarity, StoreFiles, StoreKind}
   * whose generations share the bucketed layout reads as one
   * partitioned+bucketed ALIGNED table (StoreFiles.readChainAligned),
   * so the store side keeps its HashPartitioning at any depth.
+  *
+  * `advance --delta --compact-at n` is the single-cron shape: when the
+  * post-advance depth would reach n, the batch folds straight into one
+  * self-contained generation (the plain `advance` fold), never into a
+  * delta that `compact` reads back and rewrites at once. The sealed
+  * generation holds what advance + `compact` would write: the same
+  * rows, the same manifest bytes, the bucketed serving layout, depth 1
+  * and no `_PARENT` (ivfpq keeps the two steps, see `advance`). A seal
+  * that throws lands the batch as a delta under a fresh name instead,
+  * flips to it, and exits 1 naming the owed compact.
   *
   * `compact` seals a fold chain: it rewrites the SERVED generation's
   * relations into the BUCKETED serving layout (r19 — bucketBy on the
@@ -193,10 +203,11 @@ object StoreCtl {
       case Seq("advance", "--delta", "--compact-at", n, kind, corpus,
                root, pred) =>
         // the unattended-cadence face: a cron'd delta advance that
-        // compacts INLINE once the post-advance depth reaches n, so a
-        // deployment with no separate compact cron never walks into
-        // the depth guard's refusal (warn-only guards still degrade
-        // silently for an operator who never reads the warnings)
+        // seals INLINE once the post-advance depth would reach n (one
+        // pass, see `advance`), so a deployment with no separate
+        // compact cron never walks into the depth guard's refusal
+        // (warn-only guards still degrade silently for an operator
+        // who never reads the warnings)
         n.toIntOption.filter(_ >= 2) match {
           case None => Left(s"--compact-at wants an int >= 2 (a delta " +
             s"advance always lands at depth >= 2), got '$n'")
@@ -287,7 +298,7 @@ object StoreCtl {
           "doctor [--fix] <root> | " +
           "recall [--sample n] <root> <corpus>\n" +
           s"  kind = ${StoreKind.all.map(_.name).mkString(" | ")} " +
-          "(--delta: all kinds; --delta --compact-at n compacts inline " +
+          "(--delta: all kinds; --delta --compact-at n seals inline " +
           "at depth n)")
     }
 
@@ -344,35 +355,37 @@ object StoreCtl {
               return Left(s"cannot create $outPath: $e")
           }
           layout.foreach { case (rel, keys) =>
-            // chain-aware read, the way readers resolve it (a delta
-            // assignment last-writer-wins — a relabeled old row must
-            // not resurface from the parent; grp with a pre-layout
-            // base's identity membership) — compact is exactly the verb
-            // that seals a chain back into one generation, so the
-            // output carries no _PARENT by construction
-            val frame = StoreKind.readChain(spark, cur, rel, k.id)
-            // the sealed layout is the SERVING layout: every relation
-            // except codes lands BUCKETED on its probe key with the
-            // trailing id as the in-bucket sort (StoreFiles
-            // .writeBucketed) — one generation, one file per bucket,
-            // the in-bucket sort claim restored (an aligned CHAIN
-            // keeps the exchange-free partitioning but has multiple
-            // files per bucket, so it pays local sorts and per-gen
-            // listings that a compact retires). codes keeps the
-            // (cell, vec_id) global sort + coalesce: its join key has
-            // only KmK distinct values, so bucketing by cell would cap
-            // the corpus scan at KmK tasks — the serve side is already
-            // exchange-free there (the query side broadcasts), and
-            // cell-pruned locality comes from the sort's row groups.
-            // Its file count scales with the codes, like every other
-            // corpus-scale frame (Dedup.repPartitions).
-            if (rel == "codes")
-              frame
-                .sort(keys.map(org.apache.spark.sql.functions.col): _*)
-                .coalesce(graft.operators.Dedup.repPartitions(spark,
-                  frame.count()))
-                .write.mode("error").parquet(s"$outPath/$rel")
-            else StoreFiles.writeOrdered(frame, s"$outPath/$rel", keys)
+            Engine.phase(spark, s"$kind compact: write $rel") {
+              // chain-aware read, the way readers resolve it (a delta
+              // assignment last-writer-wins — a relabeled old row must
+              // not resurface from the parent; grp with a pre-layout
+              // base's identity membership) — compact is exactly the verb
+              // that seals a chain back into one generation, so the
+              // output carries no _PARENT by construction
+              val frame = StoreKind.readChain(spark, cur, rel, k.id)
+              // the sealed layout is the SERVING layout: every relation
+              // except codes lands BUCKETED on its probe key with the
+              // trailing id as the in-bucket sort (StoreFiles
+              // .writeBucketed) — one generation, one file per bucket,
+              // the in-bucket sort claim restored (an aligned CHAIN
+              // keeps the exchange-free partitioning but has multiple
+              // files per bucket, so it pays local sorts and per-gen
+              // listings that a compact retires). codes keeps the
+              // (cell, vec_id) global sort + coalesce: its join key has
+              // only KmK distinct values, so bucketing by cell would cap
+              // the corpus scan at KmK tasks — the serve side is already
+              // exchange-free there (the query side broadcasts), and
+              // cell-pruned locality comes from the sort's row groups.
+              // Its file count scales with the codes, like every other
+              // corpus-scale frame (Dedup.repPartitions).
+              if (rel == "codes")
+                frame
+                  .sort(keys.map(org.apache.spark.sql.functions.col): _*)
+                  .coalesce(graft.operators.Dedup.repPartitions(spark,
+                    frame.count()))
+                  .write.mode("error").parquet(s"$outPath/$rel")
+              else StoreFiles.writeOrdered(frame, s"$outPath/$rel", keys)
+            }
           }
           // marker LAST, verbatim from the source generation (same
           // counts — a compact adds no rows), temp + ATOMIC_MOVE:
@@ -400,13 +413,20 @@ object StoreCtl {
     * predicate's rows into the next free `gen-<n>`, then flip.
     * `delta = true` lands only the increment (the hourly-cadence
     * shape — bytes ∝ batch); readers resolve the chain, and a nightly
-    * `compact` seals it. `compactAt = Some(n)` runs that compact
-    * INLINE whenever the post-advance depth reaches n — the
-    * single-cron deployment shape: the advance lands and flips FIRST
-    * (the batch is durable and served before the seal starts), so an
-    * inline-compact failure degrades to exactly the
-    * missed-compact-cron state the depth guard already handles, never
-    * a lost batch.
+    * `compact` seals it. `compactAt = Some(n)` seals INLINE whenever
+    * the post-advance depth would reach n — the single-cron
+    * deployment shape. The seal is ONE pass: the batch folds straight
+    * into a self-contained generation (the non-delta fold, whose
+    * relations land in compact's bucketed serving layout and whose
+    * rows and manifest are those advance + `compact` would write), so
+    * no delta is written only to be read back and rewritten. ivfpq
+    * keeps the two steps: its self-contained fold writes the codes
+    * unsorted, and compact's (cell, vec_id) sort is its serving
+    * layout. Never a lost batch: if the one-pass fold throws, the
+    * batch lands as a delta under a fresh generation name and flips,
+    * and the verb fails saying the seal is owed — the missed-compact
+    * state the depth guard already handles. The failed attempt's dir
+    * is marker-less litter that gc and doctor already handle.
     */
   private def advance(spark: SparkSession, kind: String, corpus: String,
                       root: String, pred: String, delta: Boolean,
@@ -432,49 +452,64 @@ object StoreCtl {
           s"generations (> $ChainMaxKey=$maxAt) — every read pays a " +
           s"$depthAfter-way union; run `compact $root` to seal the " +
           "chain, then re-run")
-      val next = StoreFiles.nextGenName(root)
-      val outPath = java.nio.file.Paths.get(root, next)
-      // CLAIM the name atomically before folding: two overlapping
-      // advance runs (a slow fold under the next cron tick) would
-      // otherwise both read the same nextGenName and interleave
-      // writes into one generation dir. createDirectory fails on
-      // an existing dir, so exactly one run proceeds.
-      try java.nio.file.Files.createDirectory(outPath)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          return Left(s"$outPath already exists — a concurrent " +
-            "advance is in flight (or its litter needs an " +
-            "operator decision); refusing to write into it")
-        case e: java.io.IOException =>
-          return Left(s"cannot create $outPath: $e")
+      // fold into the next free generation and flip to it
+      def landAs(asDelta: Boolean): Either[String, String] = {
+        val next = StoreFiles.nextGenName(root)
+        val outPath = java.nio.file.Paths.get(root, next)
+        // CLAIM the name atomically before folding: two overlapping
+        // advance runs (a slow fold under the next cron tick) would
+        // otherwise both read the same nextGenName and interleave
+        // writes into one generation dir. createDirectory fails on
+        // an existing dir, so exactly one run proceeds.
+        try java.nio.file.Files.createDirectory(outPath)
+        catch {
+          case _: java.nio.file.FileAlreadyExistsException =>
+            return Left(s"$outPath already exists — a concurrent " +
+              "advance is in flight (or its litter needs an " +
+              "operator decision); refusing to write into it")
+          case e: java.io.IOException =>
+            return Left(s"cannot create $outPath: $e")
+        }
+        fold(spark, kind, corpus, cur, outPath.toString, pred, asDelta)
+          .flatMap(_ => StoreFiles.flip(root, next))
       }
-      fold(spark, kind, corpus, cur, outPath.toString, pred, delta)
-        .flatMap(_ =>
-          StoreFiles.flip(root, next).map { p =>
-            if (delta && depthAfter > warnAt) {
-              val w = s"[advance] WARNING: delta chain depth " +
-                s"$depthAfter exceeds $ChainWarnKey=$warnAt — serve " +
-                s"pays a $depthAfter-way union per read; run " +
-                s"`compact $root` (refused outright past " +
-                s"$ChainMaxKey=$maxAt)"
-              System.err.println(w)
-              s"[advance] serving $p\n$w"
-            } else s"[advance] serving $p"
-          })
-        .flatMap { msg =>
-          // inline compact AFTER the flip: the advanced batch is
-          // already durable and served whatever happens below
-          if (!compactAt.exists(depthAfter >= _)) Right(msg)
+      def landed(p: String): String =
+        if (delta && depthAfter > warnAt) {
+          val w = s"[advance] WARNING: delta chain depth " +
+            s"$depthAfter exceeds $ChainWarnKey=$warnAt — serve " +
+            s"pays a $depthAfter-way union per read; run " +
+            s"`compact $root` (refused outright past " +
+            s"$ChainMaxKey=$maxAt)"
+          System.err.println(w)
+          s"[advance] serving $p\n$w"
+        } else s"[advance] serving $p"
+      // exit 1 so the cron alerts, but say loudly that the advance
+      // itself LANDED — the operator's store serves the new batch;
+      // only the seal is owed
+      def sealOwed(msg: String, e: Any): Left[String, String] =
+        Left(s"$msg\n[advance] inline compact (--compact-at " +
+          s"${compactAt.get}) FAILED after the advance landed " +
+          s"and flipped — the chain still serves at depth " +
+          s"$depthAfter; run `compact $root` by hand: $e")
+      val seal = compactAt.exists(depthAfter >= _)
+      if (seal && StoreKind.named(kind).exists(_.isInstanceOf[Banded])) {
+        val once =
+          try landAs(asDelta = false)
+          catch {
+            case scala.util.control.NonFatal(e) =>
+              return landAs(asDelta = true)
+                .flatMap(p => sealOwed(landed(p), e))
+          }
+        once.map(p => s"[advance] serving $p\n[compact] sealed $cur " +
+          s"and the batch in one pass, serving $p")
+      } else
+        landAs(delta).map(landed).flatMap { msg =>
+          // ivfpq's inline compact runs AFTER the flip: the advanced
+          // batch is already durable and served whatever happens below
+          if (!seal) Right(msg)
           else compact(spark, kind, root) match {
             case Right(cm) => Right(s"$msg\n$cm")
-            case Left(e) =>
-              // exit 1 so the cron alerts, but say loudly that the
-              // advance itself LANDED — the operator's store serves
-              // the new batch; only the seal is owed
-              Left(s"$msg\n[advance] inline compact (--compact-at " +
-                s"${compactAt.get}) FAILED after the advance landed " +
-                s"and flipped — the chain still serves at depth " +
-                s"$depthAfter; run `compact $root` by hand: $e")
+            case Left(e)   => sealOwed(msg, e)
           }
         }
     }
@@ -771,7 +806,8 @@ object StoreCtl {
     }
     val face = if (delta) "fold --delta" else "fold"
     StoreKind.named(kind).toRight(s"unknown store kind: $kind").map { k =>
-      k.foldInto(spark, corpus, store, out, pred, delta)
+      Engine.phase(spark, s"$kind $face")(
+        k.foldInto(spark, corpus, store, out, pred, delta))
       s"[$face] $kind generation at $out"
     }
   }

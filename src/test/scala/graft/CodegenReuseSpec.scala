@@ -15,10 +15,10 @@ import graft.run.StoreCtl
   *
   * On sf0.001 with the cache at Spark's default of 100, the four
   * advances compiled 304, 304, 219 and 304 classes. With
-  * [[Engine.StaticConfs]]'s size they compile 161, 54, 54 and 52 when
-  * the spec runs alone: the warm advances compile only the classes
-  * whose code inlines the batch predicate's literal, which differs per
-  * advance.
+  * [[Engine.StaticConfs]]'s size they compile 148, 52, 54 and 52 when
+  * the spec runs alone (each advance seals in one pass): the warm
+  * advances compile only the classes whose code inlines the batch
+  * predicate's literal, which differs per advance.
   */
 class CodegenReuseSpec extends AnyFunSuite {
 

@@ -961,6 +961,55 @@ class StoreCtlSpec extends AnyFunSuite {
     } finally spark.conf.unset(StoreCtl.ChainMaxKey)
   }
 
+  test("advance --delta --compact-at seals every kind in one pass: " +
+      "rows, manifest bytes and serving layout of advance + manual " +
+      "compact, at depth 1 with no _PARENT") {
+    for ((kind, id) <- Seq("cluster" -> "doc_id", "embed" -> "vec_id",
+                           "phash" -> "doc_id", "ivfpq" -> "vec_id")) {
+      val k = StoreKind.named(kind).get
+      val auto = tmp(s"seal_${kind}_auto"); new java.io.File(auto).mkdirs()
+      val manual = tmp(s"seal_${kind}_man"); new java.io.File(manual).mkdirs()
+      for (root <- Seq(auto, manual)) {
+        assert(StoreCtl.run(spark, Seq("build", kind, dir,
+          s"$root/gen-0", s"$id % 4 = 0")).isRight)
+        assert(StoreCtl.run(spark, Seq("flip", root, "gen-0")).isRight)
+      }
+      def adv(root: String, b: Int, at: Boolean): String = {
+        val cmd = Seq("advance", "--delta") ++
+          (if (at) Seq("--compact-at", "3") else Nil) ++
+          Seq(kind, dir, root, s"$id % 4 = $b")
+        val r = StoreCtl.run(spark, cmd)
+        assert(r.isRight, s"$cmd: $r")
+        r.toOption.get
+      }
+      assert(!adv(auto, 1, at = true).contains("[compact]"))
+      val m2 = adv(auto, 2, at = true)
+      assert(m2.contains("[advance]") && m2.contains("[compact]") &&
+        !m2.contains("WARNING"), m2)
+      adv(manual, 1, at = false)
+      adv(manual, 2, at = false)
+      assert(StoreCtl.run(spark, Seq("compact", kind, manual)).isRight)
+      val (sa, sm) = (StoreFiles.serve(auto).toOption.get,
+        StoreFiles.serve(manual).toOption.get)
+      assert(StoreFiles.chainPaths(sa) == Right(Seq(sa)), s"$kind: $sa")
+      assert(!Files.exists(java.nio.file.Paths.get(sa, StoreFiles.ParentName)))
+      val (ma, mm) = (StoreFiles.marker(sa).get, StoreFiles.marker(sm).get)
+      assert(ma.getFileName == mm.getFileName &&
+        Files.readAllBytes(ma).sameElements(Files.readAllBytes(mm)),
+        s"$kind manifest diverged from the manual seal")
+      for ((rel, _) <- k.rels) {
+        def rows(gen: String): Seq[String] =
+          StoreKind.readChain(spark, gen, rel, k.id)
+            .collect().map(_.mkString("|")).toSeq.sorted
+        assert(rows(sa) == rows(sm), s"$kind $rel diverged from the manual seal")
+        if (rel != "codes")
+          assert(StoreFiles.sidecarLayout(s"$sa/$rel") ==
+            StoreFiles.sidecarLayout(s"$sm/$rel"),
+            s"$kind $rel serving layout diverged from the manual seal")
+      }
+    }
+  }
+
   test("bucket-count evolution: growing graft.store.buckets mid-chain " +
       "serves via plain union, doctor names the re-seal target, and " +
       "compact re-seals the WHOLE chain at the NEW count") {
