@@ -43,7 +43,8 @@ import graft.operators.{Banded, BandedStore, Dedup, StoreKind}
   *   - `stream` prints each micro-batch's `durationMs` parts and state
   *     commit times for warm runs of a replay key.
   *   - `plan` writes `explain("formatted")` of each query to
-  *     `<outDir>/<query>_<suffix>.txt` with no warm-up. `edge:<fold key>`
+  *     `<outDir>/<query>_<suffix>.txt` with no warm-up ([[runStable]]:
+  *     two runs of one commit write the same bytes). `edge:<fold key>`
   *     (the store kinds that keep an LP assignment) dumps the fold's
   *     verified-edge frame — the plan the fold checkpoints — with
   *     broadcast joins and AQE off, the join strategies a 100 TB store
@@ -71,7 +72,7 @@ object Probe {
       |  plan   <q1,q2,...> <outDir> <suffix> <sfDir>""".stripMargin
 
   private def edgeKinds: Map[String, Banded] = StoreKind.all.collect {
-    case k: Banded if k.verify.isDefined => s"edge:${k.foldKey}" -> k
+    case k: Banded if k.lp => s"edge:${k.foldKey}" -> k
   }.toMap
 
   /** Validates the command line before any Spark work: a malformed line
@@ -188,8 +189,20 @@ object Probe {
     } finally sc.removeSparkListener(metrics)
   }
 
+  /** `plan` in a run-stable form, so two runs of one commit write
+    * byte-identical dumps: the process id of scratch store paths, the
+    * store table names (they hash those paths), exchange plan ids and
+    * JVM identity hashes are written as fixed tokens. Expression ids
+    * stay.
+    */
+  private[graft] def runStable(plan: String): String =
+    plan.replaceAll(s"_p${ProcessHandle.current().pid()}\\b", "_pP")
+      .replaceAll("graft_(bkt|chn)_[0-9a-f]{16}", "graft_$1_H")
+      .replaceAll("plan_id=[0-9]+", "plan_id=N")
+      .replaceAll("([\\w$])@[0-9a-f]+\\b", "$1@H")
+
   private def planText(spark: SparkSession, q: String, dir: String): String =
-    try edgeKinds.get(q) match {
+    runStable(try edgeKinds.get(q) match {
       case Some(k) =>
         Engine.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1")(
           Dedup.withAqeOff(spark)(
@@ -200,7 +213,7 @@ object Probe {
           .explainString(FormattedMode)
     } catch { case NonFatal(e) =>
       s"PLAN FAILED: ${e.getClass.getName}: ${e.getMessage}"
-    }
+    })
 
   /** One row per completed stage from the metrics Spark aggregates over
     * its tasks: executor CPU (run + deserialize, as [[MetricListener]]

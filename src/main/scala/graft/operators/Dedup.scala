@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Engine._
@@ -266,62 +266,6 @@ object Dedup extends QueryPack {
       .foreach(_.unpersist(blocking = false))
   }
 
-  /** Shared (doc_id, hs, sig_0..15) relation behind dd_jaccard and
-    * dd_containment: registered under `view`, CACHED because it feeds
-    * all 8 band sides and both exact-re-check join-backs (the md5
-    * chains must materialize once). Returns the band-side UNION ALL
-    * over `view` so both operators keep the identical 8x2 banding by
-    * construction.
-    */
-  private def bandedSigRelation(s: SparkSession, dir: String,
-                                view: String): String = {
-    val sigs = jacSigsOf(table(s, dir, "documents")).cache()
-    sigs.createOrReplaceTempView(view)
-    trackCached(s, dir, sigs)
-    (0 until JacBands)
-      .map(b => s"SELECT doc_id, $b AS band, ${jacBandKeySpark(b)} AS bk" +
-        s" FROM $view$jacBandGuard")
-      .mkString(" UNION ALL ")
-  }
-
-  /** Test hook (ShortDocGuardSpec): the guarded band-side relation of
-    * the jaccard family, as a frame — so the spec can assert the
-    * [[jacBandGuard]] actually keeps empty-shingle docs out of the
-    * probe index rather than trusting the SQL string.
-    */
-  private[graft] def jaccardBandRowsForTest(s: SparkSession,
-                                            dir: String): DataFrame = {
-    val bandSelects = bandedSigRelation(s, dir, cview("sdg_sigs", dir))
-    s.sql(s"SELECT doc_id, band, bk FROM ($bandSelects)")
-  }
-
-  /** The jaccard family's REP-level verified pairs (rep_a, rep_b,
-    * jaccard) plus the collapse membership registered as `jac_grp` —
-    * the duplicate-bomb guard ([[ddClusterEdges]]' collapse) applied
-    * to the pair table itself: identical shingle sets collapse to
-    * their min-doc_id representative, only reps are banded, and the
-    * verify runs ONCE per group pair. [[ddJaccardPairs]] expands the
-    * result back to member pairs — on a bombed corpus the quadratic
-    * part is the ANSWER (all k²/2 pairs really are duplicates), and
-    * this split confines it to join fan-out: candidate generation and
-    * the graft_isect merges stay O(groups²-candidates).
-    */
-  private[graft] def ddJaccardRepPairs(s: SparkSession,
-                                       dir: String): DataFrame =
-    jacRelations(s, dir).repVer
-
-  /** The jaccard family's shared collapse relations, materialized once
-    * per (session, corpus) through the registry ([[FrameRegistry]]'s
-    * contract — the embed_lsh edge share's argument applied to the
-    * pair families: five consumers, one banded corpus pass).
-    */
-  private def jacRelations(s: SparkSession, dir: String): PairRelations = {
-    jacRelCache.getOrBuild(s, s"jac_pairs|$dir") {
-      val (grp, ver) = jacRepVerifyFrame(s, dir)
-      PairRelations(ver.truncated(), grp)
-    }
-  }
-
   /** The shingle-set collapse membership (doc_id, rep) over a
     * registered sig view: identical shingle sets group under their
     * min-doc_id representative, empty-shingle docs carved out (their
@@ -347,7 +291,7 @@ object Dedup extends QueryPack {
   /** [[shingleGrpFrame]]'s EMBED-keyed twin (md5 of the vector bytes,
     * zero-norm carve-out — a zero vector's cosine is NaN, never an
     * edge): ONE definition for the four embed collapse sites
-    * (cosRepVerifyFrame, embedClusterEdges, and the embed store's
+    * (PairFamily.Cosine, embedClusterEdges, and the embed store's
     * build and fold), which carried byte-identical inline copies
     * before r20.
     */
@@ -363,118 +307,15 @@ object Dedup extends QueryPack {
          |ON k.vk = g.vk""".stripMargin)
       .truncated()
 
-  /** Member-level expansion of a rep-level verified pair table — the
-    * shared consumer half of every pair-family collapse. Built with
-    * DataFrame joins DIRECTLY on the registry's cached frames (no
-    * temp views): the registry makes the frames thread-shareable
-    * across sessions-on-one-SparkSession, and a view-based expansion
-    * would re-introduce a shared mutable name binding two threads on
-    * different corpora could interleave on (one corpus's rep pairs
-    * silently expanding through the other's membership). Cross-group
-    * rows carry the verified rep-pair score (a member's collapse key
-    * equals its rep's, so the score is every member pair's score
-    * exactly); within-group pairs score 1 by construction (identical
-    * non-empty keys — the builders' carve-out keeps 0/0 twins out).
-    * Output is row-for-row the uncollapsed banded pair table.
-    */
-  private[graft] def expandMemberPairs(rel: PairRelations, memberCol: String,
-                                scoreCol: String,
-                                outA: String, outB: String,
-                                withinScore: Column = lit(1.0d)): DataFrame = {
-    val ga = rel.grp.select(col("rep").as("rep_a"),
-      col(memberCol).as("__ma"))
-    val gb = rel.grp.select(col("rep").as("rep_b"),
-      col(memberCol).as("__mb"))
-    val cross = rel.repVer
-      .join(ga, "rep_a").join(gb, "rep_b")
-      .select(least(col("__ma"), col("__mb")).as(outA),
-        greatest(col("__ma"), col("__mb")).as(outB), col(scoreCol))
-    val within = rel.grp.select(col("rep"), col(memberCol).as("__ma"))
-      .join(rel.grp.select(col("rep"), col(memberCol).as("__mb")), "rep")
-      .where(col("__ma") < col("__mb"))
-      .select(col("__ma").as(outA), col("__mb").as(outB),
-        withinScore.as(scoreCol))
-    cross.unionAll(within)
-  }
-
-  /** The collapse membership (eager) and the rep-level banded-verify
-    * frame LAZY — split out so PlanSpec can pin the verify's physical
-    * shape (banded equi-joins, the graft_isect arithmetic) without
-    * running it; [[jacRelations]] is the only production caller and
-    * owns checkpointing the verify into the registry.
-    */
-  private[graft] def jacRepVerifyFrame(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    val sv = cview("jac_sigs", dir); val gv = uview("jac_grp")
-    val rv = uview("jac_repsigs")
-    bandedSigRelation(s, dir, sv)
-    val grp = shingleGrpFrame(s, sv)
-    grp.createOrReplaceTempView(gv)
-    s.sql(
-      s"""SELECT s.doc_id, ${(0 until 2 * JacBands)
-           .map("s.sig_" + _).mkString(", ")}
-         |FROM $sv s
-         |JOIN (SELECT DISTINCT rep FROM $gv) r ON s.doc_id = r.rep"""
-        .stripMargin)
-      // grp.count() bounds the rep count from above (one row per
-      // member ≥ one per group) — a one-job overestimate that keeps
-      // the coalesce scale-adaptive instead of the old literal 4
-      .coalesce(repPartitions(s, grp.count())).truncated()
-      .createOrReplaceTempView(rv)
-    val bandSelects = (0 until JacBands)
-      .map(b => s"SELECT doc_id, $b AS band, ${jacBandKeySpark(b)} AS bk" +
-        s" FROM $rv$jacBandGuard")
-      .mkString(" UNION ALL ")
-    // length-ratio conjunct: j >= 0.6 implies min(sz)/max(sz) >= 0.6
-    // (exact integers, pure prune — same rows out). The caller
-    // checkpoints this frame into the registry, so cache hits serve
-    // materialized rows with no view dependencies.
-    val ver = s.sql(
-      s"""WITH bands AS ($bandSelects),
-         |cand AS (
-         |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-         |  FROM bands x JOIN bands y
-         |    ON x.band = y.band AND x.bk = y.bk AND x.doc_id < y.doc_id)
-         |SELECT doc_a AS rep_a, doc_b AS rep_b, jaccard FROM (
-         |  SELECT doc_a, doc_b,
-         |    round(cast(graft_isect(a.hs, b.hs) as double)
-         |      / (size(a.hs) + size(b.hs) - graft_isect(a.hs, b.hs)), 6)
-         |      AS jaccard
-         |  FROM cand JOIN $sv a ON a.doc_id = doc_a
-         |            JOIN $sv b ON b.doc_id = doc_b
-         |  WHERE least(size(a.hs), size(b.hs)) * 10
-         |        >= greatest(size(a.hs), size(b.hs)) * 6)
-         |WHERE jaccard >= 0.6""".stripMargin)
-    dropUviews(s, gv, rv)
-    (grp, ver)
-  }
-
-  /** Unordered banded pairs — the composition form. Consumers that feed
-    * the pairs onward (decontamination, overlap, the sweep) use this so
-    * no range-partition sort (whose sampling pass re-executes the
-    * pipeline) sits inside their edge lineage. Member-level: the
-    * rep-level verified pairs expand through `jac_grp` on both sides
-    * (a member's hs equals its rep's, so the verified jaccard is
-    * every member pair's jaccard, exactly), and within-group pairs
-    * are jaccard 1 by construction (identical non-empty shingle sets;
-    * the carve-out keeps empty-set twins out, whose true jaccard is
-    * 0/0, never a pair). Output is row-for-row the uncollapsed banded
-    * pair table — DupBombGuardSpec leans on that equality. The
-    * expansion is [[expandMemberPairs]] — DataFrame joins on the
-    * cached frames, no temp views (see its thread-safety note).
-    */
-  private def ddJaccardPairs(s: SparkSession, dir: String): DataFrame =
-    expandMemberPairs(jacRelations(s, dir), "doc_id", "jaccard",
-      "doc_a", "doc_b")
-
   private def ddJaccard(s: SparkSession, dir: String): DataFrame =
-    ddJaccardPairs(s, dir).orderBy(col("doc_a"), col("doc_b"))
+    BandedStore.pairs(PairFamily.Jaccard, s, dir)
+      .orderBy(col("doc_a"), col("doc_b"))
 
   /** The all-pairs docs CTE + scored-pairs subquery shared by the
     * jaccard-family oracles (ddJaccardSql, ddSourceOverlapSql) — ONE
     * definition so a tuning change (threshold, hash width, grams)
     * cannot desynchronize the gates that all feed from
-    * [[ddJaccardPairs]] on the Spark side.
+    * PairFamily.Jaccard's pairs on the Spark side.
     */
   private val duckJacDocsCte =
     s"""docs AS (
@@ -513,7 +354,7 @@ object Dedup extends QueryPack {
   // held-out eval document, not only when it shares a verbatim gram).
   // Eval set = the deterministic doc_id % 50 == 0 slice, the same
   // stand-in txt_decontaminate uses. Composed ENTIRELY from the banded
-  // jaccard machinery — the pair table is [[ddJaccardPairs]] (one
+  // jaccard machinery — the pair table is PairFamily.Jaccard's (one
   // banded self-join + exact verify, sig relation cached once), sliced
   // to corpus-eval pairs and folded to per-doc flags — so at 100 TB
   // the cost is the dedup pass the pipeline already runs, and the
@@ -526,7 +367,7 @@ object Dedup extends QueryPack {
     // orientation projections embeds the banded-join + verify subtree
     // twice in the plan (exchange reuse reclaims only the shuffles) —
     // a crossing pair instead selects its corpus side directly
-    val hits = ddJaccardPairs(s, dir)
+    val hits = BandedStore.pairs(PairFamily.Jaccard, s, dir)
       .where("(doc_a % 50 = 0) <> (doc_b % 50 = 0)")
       .selectExpr("CASE WHEN doc_a % 50 = 0 THEN doc_b ELSE doc_a END AS d")
       .groupBy(col("d"))
@@ -563,7 +404,7 @@ object Dedup extends QueryPack {
   // paraphrase; embedding similarity does not): a corpus vector is
   // flagged when it cosine-matches (>= 0.4) any held-out eval vector
   // (vec_id % 50 == 0, the family's eval stand-in). Composed from the
-  // banded RH-LSH pair table ([[ddEmbedLshPairs]], cached bucketed
+  // banded RH-LSH pair table (PairFamily.Cosine's, cached bucketed
   // relation shared with the cosine family), so at corpus scale the
   // flags cost one slice of the semantic-dedup pass. Per the repo's
   // banded-query convention the oracle is the BANDED restatement
@@ -573,7 +414,7 @@ object Dedup extends QueryPack {
   private def ddDecontaminateSemantic(s: SparkSession,
                                       dir: String): DataFrame = {
     // single pass over the pair table (see ddDecontaminate)
-    val hits = ddEmbedLshPairs(s, dir)
+    val hits = BandedStore.pairs(PairFamily.Cosine, s, dir)
       .where("(vec_a % 50 = 0) <> (vec_b % 50 = 0)")
       .selectExpr("CASE WHEN vec_a % 50 = 0 THEN vec_b ELSE vec_a END AS d")
       .groupBy(col("d"))
@@ -628,7 +469,7 @@ object Dedup extends QueryPack {
   // two-column projection of the corpus scan; the final aggregate is
   // |sources|^2-bounded. No new shuffle class beyond dd_jaccard itself.
   private def ddSourceOverlap(s: SparkSession, dir: String): DataFrame = {
-    val pairs = ddJaccardPairs(s, dir)
+    val pairs = BandedStore.pairs(PairFamily.Jaccard, s, dir)
     val src = table(s, dir, "documents").select("doc_id", "source")
     pairs
       .join(src.toDF("doc_a", "src_a"), "doc_a")
@@ -679,79 +520,11 @@ object Dedup extends QueryPack {
   // would miss).
   //
   // DUPLICATE-BOMB GUARD (r18): identical docs have containment 1.0,
-  // so a k-copy bomb detonates this family exactly like jaccard's —
-  // k²/2 banded candidates, all paying the graft_isect merge. The
-  // same rep-collapse applies because containment, like jaccard, is a
-  // function of the two shingle SETS only: identical sets collapse to
-  // their min-doc_id rep ([[shingleGrpFrame]] — same key, same
-  // empty-set carve-out, whose containment is 0/0 and never a pair),
-  // only reps band, the verify runs once per group pair, and
-  // [[expandMemberPairs]] recovers member pairs (a member's set
-  // equals its rep's, so the verified containment is every member
-  // pair's containment exactly; within-group pairs are 1.0 by
-  // construction). Output is row-for-row the uncollapsed pair table —
-  // banded-candidate recall depends only on the group's signature, so
-  // collapsing cannot drop a pair the uncollapsed join would find.
-
-  /** The containment family's REP-level verified pairs — exposed for
-    * DupBombGuardSpec's O(groups) linearity gate.
-    */
-  private[graft] def ddContainmentRepPairs(s: SparkSession,
-                                           dir: String): DataFrame =
-    contRelations(s, dir).repVer
-
-  private def contRelations(s: SparkSession, dir: String): PairRelations =
-    contRelCache.getOrBuild(s, s"cont_pairs|$dir") {
-      val (grp, ver) = contRepVerifyFrame(s, dir)
-      PairRelations(ver.truncated(), grp)
-    }
-
-  /** Membership (eager) + the rep-level banded containment verify
-    * LAZY — the [[jacRepVerifyFrame]] split (PlanSpec pins the
-    * verify's physical shape without running it). Same 8x2 banding as
-    * the jaccard family, WITHOUT the length-ratio prune (containment
-    * explicitly allows size mismatch).
-    */
-  private[graft] def contRepVerifyFrame(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    val sv = cview("cont_sigs", dir); val gv = uview("cont_grp")
-    val rv = uview("cont_repsigs")
-    bandedSigRelation(s, dir, sv)
-    val grp = shingleGrpFrame(s, sv)
-    grp.createOrReplaceTempView(gv)
-    s.sql(
-      s"""SELECT s.doc_id, ${(0 until 2 * JacBands)
-           .map("s.sig_" + _).mkString(", ")}
-         |FROM $sv s
-         |JOIN (SELECT DISTINCT rep FROM $gv) r ON s.doc_id = r.rep"""
-        .stripMargin)
-      // count-derived width, not the old literal 4 — see repPartitions
-      .coalesce(repPartitions(s, grp.count())).truncated()
-      .createOrReplaceTempView(rv)
-    val bandSelects = (0 until JacBands)
-      .map(b => s"SELECT doc_id, $b AS band, ${jacBandKeySpark(b)} AS bk" +
-        s" FROM $rv$jacBandGuard")
-      .mkString(" UNION ALL ")
-    val ver = s.sql(
-      s"""WITH bands AS ($bandSelects),
-         |cand AS (
-         |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-         |  FROM bands x JOIN bands y
-         |    ON x.band = y.band AND x.bk = y.bk AND x.doc_id < y.doc_id)
-         |SELECT doc_a AS rep_a, doc_b AS rep_b, containment FROM (
-         |  SELECT doc_a, doc_b,
-         |    round(cast(graft_isect(a.hs, b.hs) as double)
-         |      / least(size(a.hs), size(b.hs)), 6) AS containment
-         |  FROM cand JOIN $sv a ON a.doc_id = doc_a
-         |            JOIN $sv b ON b.doc_id = doc_b)
-         |WHERE containment >= 0.8""".stripMargin)
-    dropUviews(s, gv, rv)
-    (grp, ver)
-  }
-
+  // so a k-copy bomb detonates this family exactly like jaccard's.
+  // Containment, like jaccard, is a function of the two shingle SETS
+  // only, so the same collapse (PairFamily.Containment) defuses it.
   private def ddContainment(s: SparkSession, dir: String): DataFrame =
-    expandMemberPairs(contRelations(s, dir), "doc_id", "containment",
-      "doc_a", "doc_b")
+    BandedStore.pairs(PairFamily.Containment, s, dir)
       .orderBy(col("doc_a"), col("doc_b"))
 
   /** Independent all-pairs spec — catches any subset pair the
@@ -838,7 +611,7 @@ object Dedup extends QueryPack {
     * real scale the inputs are no longer tiny and the hint is simply
     * the partitioning the join would pick anyway.
     */
-  private def contSmallsideCandSql(view: String, probeOrder: String,
+  private[graft] def contSmallsideCandSql(view: String, probeOrder: String,
                                    slack: Int = ContPrefixSlack,
                                    probeParts: Int = 0): String = {
     val probeHint =
@@ -872,7 +645,8 @@ object Dedup extends QueryPack {
     */
   private[graft] def containmentCandidates(s: SparkSession, dir: String,
                                            rarestFirst: Boolean): DataFrame = {
-    bandedSigRelation(s, dir, "contp_sigs")
+    BandedStore.sigs(StoreKind.Cluster, s, dir)
+      .createOrReplaceTempView("contp_sigs")
     val ord = if (rarestFirst) "df.df, i.h" else "i.h"
     s.sql(s"""WITH ${contSmallsideCandSql("contp_sigs", ord)}
              |SELECT doc_a, doc_b FROM cand""".stripMargin)
@@ -887,57 +661,9 @@ object Dedup extends QueryPack {
   // recall pigeonhole is per-PAIR and each rep is a real document, so
   // it holds unchanged on the rep corpus; df computed over reps is
   // the better rarity signal (duplicates no longer masquerade as
-  // boilerplate). Member pairs recover through [[expandMemberPairs]]
-  // with the same exactness argument.
-
-  /** Smallside rep-level verified pairs — DupBombGuardSpec's hook. */
-  private[graft] def ddContainmentSmallsideRepPairs(s: SparkSession,
-                                                    dir: String): DataFrame =
-    contpRelations(s, dir).repVer
-
-  private def contpRelations(s: SparkSession, dir: String): PairRelations =
-    contRelCache.getOrBuild(s, s"contp_pairs|$dir") {
-      val (grp, ver) = contpRepVerifyFrame(s, dir)
-      PairRelations(ver.truncated(), grp)
-    }
-
-  /** Membership (eager) + the rep-level prefix-probe verify LAZY —
-    * [[contSmallsideCandSql]] over the rep view, REPARTITION hint
-    * kept on the probe side (the AQE-coalescer exemption PlanSpec
-    * pins survives the collapse unchanged).
-    */
-  private[graft] def contpRepVerifyFrame(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    val sv = cview("contp_sigs", dir); val gv = uview("contp_grp")
-    val rv = uview("contp_repsigs")
-    bandedSigRelation(s, dir, sv)
-    val grp = shingleGrpFrame(s, sv)
-    grp.createOrReplaceTempView(gv)
-    s.sql(
-      s"""SELECT s.doc_id, s.hs FROM $sv s
-         |JOIN (SELECT DISTINCT rep FROM $gv) r ON s.doc_id = r.rep"""
-        .stripMargin)
-      // count-derived width, not the old literal 4 — see repPartitions
-      .coalesce(repPartitions(s, grp.count())).truncated()
-      .createOrReplaceTempView(rv)
-    val parts = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val ver = s.sql(
-      s"""WITH ${contSmallsideCandSql(rv, "df.df, i.h",
-                                      probeParts = parts)}
-         |SELECT doc_a AS rep_a, doc_b AS rep_b, containment FROM (
-         |  SELECT doc_a, doc_b,
-         |    round(cast(graft_isect(a.hs, b.hs) as double)
-         |      / least(size(a.hs), size(b.hs)), 6) AS containment
-         |  FROM cand JOIN $rv a ON a.doc_id = doc_a
-         |            JOIN $rv b ON b.doc_id = doc_b)
-         |WHERE containment >= 0.8""".stripMargin)
-    dropUviews(s, gv, rv)
-    (grp, ver)
-  }
-
+  // boilerplate). PairFamily.ContainmentSmallside.
   private def ddContainmentSmallside(s: SparkSession, dir: String): DataFrame =
-    expandMemberPairs(contpRelations(s, dir), "doc_id", "containment",
-      "doc_a", "doc_b")
+    BandedStore.pairs(PairFamily.ContainmentSmallside, s, dir)
       .orderBy(col("doc_a"), col("doc_b"))
 
   // -- dd_threshold_sweep: tune the dedup threshold from ONE candidate pass ---
@@ -956,7 +682,7 @@ object Dedup extends QueryPack {
     import org.apache.spark.sql.expressions.Window
     val w = Window.orderBy(col("bucket10").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ddJaccardPairs(s, dir)
+    BandedStore.pairs(PairFamily.Jaccard, s, dir)
       .selectExpr("cast(floor(jaccard * 10) as bigint) AS bucket10")
       .groupBy("bucket10").agg(count(lit(1)).as("n_pairs"))
       // <= 5 aggregate rows: the unpartitioned window is bounded-small
@@ -1028,9 +754,7 @@ object Dedup extends QueryPack {
          |near AS (
          |  SELECT DISTINCT new_id FROM (
          |    SELECT new_id,
-         |      round(cast(graft_isect(a.hs, b.hs) as double)
-         |        / (size(a.hs) + size(b.hs) - graft_isect(a.hs, b.hs)), 6)
-         |        AS j
+         |      ${Score.Jaccard.value("a.", "b.")} AS j
          |    FROM cand JOIN inc_sigs a ON a.doc_id = new_id
          |              JOIN inc_sigs b ON b.doc_id = old_id)
          |  WHERE j >= 0.6),
@@ -1090,9 +814,7 @@ object Dedup extends QueryPack {
          |near AS (
          |  SELECT DISTINCT new_id FROM (
          |    SELECT new_id,
-         |      round(cast(graft_isect(a.hs, b.hs) as double)
-         |        / (size(a.hs) + size(b.hs) - graft_isect(a.hs, b.hs)), 6)
-         |        AS j
+         |      ${Score.Jaccard.value("a.", "b.")} AS j
          |    FROM cand JOIN incb_sigs a ON a.doc_id = new_id
          |              JOIN incb_sigs b ON b.doc_id = old_id)
          |  WHERE j >= 0.6),
@@ -1710,122 +1432,12 @@ object Dedup extends QueryPack {
       |WHERE cos_sim >= 0.4
       |ORDER BY vec_a, vec_b""".stripMargin
 
-  /** Unordered banded cosine pairs — the composition form (see
-    * [[ddJaccardPairs]] for why cluster inputs must not carry the sort).
-    */
-  /** Register the cached bucketed embedding relation as `cos_e` —
-    * shared by the pair query and the collapsed cluster edge builder
-    * so probe and index can never band differently.
-    */
-  private def ensureCosE(s: SparkSession, dir: String): String = {
-    val v = cview("cos_e", dir)
-    // cached: the bucketed relation feeds all 12 band sides and both
-    // re-score join-backs — the 60 hyperplane folds run once per
-    // vector, and re-registrations serve the SAME cached blocks (the
-    // cache manager keys on the canonical plan, not the view name).
-    // The view stays registered (dropping it would unpersist that
-    // shared entry under the lazy verify frames); the blocks are
-    // released by invalidateLpEdges through the tracked-cache hook.
-    val e = table(s, dir, "embeddings")
-      .selectExpr("vec_id", "embedding",
-        "graft_dot(embedding, embedding) AS n2",
-        "graft_rh_buckets(embedding) AS bks")
-      .cache()
-    e.createOrReplaceTempView(v)
-    trackCached(s, dir, e)
-    v
-  }
-
-  /** The cosine family's REP-level verified pairs (rep_a, rep_b,
-    * cos_sim) plus the collapse membership registered as `cos_grp` —
-    * [[ddJaccardRepPairs]]' guard for the embedding side: byte-
-    * identical vectors collapse to their min-vec_id rep (key = the
-    * vector rendering, zero-norm carve-out), only reps are banded,
-    * the graft_cos verify runs once per group pair.
-    */
-  private[graft] def ddEmbedLshRepPairs(s: SparkSession,
-                                        dir: String): DataFrame =
-    cosRelations(s, dir).repVer
-
-  /** The cosine family's shared collapse relations, one per
-    * (session, corpus) — see [[jacRelations]].
-    */
-  private def cosRelations(s: SparkSession, dir: String): PairRelations =
-    cosRelCache.getOrBuild(s, s"cos_pairs|$dir") {
-      val (grp, ver) = cosRepVerifyFrame(s, dir)
-      PairRelations(ver.truncated(), grp)
-    }
-
-  /** Membership (eager) + the rep-level banded cosine verify LAZY —
-    * the [[jacRepVerifyFrame]] split for the cosine family's PlanSpec
-    * pins (fused graft_cos kernel, raw prefilter, banded equi-joins).
-    */
-  private[graft] def cosRepVerifyFrame(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    val ev = ensureCosE(s, dir)
-    val gv = uview("cos_grp"); val rv = uview("cos_repe")
-    val grp = embedGrpFrame(s, ev)
-    grp.createOrReplaceTempView(gv)
-    s.sql(
-      s"""SELECT s.vec_id, s.bks FROM $ev s
-         |JOIN (SELECT DISTINCT rep FROM $gv) r ON s.vec_id = r.rep"""
-        .stripMargin)
-      // count-derived width, not the old literal 4 — see repPartitions
-      .coalesce(repPartitions(s, grp.count())).truncated()
-      .createOrReplaceTempView(rv)
-    // Band-side zero-norm guard — the embedding-space twin of
-    // jacBandGuard: a zero vector's hyperplane dots are all 0, so its
-    // sign buckets are the CONSTANT key in every band (all zero-norm
-    // vectors share one bucket — |zero|²/2 candidates at corpus
-    // scale), while its cosine to anything is 0/0 = NaN, which both
-    // engines' NaN-is-greatest comparison semantics would wave
-    // through the >= 0.4 verify as a bogus near-dup edge. Excluding
-    // zero-norm vectors from the BAND side kills both failure modes
-    // at candidate generation; they still reach every node list and
-    // surface as singletons (ZeroNormGuardSpec). The oracle
-    // restatements carry the same WHERE n2 > 0, so both dialects
-    // state the same query. (They are also off the collapse: NaN
-    // cosine means identical zero twins are never a pair.)
-    val bandSelects = (0 until CosBands)
-      .map(b => s"SELECT vec_id, $b AS band, element_at(bks, ${b + 1}) AS bkt" +
-        s" FROM $rv")
-      .mkString(" UNION ALL ")
-    val ver = s.sql(
-      s"""WITH bands AS ($bandSelects),
-         |cand AS (
-         |  SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
-         |  FROM bands x JOIN bands y
-         |    ON x.band = y.band AND x.bkt = y.bkt AND x.vec_id < y.vec_id)
-         |SELECT vec_a AS rep_a, vec_b AS rep_b, cos_sim FROM (
-         |  SELECT vec_a, vec_b, round(cs, 6) AS cos_sim FROM (
-         |    SELECT vec_a, vec_b,
-         |      graft_cos(a.embedding, b.embedding, a.n2, b.n2) AS cs
-         |    FROM cand JOIN $ev a ON a.vec_id = vec_a
-         |              JOIN $ev b ON b.vec_id = vec_b)
-         |  WHERE cs > 0.3999994)
-         |WHERE cos_sim >= 0.4""".stripMargin)
-    dropUviews(s, gv, rv)
-    (grp, ver)
-  }
-
-  /** Member-level banded cosine pairs — the composition form behind
-    * dd_embed_cosine_lsh and dd_decontaminate_semantic: the rep-level
-    * verified pairs expand through `cos_grp` on both sides
-    * (byte-identical vectors make the verified cosine every member
-    * pair's cosine, bit-exactly), and within-group pairs carry
-    * cos_sim 1 directly (round-6 of a cosine within one ulp of 1).
-    * Output is row-for-row the uncollapsed banded pair table.
-    * Expansion via [[expandMemberPairs]] — no temp views.
-    */
-  private def ddEmbedLshPairs(s: SparkSession, dir: String): DataFrame =
-    expandMemberPairs(cosRelations(s, dir), "vec_id", "cos_sim",
-      "vec_a", "vec_b")
-
   private def ddEmbedCosineLsh(s: SparkSession, dir: String): DataFrame =
-    ddEmbedLshPairs(s, dir).orderBy(col("vec_a"), col("vec_b"))
+    BandedStore.pairs(PairFamily.Cosine, s, dir)
+      .orderBy(col("vec_a"), col("vec_b"))
 
   /** Corpus-scale candidate generator with TUNABLE banding — the same
-    * bucket-local equi-join shape as [[ddEmbedLshPairs]], but over the
+    * bucket-local equi-join shape as PairFamily.Cosine, but over the
     * parameterized plane family (`graft_rh_buckets_n`). The fixed 12x5
     * default is the fixture/oracle path (its weights are baked into the
     * DuckDB restatements); a deployment sizes `rows ~ log2(n / bands)`
@@ -1840,7 +1452,7 @@ object Dedup extends QueryPack {
     val bandsDf = emb
       .selectExpr("vec_id", "embedding",
         s"graft_rh_buckets_n(embedding, $bands, $rows) AS bks")
-      // same zero-norm band guard as ddEmbedLshPairs (constant-bucket
+      // same zero-norm band guard as the Embed row (constant-bucket
       // bomb + NaN-cosine wave-through; see the comment there)
       .where(expr("graft_dot(embedding, embedding) > 0"))
       .select(col("vec_id"), posexplode(col("bks")).as(Seq("band", "bkt")))
@@ -1856,63 +1468,36 @@ object Dedup extends QueryPack {
     * shared embed_lsh registry entry), with the EXACT-DUPLICATE bomb
     * defused the same way as [[ddClusterEdges]]: k identical
     * embeddings (duplicate docs embed identically) share every RH-LSH
-    * bucket, so the banded join emits k²/2 pairs that all verify at
-    * cos 1. Identical vectors collapse to a min-vec_id representative
-    * (one groupBy on md5 of the vector rendering, read from the cached
-    * cos_e relation), only representatives band, members attach by
-    * k-1 star edges. Exact: vector-identical nonzero pairs have cos 1
-    * ≥ 0.4 (true edges), a member's banded candidates are carried by
-    * its identically-bucketed rep, and zero-norm vectors are EXCLUDED
-    * from collapse groups (cos 0/0 = NaN is never an edge — same
-    * carve-out as the band-side zero-norm guard), so the component
-    * partition is bit-identical to the uncollapsed banded graph — the
-    * closure oracle and DedupRecallSpec's refinement invariant hold
-    * unchanged. Collapse frames are eager pruned localCheckpoints,
-    * never lazy caches (the measured traps at [[ddClusterEdges]]).
+    * bucket, so the banded join would emit k²/2 pairs that all verify
+    * at cos 1. The Embed row's collapse bands representatives only and
+    * attaches members by k-1 star edges (the exactness argument is at
+    * [[BandedStore]]), so the component partition is bit-identical to
+    * the uncollapsed banded graph. Collapse frames are eager pruned
+    * localCheckpoints, never lazy caches (the measured traps at
+    * [[ddClusterEdges]]).
     */
   private[graft] def embedClusterEdges(s: SparkSession,
                                        dir: String): DataFrame = {
-    val ev = ensureCosE(s, dir)
-    val gv = uview("ec_grp"); val rsv = uview("ec_repsigs")
+    val k = StoreKind.Embed
+    val v = Map("_sigs" -> cview("cos_sigs", dir),
+      "_grp" -> uview("ec_grp"), "_rep" -> uview("ec_repsigs"))
     val rbv = uview("ec_repbands")
-    val grp = embedGrpFrame(s, ev)
-    grp.createOrReplaceTempView(gv)
-    // count-derived widths, not the old literal 4s (see repPartitions):
-    // the membership count bounds reps from above; the band relation
-    // is CosBands rows per rep
-    val nGrp = grp.count()
-    s.sql(
-      s"""SELECT s.vec_id, s.bks FROM $ev s
-         |JOIN (SELECT DISTINCT rep FROM $gv) r ON s.vec_id = r.rep"""
-        .stripMargin)
-      .coalesce(repPartitions(s, nGrp)).truncated()
-      .createOrReplaceTempView(rsv)
-    s.sql(
-      (0 until CosBands)
-        .map(b => s"SELECT vec_id, $b AS band," +
-          s" element_at(bks, ${b + 1}) AS bkt FROM $rsv")
-        .mkString(" UNION ALL "))
+    val (_, nGrp) = BandedStore.collapse(k, s,
+      BandedStore.sigs(k, s, dir), v, Seq("bks"))
+    // the band relation is CosBands rows per rep: a count-derived width
+    s.sql(BandedStore.bandSelects(k, v("_rep"), guarded = false))
       .coalesce(repPartitions(s, CosBands.toLong * nGrp)).truncated()
       .createOrReplaceTempView(rbv)
     val edges = s.sql(
-      s"""WITH cand AS (
-         |  SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
-         |  FROM $rbv x JOIN $rbv y
-         |    ON x.band = y.band AND x.bkt = y.bkt AND x.vec_id < y.vec_id),
-         |ver AS (
-         |  SELECT vec_a, vec_b FROM (
-         |    SELECT vec_a, vec_b, round(cs, 6) AS cos_sim FROM (
-         |      SELECT vec_a, vec_b,
-         |        graft_cos(a.embedding, b.embedding, a.n2, b.n2) AS cs
-         |      FROM cand JOIN $ev a ON a.vec_id = vec_a
-         |                JOIN $ev b ON b.vec_id = vec_b)
-         |    WHERE cs > 0.3999994)
-         |  WHERE cos_sim >= 0.4)
+      s"""WITH cand AS (${BandedStore.candSql(k, rbv, "vec_a", "vec_b")}),
+         |ver AS (${k.score.verify("vec_a, vec_b", "vec_a", "vec_b",
+              s"cand JOIN ${v("_sigs")} a ON a.vec_id = vec_a " +
+              s"JOIN ${v("_sigs")} b ON b.vec_id = vec_b")})
          |SELECT vec_a, vec_b FROM ver
          |UNION ALL
-         |SELECT rep AS vec_a, vec_id AS vec_b FROM $gv
+         |SELECT rep AS vec_a, vec_id AS vec_b FROM ${v("_grp")}
          |WHERE vec_id <> rep""".stripMargin)
-    dropUviews(s, gv, rsv, rbv)
+    dropUviews(s, v("_grp"), v("_rep"), rbv)
     edges
   }
 
@@ -2160,14 +1745,16 @@ object Dedup extends QueryPack {
     lazy val nGrp: Long = grp.count()
   }
 
-  private val jacRelCache = new FrameRegistry[PairRelations](LpEdgeCacheMax)
-  private val cosRelCache = new FrameRegistry[PairRelations](LpEdgeCacheMax)
-  // one registry, two key families (cont_pairs|dir, contp_pairs|dir):
+  // the pair families' registries (PairFamily), owned here so the one
+  // staleness hook (invalidateLpEdges) covers every family. One
+  // registry, two key families (cont_pairs|dir, contp_pairs|dir):
   // invalidate matches on the |dir suffix, so both drop together
-  private val contRelCache = new FrameRegistry[PairRelations](LpEdgeCacheMax)
-  // the phash pair family's registry (r21) — owned here so the one
-  // staleness hook (invalidateLpEdges) covers every pair family;
-  // built/consumed from Multimodal (mmPhashRelations)
+  private[graft] val jacRelCache =
+    new FrameRegistry[PairRelations](LpEdgeCacheMax)
+  private[graft] val cosRelCache =
+    new FrameRegistry[PairRelations](LpEdgeCacheMax)
+  private[graft] val contRelCache =
+    new FrameRegistry[PairRelations](LpEdgeCacheMax)
   private[graft] val phashRelCache =
     new FrameRegistry[PairRelations](LpEdgeCacheMax)
 
@@ -2528,33 +2115,14 @@ object Dedup extends QueryPack {
     * Empty-shingle docs are EXCLUDED from collapse groups (no star
     * edges): two identical too-short texts share md5 but their
     * jaccard is 0/0 = never ≥ 0.6, so they must stay singletons —
-    * same reason [[jacBandGuard]] keeps them off the band side.
+    * same reason the band guard keeps them off the band side.
     */
-  private[graft] def ddClusterEdges(s: SparkSession, dir: String): DataFrame = {
-    // COMPOSED from the jaccard family's shared pair relations (r21):
-    // the edge set is the rep-level VERIFIED pair table plus the k-1
-    // star edges — and [[jacRepVerifyFrame]] already computes that
-    // verified table with the identical banding (8x2), the identical
-    // shingle-set collapse, the identical empty-shingle carve-out and
-    // the identical jaccard >= 0.6 verify (the two SQL bodies were
-    // byte-equal modulo view names). Before r21 this method carried
-    // its own copy of that pipeline, so every dd_cluster call re-ran
-    // the banded self-join + graft_isect verify the registry had
-    // already materialized for dd_jaccard / dd_decontaminate /
-    // dd_source_overlap (~9 CPU-s per call at sf0.1 — the dominant
-    // stage of dd_cluster's profile, guide §2.4: two operations keyed
-    // the same way share one materialization). Consuming
-    // [[jacRelations]] makes the banded corpus pass happen ONCE per
-    // (session, corpus) across the whole jaccard family; the
-    // registry's staleness/LRU contract (invalidateLpEdges) already
-    // covers this caller.
-    val rel = jacRelations(s, dir)
-    rel.repVer
-      .select(col("rep_a").as("doc_a"), col("rep_b").as("doc_b"))
-      .unionAll(rel.grp
-        .where(col("doc_id") =!= col("rep"))
-        .select(col("rep").as("doc_a"), col("doc_id").as("doc_b")))
-  }
+  private[graft] def ddClusterEdges(s: SparkSession, dir: String): DataFrame =
+    // COMPOSED from the jaccard family's shared relations (r21): every
+    // dd_cluster call used to re-run the banded self-join + verify the
+    // registry had already materialized for dd_jaccard /
+    // dd_decontaminate / dd_source_overlap (~9 CPU-s per call at sf0.1)
+    BandedStore.edges(PairFamily.Jaccard, s, dir)
 
   private def ddCluster(s: SparkSession, dir: String): DataFrame =
     labelPropagate("dd_cluster",
@@ -2678,7 +2246,7 @@ object Dedup extends QueryPack {
     */
   private[graft] def ddClusterIncrementalEdges(s: SparkSession,
                                                dir: String): DataFrame = {
-    val rel = jacRelations(s, dir)
+    val rel = BandedStore.relations(PairFamily.Jaccard, s, dir)
     val flags = incrementalDocFlags(s, dir)
     // Scale-adaptive derivation width (r22; was a session-global
     // spark.sql.shuffle.partitions=4 pin — right at sf0.1 where these

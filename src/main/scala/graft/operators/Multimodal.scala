@@ -426,73 +426,12 @@ object Multimodal extends QueryPack {
   // DuckDB oracle is the INDEPENDENT all-pairs O(N^2) spec — no banding
   // — so the hash-compare checks the candidate recall, not a shared
   // shortcut.
-  /** Unordered banded pairs — the composition form (mm_phash_cluster's
-    * label propagation consumes this; no range-partition sort, whose
-    * sampling pass would re-execute the pipeline, in the edge lineage).
-    */
-  /** The phash family's REP-level verified pairs plus the collapse
-    * membership — [[Dedup.jacRepVerifyFrame]]'s shape on the phash
-    * side (r21): signature-identical items collapse to their
-    * min-doc_id representative, only representatives are banded, and
-    * the Hamming verify runs ONCE per group pair. Exact with no
-    * carve-out (identical phash ⟹ hamming 0 ≤ 3 — every within-group
-    * pair is a true pair by the verify's own criterion, and a
-    * member's banding equals its rep's). The membership is EAGER
-    * (multiply scanned in one job); the verify frame stays lazy —
-    * [[mmPhashRelations]] owns checkpointing it into the registry.
-    */
-  private def mmPhashRepVerifyFrame(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    val sv = Dedup.cview("phash_sigs", dir)
-    val gv = Dedup.uview("phash_grp"); val rv = Dedup.uview("phash_reps")
-    // cached: the signature projection (64 substring probes per row)
-    // feeds the collapse, the 4 band sides AND both exact-re-check
-    // join-backs — without the cache it would be recomputed per scan
-    val sigs = phashSigs(s, dir).cache()
-    sigs.createOrReplaceTempView(sv)
-    Dedup.trackCached(s, dir, sigs)
-    collapseByPhash(s, sv, gv, rv)
-    val grp = s.table(gv)
-    val ver = s.sql(
-      s"""WITH bands AS (${BandedStore.bandSelects(StoreKind.Phash, rv)}),
-         |cand AS (
-         |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-         |  FROM bands x JOIN bands y
-         |    ON x.band = y.band AND x.bv = y.bv AND x.doc_id < y.doc_id)
-         |SELECT doc_a AS rep_a, doc_b AS rep_b,
-         |  cast(bit_count(a.phash ^ b.phash) as int) AS hamming
-         |FROM cand JOIN $sv a ON a.doc_id = doc_a
-         |          JOIN $sv b ON b.doc_id = doc_b
-         |WHERE bit_count(a.phash ^ b.phash) <= 3""".stripMargin)
-    Dedup.dropUviews(s, gv, rv)
-    (grp, ver)
-  }
-
-  /** The family's shared collapse relations, materialized once per
-    * (session, corpus) through the registry — the jaccard/cosine pair
-    * families' contract (staleness + LRU bound owned by
-    * [[Dedup.invalidateLpEdges]]) applied to the media modality:
-    * two consumers (mm_phash_pairs, mm_phash_cluster), one banded
-    * corpus pass.
-    */
-  private[graft] def mmPhashRelations(s: SparkSession,
-                                      dir: String): Dedup.PairRelations =
-    Dedup.phashRelCache.getOrBuild(s, s"phash_pairs|$dir") {
-      val (grp, ver) = mmPhashRepVerifyFrame(s, dir)
-      Dedup.PairRelations(ver.truncated(), grp)
-    }
-
-  /** Member-level expansion of the rep-verified pairs — row-for-row
-    * the uncollapsed banded pair table (a member's phash equals its
-    * rep's, so a cross-group pair's hamming is the verified rep-pair
-    * hamming exactly; within-group pairs are hamming 0 by identity).
-    */
-  private def mmPhashPairsUnordered(s: SparkSession, dir: String): DataFrame =
-    Dedup.expandMemberPairs(mmPhashRelations(s, dir), "doc_id", "hamming",
-      "doc_a", "doc_b", withinScore = lit(0).cast("int"))
-
+  // The pairs are PairFamily.Phash's: signature-identical items
+  // collapse to their min-doc_id representative, and the Hamming
+  // verify runs once per group pair.
   private def mmPhashPairs(s: SparkSession, dir: String): DataFrame =
-    mmPhashPairsUnordered(s, dir).orderBy(col("doc_a"), col("doc_b"))
+    BandedStore.pairs(PairFamily.Phash, s, dir)
+      .orderBy(col("doc_a"), col("doc_b"))
 
   private val mmPhashPairsSql =
     s"""WITH $phashSigsSql
@@ -502,19 +441,6 @@ object Multimodal extends QueryPack {
        |WHERE bit_count(xor(a.phash, b.phash)) <= 3
        |ORDER BY doc_a, doc_b""".stripMargin
 
-  /** mm_phash_cluster's edges with the exact-duplicate bomb defused —
-    * the media twin of Dedup.ddClusterEdges: k byte-identical payloads
-    * share every band value and the banded join emits k²/2 pairs, all
-    * real edges (hamming 0). Collapse signature-identical items to
-    * their min-doc_id representative via one map-side-combinable
-    * groupBy on the 64-bit phash, band only representatives, connect
-    * members by k-1 star edges. Exact with NO empty-input carve-out
-    * (unlike the jaccard side): hamming is defined on every signature,
-    * and identical phash ⟹ hamming 0 ≤ 3, so a star edge is always a
-    * true edge by the verify's own criterion, and a member's banded
-    * edges are carried by its identically-signed rep — the component
-    * partition is bit-identical to the uncollapsed graph.
-    */
   /** The signature rep-collapse membership (doc_id → min-doc_id rep
     * per identical signature) over a registered sig view, eager (it is
     * scanned several times downstream) — ONE min-rep rule for the pair
@@ -529,47 +455,16 @@ object Multimodal extends QueryPack {
          |ON k.phash = g.phash""".stripMargin)
       .truncated()
 
-  /** Register [[phashGrpFrame]] as `grpView` and the representatives'
-    * sig rows as `repView` (eager).
+  /** mm_phash_cluster's edges with the exact-duplicate bomb defused —
+    * the media twin of Dedup.ddClusterEdges: k byte-identical payloads
+    * share every band value and would emit k²/2 banded pairs, all real
+    * edges (hamming 0); the family's collapse leaves the verified rep
+    * pairs plus k-1 star edges, shared through its registry with
+    * mm_phash_pairs.
     */
-  private def collapseByPhash(s: SparkSession, sigsView: String,
-                              grpView: String, repView: String): Unit = {
-    val grp = phashGrpFrame(s, sigsView)
-    grp.createOrReplaceTempView(grpView)
-    // scale-adaptive (r22, was a literal coalesce(4)): membership count
-    // bounds the rep count from above, one cheap job over the
-    // just-checkpointed frame — see Dedup.repPartitions (reps are
-    // corpus-scale when signatures are mostly unique, so a constant
-    // here is wrong at 100 TB)
-    s.sql(
-      s"""SELECT s.doc_id, s.phash FROM $sigsView s
-         |JOIN (SELECT DISTINCT rep FROM $grpView) r ON s.doc_id = r.rep"""
-        .stripMargin)
-      .coalesce(graft.operators.Dedup.repPartitions(s, grp.count()))
-      .truncated().createOrReplaceTempView(repView)
-  }
-
-  private[graft] def mmPhashClusterEdges(s: SparkSession, dir: String): DataFrame = {
-    // COMPOSED from the family's shared pair relations (r21, the
-    // ddClusterEdges treatment): the edge set is the rep-level
-    // verified pair table plus the k-1 star edges — the collapse key
-    // (the 64-bit signature itself), the banding (shared
-    // phash band selects) and the Hamming <= 3 verify are identical to
-    // what [[mmPhashRepVerifyFrame]] already materializes for
-    // mm_phash_pairs, so this caller re-uses the registry frame
-    // instead of re-running the banded self-join per call (guide
-    // §2.4: operations keyed the same way share one exchange/
-    // materialization). Exactness argument unchanged from the inline
-    // r16 version: phash-identical ⟹ hamming 0 ⟹ every star edge is
-    // a true edge, and a member's banded edges are carried by its
-    // identically-signed rep.
-    val rel = mmPhashRelations(s, dir)
-    rel.repVer
-      .select(col("rep_a").as("doc_a"), col("rep_b").as("doc_b"))
-      .unionAll(rel.grp
-        .where(col("doc_id") =!= col("rep"))
-        .select(col("rep").as("doc_a"), col("doc_id").as("doc_b")))
-  }
+  private[graft] def mmPhashClusterEdges(s: SparkSession,
+                                         dir: String): DataFrame =
+    BandedStore.edges(PairFamily.Phash, s, dir)
 
   // Media near-dup components: min-label propagation (Dedup's shared
   // loop) over the banded phash pairs — representative-collapsed, see
@@ -655,12 +550,9 @@ object Multimodal extends QueryPack {
          |  SELECT DISTINCT x.doc_id AS rep_a, y.doc_id AS rep_b
          |  FROM pfs_bands x JOIN pfs_bands y
          |    ON x.band = y.band AND x.bv = y.bv AND x.doc_id < y.doc_id),
-         |ver AS (
-         |  SELECT rep_a, rep_b,
-         |    cast(bit_count(a.phash ^ b.phash) as int) AS hamming
-         |  FROM repver JOIN pfs_sigs a ON a.doc_id = rep_a
-         |              JOIN pfs_sigs b ON b.doc_id = rep_b
-         |  WHERE bit_count(a.phash ^ b.phash) <= 3)
+         |ver AS (${Score.Hamming.rows("rep_a", "rep_b", "repver " +
+              "JOIN pfs_sigs a ON a.doc_id = rep_a " +
+              "JOIN pfs_sigs b ON b.doc_id = rep_b")})
          |SELECT least(ga.doc_id, gb.doc_id) AS doc_a,
          |       greatest(ga.doc_id, gb.doc_id) AS doc_b, hamming
          |FROM ver JOIN pfs_grp ga ON ga.rep = rep_a

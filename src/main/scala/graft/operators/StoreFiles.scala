@@ -373,7 +373,18 @@ private[graft] object StoreFiles {
   private def parseLayout(lines: Array[String])
       : (Int, Seq[String], Seq[String], String) =
     (lines(0).trim.toInt, lines(1).split(",").toSeq,
-      lines(2).split(",").toSeq, lines(3))
+      lines(2).split(",").toSeq, nullableDdl(lines(3)))
+
+  /** `ddl` with every top-level column nullable — the one form a
+    * relation's schema is recorded and compared in, however it lands: a
+    * build or a delta writes computed NOT NULL columns, a seal unions
+    * them with a stored file scan, which Spark always reads nullable.
+    * Sidecars written in the NOT NULL form read the same way.
+    */
+  private def nullableDdl(ddl: String): String =
+    org.apache.spark.sql.types.StructType(
+      org.apache.spark.sql.types.StructType.fromDDL(ddl)
+        .map(_.copy(nullable = true))).toDDL
 
   private[graft] def sidecarLayout(path: String)
       : Option[(Int, Seq[String], Seq[String], String)] =
@@ -440,7 +451,7 @@ private[graft] object StoreFiles {
     val s = df.sparkSession
     val n = bucketCount(s)
     val sortCols = keys ++ sortExtra
-    val ddl = df.schema.toDDL
+    val ddl = nullableDdl(df.schema.toDDL)
     // one file per bucket: without the repartition every write task
     // opens a file per bucket it sees (tasks x buckets small files),
     // and multi-file buckets forfeit the scan's sort-order claim

@@ -521,7 +521,7 @@ object Streams {
       .select(k.id, "owner_id" +: "event_time" +: k.payloadCols: _*)
       .dropDuplicates(k.id, "owner_id", "event_time")
       .join(oldPayload, Seq("owner_id"))
-      .transform(k.probeVerify)
+      .transform(k.score.probe)
       .select(col(k.id), col("owner_id").as("rep"))
       .join(grp, Seq("rep"))
       .select(col(k.id), col("member_id").as("owner_id"))

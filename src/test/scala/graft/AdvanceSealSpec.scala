@@ -99,6 +99,24 @@ class AdvanceSealSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
+  test("a delta over a sealed generation aligns with it on every " +
+      "relation: doctor reports no divergence and the bands chain " +
+      "resolves to one aligned table") {
+    val root = clusterRoot("align")
+    val seal = sealAdvance(root, 1)
+    assert(seal.exists(_.contains("[compact]")), seal)
+    val delta = StoreCtl.run(spark, Seq("advance", "--delta", "cluster",
+      dir, root, "doc_id % 8 = 2"))
+    assert(delta.isRight, delta)
+    val doctor = StoreCtl.run(spark, Seq("doctor", root))
+    assert(doctor.isRight && !doctor.exists(_.contains("diverge")), doctor)
+    val gens = StoreFiles.serve(root).flatMap(StoreFiles.chainPaths)
+      .fold(e => fail(e), identity)
+    assert(gens.size == 2, gens)
+    assert(StoreFiles.chainTableFor(gens.map(g => s"$g/bands")).isDefined,
+      gens.map(g => StoreFiles.sidecarLayout(s"$g/bands")))
+  }
+
   test("every job of a sealing advance is named after its fold phase; " +
       "none reports a CompletableFuture call site") {
     val root = clusterRoot("names")

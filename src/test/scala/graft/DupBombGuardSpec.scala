@@ -1,7 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{BandedStore, Dedup, Multimodal, StoreKind}
+import graft.operators.{BandedStore, Dedup, Multimodal, PairFamily,
+  StoreKind}
 
 /** The exact-duplicate bucket bomb — the classic production failure of
   * minhash/phash LSH at corpus scale: k byte-identical copies of one
@@ -279,7 +280,7 @@ class DupBombGuardSpec extends AnyFunSuite {
     // ONE collapse group here (the pair table has no batch sides), so
     // the rep-level relation holds only the genuine near-dup pair —
     // zero verifies spent on the clique
-    val reps = Dedup.ddJaccardRepPairs(spark, incDir)
+    val reps = BandedStore.relations(PairFamily.Jaccard, spark, incDir).repVer
       .select("rep_a", "rep_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(reps == Set((210L, 211L)), reps)
@@ -300,7 +301,7 @@ class DupBombGuardSpec extends AnyFunSuite {
     // does; incDir's 41 identical texts are ONE collapse group, so
     // the rep relation holds only the genuine near-dup pair
     // (containment 11/12 — one bigram of twelve differs)
-    val reps = Dedup.ddContainmentRepPairs(spark, incDir)
+    val reps = BandedStore.relations(PairFamily.Containment, spark, incDir).repVer
       .select("rep_a", "rep_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(reps == Set((210L, 211L)), reps)
@@ -317,7 +318,8 @@ class DupBombGuardSpec extends AnyFunSuite {
   test("dd_containment_smallside: the bomb collapses BEFORE prefix " +
       "selection — one probe prefix and one index row set per group, " +
       "member expansion still answers the all-pairs spec") {
-    val reps = Dedup.ddContainmentSmallsideRepPairs(spark, incDir)
+    val reps = BandedStore.relations(PairFamily.ContainmentSmallside,
+      spark, incDir).repVer
       .select("rep_a", "rep_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(reps == Set((210L, 211L)), reps)
@@ -337,7 +339,7 @@ class DupBombGuardSpec extends AnyFunSuite {
     // copy 100 (different bytes — its own group, cos exactly 1 via
     // rep-rep banding), two distinct vectors, two zero vectors (off
     // the collapse AND the bands)
-    val reps = Dedup.ddEmbedLshRepPairs(spark, dir)
+    val reps = BandedStore.relations(PairFamily.Cosine, spark, dir).repVer
       .select("rep_a", "rep_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(reps == Set((0L, 100L)), reps)
@@ -347,6 +349,37 @@ class DupBombGuardSpec extends AnyFunSuite {
     assert(full.forall(_._3 == 1.0d))
     assert(!full.exists(t => t._1 >= 300L || t._2 >= 300L),
       "zero-vector twins leaked into the pair table")
+  }
+
+  test("mm_phash_pairs: the bombed pair table verifies once per group — " +
+      "rep-level pairs are O(groups) while the member expansion equals " +
+      "the all-pairs Hamming <= 3 table row for row") {
+    // dir's documents: the 40-copy bomb is ONE phash group (rep 0);
+    // the near-dup 100, the two distinct docs and the identical
+    // single-word pair 300/301 (one degenerate signature, rep 300 —
+    // no carve-out on the media side) are the other groups
+    val reps = BandedStore.relations(PairFamily.Phash, spark, dir).repVer
+      .select("rep_a", "rep_b")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val groupReps = Set(0L, 100L, 200L, 201L, 300L)
+    assert(reps.forall { case (a, b) => groupReps(a) && groupReps(b) },
+      s"a non-representative member reached the verify: $reps")
+    assert(reps.size <= groupReps.size * (groupReps.size - 1) / 2, reps)
+    val sigs = SparkEntry.queries("mm_phash")(spark, dir)
+      .select("doc_id", "phash")
+    val allPairs = sigs.as("a").join(sigs.as("b"),
+        org.apache.spark.sql.functions.expr(
+          "a.doc_id < b.doc_id AND bit_count(a.phash ^ b.phash) <= 3"))
+      .selectExpr("a.doc_id", "b.doc_id",
+        "cast(bit_count(a.phash ^ b.phash) as int)")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+      .sorted.toSeq
+    assert(allPairs.count(t => t._2 < Bomb) == Bomb * (Bomb - 1) / 2,
+      "fixture bomb did not produce the all-pairs phash clique")
+    val full = SparkEntry.queries("mm_phash_pairs")(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
+    assert(full == allPairs,
+      s"served ${full.size} pair rows vs all-pairs ${allPairs.size}")
   }
 
   test("dd_lp_edges: the row-for-row oracle equality holds on a BOMBED " +

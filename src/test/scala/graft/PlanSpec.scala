@@ -77,7 +77,8 @@ class PlanSpec extends AnyFunSuite {
     // the served key is the membership expansion over the registry's
     // checkpointed rep pairs (r17); the banded-candidate claim lives
     // in the VERIFY the registry materializes — pin its lazy frame
-    val p = operators.Dedup.jacRepVerifyFrame(spark, dir)
+    val p = BandedStore.verifyFrame(
+      operators.PairFamily.Jaccard, spark, dir)
       ._2.queryExecution.executedPlan.toString
     assert(!p.contains("BroadcastNestedLoopJoin"), p.take(3000))
     assert(!p.contains("CartesianProduct"), p.take(3000))
@@ -96,7 +97,8 @@ class PlanSpec extends AnyFunSuite {
     // r18: the served key is the membership expansion over the
     // registry's checkpointed rep pairs — the banded-candidate claim
     // lives in the verify; pin its lazy frame (the jac/cos idiom)
-    val p = operators.Dedup.contRepVerifyFrame(spark, dir)
+    val p = BandedStore.verifyFrame(
+      operators.PairFamily.Containment, spark, dir)
       ._2.queryExecution.executedPlan.toString
     assert(!p.contains("BroadcastNestedLoopJoin"), p.take(3000))
     assert(!p.contains("CartesianProduct"), p.take(3000))
@@ -110,7 +112,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("dd_containment_smallside: inverted-index equi join, no cross product") {
-    val p = operators.Dedup.contpRepVerifyFrame(spark, dir)
+    val p = BandedStore.verifyFrame(
+      operators.PairFamily.ContainmentSmallside, spark, dir)
       ._2.queryExecution.executedPlan.toString
     assert(!p.contains("BroadcastNestedLoopJoin"), p.take(3000))
     assert(!p.contains("CartesianProduct"), p.take(3000))
@@ -273,7 +276,8 @@ class PlanSpec extends AnyFunSuite {
     // the kernel + prefilter live in the registry-materialized verify
     // (r17: the served key is the membership expansion) — pin the
     // verify's lazy frame
-    val p = operators.Dedup.cosRepVerifyFrame(spark, dir)
+    val p = BandedStore.verifyFrame(
+      operators.PairFamily.Cosine, spark, dir)
       ._2.queryExecution.executedPlan.toString
     // one kernel call per pair instead of a dot/sqrt/divide tree, and
     // the primitive-compare prefilter that keeps BigDecimal rounding
@@ -283,7 +287,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("dd_embed_cosine_lsh: banded candidates — no all-pairs or constant-key join") {
-    val p = operators.Dedup.cosRepVerifyFrame(spark, dir)
+    val p = BandedStore.verifyFrame(
+      operators.PairFamily.Cosine, spark, dir)
       ._2.queryExecution.executedPlan.toString
     assert(!p.contains("BroadcastNestedLoopJoin"), p.take(3000))
     assert(!p.contains("CartesianProduct"), p.take(3000))
@@ -440,7 +445,8 @@ class PlanSpec extends AnyFunSuite {
     // REPARTITION_BY_NUM marker on an exchange over the probe key.
     // (r18: the hint lives in the registry-materialized verify — pin
     // its lazy frame; the served key is the membership expansion.)
-    val p = operators.Dedup.contpRepVerifyFrame(spark, dir)
+    val p = BandedStore.verifyFrame(
+      operators.PairFamily.ContainmentSmallside, spark, dir)
       ._2.queryExecution.executedPlan.toString
     assert(p.contains("REPARTITION_BY_NUM"), p.take(4000))
     // and the explosive join itself stays an equi (shuffled hash /

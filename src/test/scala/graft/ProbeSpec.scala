@@ -75,6 +75,18 @@ class ProbeSpec extends AnyFunSuite {
     }
   }
 
+  test("plan: a dump names no process id and no hashed store table") {
+    val out = StoreFiles.scratchDir("graft_probe_plans_", dir)
+    probe("plan", "edge:dd_cluster_fold_stored", out, "s", dir)
+    val text = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(s"$out/edge_dd_cluster_fold_stored_s.txt"))
+    assert(text.contains("graft_cstore_"), text.take(2000))
+    assert(!text.contains(s"_p${ProcessHandle.current().pid()}"),
+      text.take(2000))
+    assert("graft_(bkt|chn)_[0-9a-f]{16}".r.findFirstIn(text).isEmpty,
+      text.take(2000))
+  }
+
   test("a malformed line or an unknown key is one usage error") {
     Seq("time", "stages", "aqe", "stream").foreach { m =>
       assert(Probe.parse(Seq(m, "no_such_key", dir)) ==

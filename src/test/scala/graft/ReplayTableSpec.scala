@@ -53,4 +53,24 @@ class ReplayTableSpec extends AnyFunSuite {
     assert(served.size == 12)
     assert(Bench.StoreBuildKeys.filter(_.startsWith("st_")) == served)
   }
+
+  test("Bench's build keys: the kind table's store and fold keys plus " +
+      "the hand-listed ones, the same set as when all were listed") {
+    val listed = Set(
+      "dd_cluster_store", "dd_cluster_fold_stored",
+      "dd_embed_cluster_store", "dd_embed_cluster_fold_stored",
+      "mm_phash_store", "mm_phash_fold_stored",
+      "sim_ivfpq_pretrained", "sim_ivfpq_stored", "sim_ivfpq_fold_stored",
+      "sim_ivfpq_refine", "sim_ann_recall_stored", "sim_ann_recall_global",
+      "sim_ann_recall_global_sampled", "dd_lp_edges", "dd_cluster",
+      "mm_phash_cluster", "dd_cluster_incremental",
+      "dd_embed_cluster_incremental", "dd_decontaminate",
+      "dd_decontaminate_semantic", "dd_containment",
+      "dd_containment_smallside") ++
+      Seq("store_dedup", "store_neardup", "decontaminate",
+        "decontaminate_semantic", "ann_serve", "store_phash")
+        .flatMap(f => Seq(s"st_${f}_replay", s"st_${f}_ooo_replay"))
+    assert(listed.size == 34)
+    assert(Bench.StoreBuildKeys == listed)
+  }
 }

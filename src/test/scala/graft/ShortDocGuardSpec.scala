@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
+import graft.operators.{BandedStore, StoreKind}
 
 /** The empty-shingle band-side skew guard (Dedup.jacBandGuard).
   *
@@ -49,7 +49,10 @@ class ShortDocGuardSpec extends AnyFunSuite {
   private val shortIds = Set(10000L, 10001L, 10002L, 10010L, 10011L)
 
   test("short docs contribute ZERO band rows; full docs keep all 8") {
-    val bands = Dedup.jaccardBandRowsForTest(spark, doctoredDir)
+    BandedStore.sigs(StoreKind.Cluster, spark, doctoredDir)
+      .createOrReplaceTempView("sdg_sigs")
+    val bands = spark
+      .sql(BandedStore.bandSelects(StoreKind.Cluster, "sdg_sigs"))
       .groupBy("doc_id").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(shortIds.forall(id => !bands.contains(id)),
