@@ -103,8 +103,9 @@ object Bench {
     // the shared embed-LSH edge registry's declared cold-build pricer
     "dd_lp_edges",
     // first-alphabetical consumers of the r17 shared pair-relation
-    // registries: their rep 1 materializes the family's collapse +
-    // rep-verify relations (jaccard and cosine respectively).
+    // registries (now CorpusState `<family>_pairs` entries): their
+    // rep 1 materializes the family's collapse + rep-verify relations
+    // (jaccard and cosine respectively).
     // r21: dd_cluster composes its edges from the SAME jaccard
     // registry (plus its own shared LP edge structure), so — running
     // alphabetically first among the consumers — its rep 1 now pays
@@ -116,10 +117,11 @@ object Bench {
     // consumer, so its rep 1 pays the family build
     "mm_phash_cluster",
     // r22: the incremental queries' PRIOR-phase assignment joined the
-    // registry (Dedup.priorLblCache — the stored-prior stand-in is
-    // corpus-deterministic), so each key's rep 1 now pays those LP
-    // rounds once per session and the medians are warm-rep-only, the
-    // same accounting shift as every family-sharing key above. Both
+    // registry (the `<c|e>inc_prior_lbl` CorpusState entries — the
+    // stored-prior stand-in is corpus-deterministic), so each key's
+    // rep 1 now pays those LP rounds once per session and the medians
+    // are warm-rep-only, the same accounting shift as every
+    // family-sharing key above. Both
     // keys are in AddedAfterR10, so the anchor channel is untouched.
     "dd_cluster_incremental", "dd_embed_cluster_incremental",
     "dd_decontaminate", "dd_decontaminate_semantic",

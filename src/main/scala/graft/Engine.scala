@@ -79,19 +79,22 @@ object Engine {
   /** The ONE corpus-rewrite staleness hook: an operator that rewrites
     * a corpus dir IN PLACE (fixtures regenerated, a backfill landing
     * over the same path) calls this before re-querying, and every
-    * pack's session-lifetime state keyed on that dir — the dedup
-    * registries' derived frames and cached corpus scans, similarity's
-    * trained IVF-PQ model and tracked relations — is dropped, so the
-    * next call rereads the rewritten files instead of serving
-    * pre-rewrite cached blocks (the cache manager matches canonical
-    * plans, not file contents). Out of scope, deliberately: the
-    * pid-scoped scratch STORES on disk (delete the scratch dir) and
-    * pointer-served generation roots (immutable by contract — rewrite
-    * means a new generation + flip, never an in-place edit).
+    * pack's session-lifetime state keyed on that dir is dropped — the
+    * one [[CorpusState]] registry's entries (LP edge structures, pair
+    * relations, prior labels, the trained IVF-PQ model) and tracked
+    * `.cache()`d corpus scans, bounded there at
+    * [[CorpusState.MaxCorpora]] corpora per process, plus Dedup's
+    * fixed-name builder views — so the next call rereads the rewritten
+    * files instead of serving pre-rewrite cached blocks (the cache
+    * manager matches canonical plans, not file contents). Out of
+    * scope, deliberately: the pid-scoped scratch STORES on disk
+    * (delete the scratch dir) and pointer-served generation roots
+    * (immutable by contract — rewrite means a new generation + flip,
+    * never an in-place edit).
     */
   def invalidateCorpus(spark: SparkSession, dir: String): Unit = {
-    graft.operators.Dedup.invalidateLpEdges(spark, dir)
-    graft.operators.Similarity.invalidateCorpus(spark, dir)
+    CorpusState.invalidate(spark, dir)
+    graft.operators.Dedup.dropBuilderViews(spark)
   }
 
   /** The driver's testdata has shipped `events.ts` in two physical
@@ -211,8 +214,8 @@ object Engine {
       case None => df.localCheckpoint()
       case Some(dir) =>
         val sc = df.sparkSession.sparkContext
-        // sweep stopped contexts from BOTH maps (the FrameRegistry
-        // purgeDead discipline): a process that cycles contexts must
+        // sweep stopped contexts from BOTH maps (CorpusState's
+        // dead-session purge): a process that cycles contexts must
         // not pin each dead one plus its lock for the process lifetime
         ckptLocks.keySet.removeIf(_.isStopped)
         ckptDirSet.keySet.removeIf(_.isStopped)

@@ -31,8 +31,10 @@ import graft.operators.{Banded, BandedStore, Dedup, StoreKind}
   * or CPU spike at unchanged jobs to heap weather rather than a plan.
   *
   *   - `time` prints each rep to stderr and one `TIMEONE` line (3 reps
-  *     by default). `--cold` drops the shared LP edge registry before
-  *     every rep, so LP consumers pay their edge build each time.
+  *     by default). `--cold` clears [[CorpusState]] before every rep —
+  *     the LP edges, pair relations, prior labels, the trained IVF-PQ
+  *     model and the tracked corpus scans — so their consumers pay
+  *     their builds each time.
   *   - `stages` prints one line per stage of a warm rep: tasks, executor
   *     CPU, shuffle write, wall and the head of the stage name (the call
   *     site). A label-propagation round's stage also shows its
@@ -142,7 +144,7 @@ object Probe {
       case "time" =>
         warmUp()
         val reps = (1 to req.reps).map { _ =>
-          if (req.cold) Dedup.clearLpEdgeCache()
+          if (req.cold) CorpusState.clear()
           val r = rep(frame().count())
           System.err.println(s"rep: $r")
           r

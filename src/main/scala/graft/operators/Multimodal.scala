@@ -478,7 +478,7 @@ object Multimodal extends QueryPack {
       media(s, dir).select("doc_id"),
       // shared LP edge structure per (session, corpus) — the
       // dd_cluster/dd_embed_cluster discipline (r21)
-      shareKey = Some(s"mm_phash_cluster_edges|$dir"))
+      shareKey = Some(dir -> "mm_phash_cluster_edges"))
       .orderBy(col("doc_id"))
 
   // -- mm_phash_store: persist the catalog's phash index, serve the LOADED copy

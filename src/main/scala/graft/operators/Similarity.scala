@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Engine._
-import graft.QueryPack
+import graft.{CorpusState, QueryPack}
 
 /** Similarity-search operators over the `embeddings` table
   * (`vec_id: bigint, embedding: array<float>, label: int`):
@@ -236,23 +236,21 @@ object Similarity extends QueryPack {
     // bucket equi-join generates the candidates; the pair projection is
     // persisted before the threshold filter (see Dedup.ddEmbedCosine for
     // the pushdown rationale)
-    val e = table(s, dir, "embeddings")
+    val e = CorpusState.track(s, dir, table(s, dir, "embeddings")
       .selectExpr("vec_id", "embedding",
         s"${dotS("embedding", "embedding")} AS n2",
         s"${bucketExpr(planeDotS)} AS bucket")
-      .cache()
-    trackCached(s, dir, e)
+      .cache())
     val a = e.select(col("vec_id").as("vec_a"), col("embedding").as("ea"),
       col("n2").as("n2a"), col("bucket"))
     val b = e.select(col("vec_id").as("vec_b"), col("embedding").as("eb"),
       col("n2").as("n2b"), col("bucket").as("bucket_b"))
-    val pairs = a
+    val pairs = CorpusState.track(s, dir, a
       .join(b, col("bucket") === col("bucket_b")
         && col("vec_a") < col("vec_b"))
       .selectExpr("vec_a", "vec_b",
         s"round(${dotS("ea", "eb")} / sqrt(n2a * n2b), 6) AS cos_sim")
-      .cache()
-    trackCached(s, dir, pairs)
+      .cache())
     pairs.filter(col("cos_sim") >= 0.4).orderBy(col("vec_a"), col("vec_b"))
   }
 
@@ -312,7 +310,7 @@ object Similarity extends QueryPack {
     // inlines views, so an uncached projection re-runs the 8-plane
     // hyperplane folds per scan — the cost class the trainIvfPq doc
     // records
-    trackCached(s, dir, table(s, dir, "embeddings")
+    CorpusState.track(s, dir, table(s, dir, "embeddings")
       .selectExpr("vec_id", "embedding",
         s"${dotS("embedding", "embedding")} AS n2",
         s"${bucketExpr(planeDotS)} AS bucket")
@@ -438,7 +436,7 @@ object Similarity extends QueryPack {
   private[graft] val IvfQ = 492
 
   private def simIvfProbe(s: SparkSession, dir: String): DataFrame = {
-    trackCached(s, dir, table(s, dir, "embeddings")
+    CorpusState.track(s, dir, table(s, dir, "embeddings")
       .selectExpr("vec_id", "embedding",
         s"${dotS("embedding", "embedding")} AS n2")
       .cache())
@@ -863,9 +861,9 @@ object Similarity extends QueryPack {
     // ADC serving plan as the pretrained path. Same fixed-point Lloyd
     // and ADC arithmetic, so the result is byte-identical to the
     // self-contained train+score SQL the oracle states.
-    val model = trainIvfPq(s, dir)
-    purgeDeadSessions()
-    ivfpqModelCache.put((s, dir), model) // later pretrained calls reuse
+    // The new model replaces the entry later pretrained calls reuse.
+    CorpusState.drop(s, dir, ModelEntry)
+    val model = cachedModel(s, dir)
     registerServingViews(s, dir, model)
     s.sql(s"WITH ${servingCtes(model)}\n" +
       servingAdcSelect(3, ordered = true))
@@ -917,82 +915,13 @@ object Similarity extends QueryPack {
                                        codebooks: Seq[Seq[(Long, Seq[Long])]],
                                        codes: DataFrame)
 
-  // Keyed on (session, dir), not dir alone: the cached code table is a
-  // localCheckpoint bound to the session that trained it, so a cache
-  // hit from a different (e.g. restarted) session would serve RDD
-  // blocks of a dead context. Sessions are compared by identity.
-  private val ivfpqModelCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), IvfPqModel]
+  /** The full-corpus-trained model's [[graft.CorpusState]] entry: its
+    * code table is a localCheckpoint bound to the session that trained
+    * it, so the entry is session-scoped like every other. */
+  private[graft] val ModelEntry = "ivfpq_model"
 
-  /** Cached corpus-derived relations per (session, corpus) —
-    * Dedup.trackCached's discipline for THIS pack's `.cache()` sites
-    * (the LSH projection/pair relations, the IVF norm view, the
-    * recall view): the cache manager matches canonical plans, not
-    * file contents, so a corpus rewritten in place would keep serving
-    * stale blocks until [[invalidateCorpus]] releases them. LRU past
-    * 16 entries (a long-lived multi-corpus session otherwise pins
-    * every corpus's scan blocks forever); evicted or invalidated
-    * entries unpersist and consumers recompute on demand.
-    */
-  private val trackedCaches =
-    new java.util.LinkedHashMap[(SparkSession, String), List[DataFrame]](
-        16, 0.75f, /*accessOrder=*/ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String), List[DataFrame]])
-          : Boolean = {
-        val evict = size() > 16
-        if (evict && !e.getKey._1.sparkContext.isStopped)
-          e.getValue.foreach(_.unpersist(blocking = false))
-        evict
-      }
-    }
-
-  private def trackCached(s: SparkSession, dir: String,
-                          df: DataFrame): DataFrame =
-    trackedCaches.synchronized {
-      val k = (s, dir)
-      val cur = Option(trackedCaches.get(k)).getOrElse(Nil)
-      if (!cur.exists(_.queryExecution.analyzed
-          .sameResult(df.queryExecution.analyzed)))
-        trackedCaches.put(k, df :: cur)
-      df
-    }
-
-  /** The corpus-rewrite staleness hook (Dedup.invalidateLpEdges' twin
-    * for this pack, both behind [[graft.Engine.invalidateCorpus]]):
-    * drops the (session, dir) trained-model cache and unpersists the
-    * tracked corpus-scan relations, so the next call retrains/rereads
-    * the rewritten files. The pid-scoped DISK stores (ensureIvfPqStore
-    * et al.) are deliberately out of scope, like Dedup's scratch
-    * stores: they are per-process fixtures an operator deletes with
-    * the scratch dir.
-    */
-  /** Test hook: the cached trained model for (session, dir), if any. */
-  private[graft] def cachedModelForTest(
-      s: SparkSession, dir: String): Option[IvfPqModel] =
-    ivfpqModelCache.get((s, dir))
-
-  def invalidateCorpus(session: SparkSession, dir: String): Unit = {
-    ivfpqModelCache.remove((session, dir))
-    trackedCaches.synchronized {
-      Option(trackedCaches.remove((session, dir)))
-        .foreach(_.foreach(_.unpersist(blocking = false)))
-    }
-  }
-
-  /** The cached-model lookup, SERIALIZED per (session, corpus):
-    * TrieMap.getOrElseUpdate is not atomic in the update, so two
-    * concurrent first callers would both run the full Lloyd round and
-    * the loser's localCheckpoint'ed code table would leak until the
-    * ContextCleaner collects it — the disk path already serializes
-    * through StoreFiles.ensure; this is the in-memory equivalent.
-    */
-  private val modelLocks =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Object]
   private def cachedModel(s: SparkSession, dir: String): IvfPqModel =
-    modelLocks.computeIfAbsent((s, dir), _ => new Object).synchronized {
-      ivfpqModelCache.getOrElseUpdate((s, dir), trainIvfPq(s, dir))
-    }
+    CorpusState.getOrBuild(s, dir, ModelEntry)(trainIvfPq(s, dir))
 
   private def ipqSliceS(m: Int) = s"slice(x4, ${PqDim * m + 1}, $PqDim)"
 
@@ -1116,19 +1045,7 @@ object Similarity extends QueryPack {
     * read in the ADC serving plan; asymmetric ADC keeps queries
     * uncompressed).
     */
-  /** Drop entries whose session has stopped — they pin the dead
-    * session's object graph (and its checkpointed code table) forever.
-    */
-  private def purgeDeadSessions(): Unit = {
-    ivfpqModelCache.keys
-      .filter(_._1.sparkContext.isStopped)
-      .foreach(ivfpqModelCache.remove)
-    val it = modelLocks.keySet().iterator()
-    while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-  }
-
   private def registerServing(s: SparkSession, dir: String): IvfPqModel = {
-    purgeDeadSessions()
     val model = cachedModel(s, dir)
     registerServingViews(s, dir, model)
     model
@@ -1213,7 +1130,6 @@ object Similarity extends QueryPack {
     * provably serve the SAME persisted index.
     */
   private[graft] def ensureIvfPqStore(s: SparkSession, dir: String): String = {
-    purgeDeadSessions()
     // the ONE scratch-naming idiom (StoreFiles.scratchDir) — this was
     // its fourth inline copy; a normalization fix there must reach the
     // batch-stored face too or the "same persisted index" guarantee
@@ -1310,7 +1226,6 @@ object Similarity extends QueryPack {
     */
   private[graft] def ensureIvfPqOldStore(s: SparkSession,
                                          dir: String): String = {
-    purgeDeadSessions()
     val store = StoreFiles.scratchDir("graft_ivfpq0_", dir)
     StoreFiles.ensure(store) {
       StoreKind.IvfPq.build(s, dir, store, Some(s"vec_id < $IvfTrainOld"))
@@ -1328,7 +1243,6 @@ object Similarity extends QueryPack {
     */
   private[graft] def ensureIvfPqGenChain(s: SparkSession,
                                          dir: String): String = {
-    purgeDeadSessions()
     val root = graft.operators.StoreFiles.scratchDir("graft_ivfpqgen_", dir)
     StoreFiles.locked(root) {
       // the chain's completion marker is the pointer NAMING gen-2 —
@@ -1641,7 +1555,7 @@ object Similarity extends QueryPack {
     val prior = IvfPqStore.load(s, store)
     // the measured add: encode everything past the training half with
     // the LOADED frozen model, then serve ADC over stored + added.
-    // Deliberately NOT cached in ivfpqModelCache: that cache holds
+    // Deliberately NOT the ModelEntry: that entry holds
     // full-corpus-trained models (sim_ivfpq_pretrained's contract) and
     // a half-trained fold model must never masquerade as one.
     val folded = IvfPqModel(prior.cents, prior.codebooks,

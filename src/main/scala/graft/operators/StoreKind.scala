@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.CorpusState
 import graft.Engine._
 
 /** One persistent store kind — a row of the [[StoreKind.all]] table
@@ -71,7 +72,8 @@ private[graft] sealed trait StoreKind {
   * @param foldKey   the query key serving the fold
   * @param key       band-key column of bands/
   * @param bandKey   SQL of band b's key over a signature view
-  * @param bandGuard rows kept off the band index ("" = none)
+  * @param bandGuard rows a probe keeps off the band index ("" = none);
+  *                  `grp` leaves them out of every collapse
   * @param rows      (session, corpus) -> the corpus rows signatures
   *                  are taken of
   * @param sigs      corpus rows -> signature rows: id, payload and what
@@ -206,39 +208,35 @@ private[graft] object Score {
 /** A rep-collapsed batch pair family over a [[Banded]] kind's
   * signatures, collapse and (unless `cands`) banding, verified by
   * `score` — its relations shared per (session, corpus) through
-  * `registry` under `<name>_pairs|<corpus>` ([[BandedStore.relations]]).
+  * [[graft.CorpusState]] as `<name>_pairs` ([[BandedStore.relations]]).
   *
   * @param repCols the columns the rep rows carry beside the id: the
   *                band-key inputs (or `cands`' inputs)
-  * @param guarded band the reps through the kind's band guard (the
-  *                collapse already drops every row it would)
   * @param cands   Some: the candidate CTE chain (ending in `cand`) over
   *                a rep view, verified against the rep rows, in place
   *                of the banded self-join verified against the sigs
   */
 private[graft] final case class PairFamily(
-    name: String, kind: Banded, score: Score,
-    registry: Dedup.FrameRegistry[Dedup.PairRelations],
-    repCols: Seq[String], guarded: Boolean = true,
+    name: String, kind: Banded, score: Score, repCols: Seq[String],
     cands: Option[(SparkSession, String) => String] = None)
 
 private[graft] object PairFamily {
   private val sigCols = (0 until 2 * Dedup.JacBands).map("sig_" + _)
 
   val Jaccard: PairFamily = PairFamily("jac", StoreKind.Cluster,
-    Score.Jaccard, Dedup.jacRelCache, sigCols)
+    Score.Jaccard, sigCols)
   val Containment: PairFamily = PairFamily("cont", StoreKind.Cluster,
-    Score.Containment, Dedup.contRelCache, sigCols)
+    Score.Containment, sigCols)
   /** The prefix-probe candidates over the reps, the REPARTITION hint on
     * the probe side (see [[Dedup.contSmallsideCandSql]]). */
   val ContainmentSmallside: PairFamily = PairFamily("contp",
-    StoreKind.Cluster, Score.Containment, Dedup.contRelCache, Seq("hs"),
+    StoreKind.Cluster, Score.Containment, Seq("hs"),
     cands = Some((s, rep) => Dedup.contSmallsideCandSql(rep, "df.df, i.h",
       probeParts = s.conf.get("spark.sql.shuffle.partitions").toInt)))
-  val Cosine: PairFamily = PairFamily("cos", StoreKind.Embed, Score.Cosine,
-    Dedup.cosRelCache, Seq("bks"), guarded = false)
+  val Cosine: PairFamily =
+    PairFamily("cos", StoreKind.Embed, Score.Cosine, Seq("bks"))
   val Phash: PairFamily = PairFamily("phash", StoreKind.Phash,
-    Score.Hamming, Dedup.phashRelCache, Seq("phash"))
+    Score.Hamming, Seq("phash"))
 }
 
 private[graft] object StoreKind {
@@ -398,15 +396,14 @@ private[graft] object BandedStore {
   private def pairCol(k: Banded, side: String): String =
     k.id.stripSuffix("_id") + "_" + side
 
-  private[graft] def bandSelects(k: Banded, view: String,
-                                 guarded: Boolean = true): String = {
-    val guard =
-      if (k.bandGuard.isEmpty || !guarded) "" else s" WHERE ${k.bandGuard}"
+  /** The band rows of the rows at `view`, unguarded: every caller bands
+    * collapsed reps, and the kind's `grp` already leaves out every row
+    * its band guard would drop. */
+  private[graft] def bandSelects(k: Banded, view: String): String =
     (0 until k.bands)
       .map(b => s"SELECT ${k.id}, $b AS band, ${k.bandKey(b)} AS ${k.key}" +
-        s" FROM $view$guard")
+        s" FROM $view")
       .mkString(" UNION ALL ")
-  }
 
   /** (id, ts, payload…, band, key) rows of a signature frame, banded
     * like bands/ — the guard drops unbandable rows before the explode
@@ -432,13 +429,10 @@ private[graft] object BandedStore {
     * they feed the collapse, every band side and both verify
     * join-backs, so the signature chains run once, and later calls
     * serve the same blocks (the cache manager keys on the canonical
-    * plan). Tracked, so `Dedup.invalidateLpEdges` releases them. */
+    * plan). Tracked, so `Engine.invalidateCorpus` releases them. */
   private[graft] def sigs(k: Banded, s: SparkSession,
-                          dir: String): DataFrame = {
-    val sigs = k.sigs(k.rows(s, dir)).cache()
-    Dedup.trackCached(s, dir, sigs)
-    sigs
-  }
+                          dir: String): DataFrame =
+    CorpusState.track(s, dir, k.sigs(k.rows(s, dir)).cache())
 
   /** Register `sigs` as view `_sigs`, its collapse membership as `_grp`
     * and the representatives' rows (eager) as `_rep`; returns the
@@ -477,9 +471,8 @@ private[graft] object BandedStore {
 
   /** The CTEs `bands` (the rows at `rep`, banded) and `cand` (their
     * banded self-join). */
-  private def bandedCands(k: Banded, rep: String,
-                          guarded: Boolean = true): String =
-    s"""bands AS (${bandSelects(k, rep, guarded)}),
+  private def bandedCands(k: Banded, rep: String): String =
+    s"""bands AS (${bandSelects(k, rep)}),
        |cand AS (${candSql(k, "bands", pairCol(k, "a"), pairCol(k, "b"))})"""
       .stripMargin
 
@@ -507,7 +500,7 @@ private[graft] object BandedStore {
       f.score.name
     val ver = s.sql(f.cands match {
       case Some(c) => verifySql(k, f.score, c(s, v("_rep")), v("_rep"), proj)
-      case None => verifySql(k, f.score, bandedCands(k, v("_rep"), f.guarded),
+      case None => verifySql(k, f.score, bandedCands(k, v("_rep")),
         v("_sigs"), proj)
     })
     Dedup.dropUviews(s, v("_grp"), v("_rep"))
@@ -515,10 +508,10 @@ private[graft] object BandedStore {
   }
 
   /** The family's verified rep pairs (checkpointed) and membership,
-    * built once per (session, corpus) in the family's registry. */
+    * built once per (session, corpus) in [[graft.CorpusState]]. */
   def relations(f: PairFamily, s: SparkSession,
                 dir: String): Dedup.PairRelations =
-    f.registry.getOrBuild(s, s"${f.name}_pairs|$dir") {
+    CorpusState.getOrBuild(s, dir, s"${f.name}_pairs") {
       val (grp, ver) = verifyFrame(f, s, dir)
       Dedup.PairRelations(ver.truncated(), grp)
     }

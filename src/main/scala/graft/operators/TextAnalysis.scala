@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Engine._
-import graft.QueryPack
+import graft.{CorpusState, QueryPack}
 
 /** Text-analysis operators for a training-data pipeline, over the
   * `documents` table: token statistics, quality scoring, language-ID
@@ -899,13 +899,14 @@ object TextAnalysis extends QueryPack {
   // count()-surviving subtree would be a bare documents scan and the
   // bench would stop measuring this query's work at all (measured:
   // one 0.2-CPU stage). The exploded frame is cached: both aggregates
-  // scan it (the uncached-twice gotcha).
+  // scan it (the uncached-twice gotcha); tracked, so a corpus rewrite
+  // (Engine.invalidateCorpus) releases the pre-rewrite blocks.
   private def txtNovelty(s: SparkSession, dir: String): DataFrame = {
-    val grams = table(s, dir, "documents")
+    val grams = CorpusState.track(s, dir, table(s, dir, "documents")
       .selectExpr("doc_id", "split(text, ' ') AS toks")
       .where("size(toks) >= 8")
       .selectExpr("doc_id", "explode(graft_word8grams(toks)) AS gram")
-      .cache()
+      .cache())
     val novel = grams.groupBy("gram").agg(min(col("doc_id")).as("doc_id"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_novel"))
     grams.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))

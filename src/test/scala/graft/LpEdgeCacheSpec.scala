@@ -3,20 +3,19 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Similarity}
 
-/** Lifecycle contract for the shared LP edge registry (VERDICT r15:
-  * the registry had no invalidation story and no bound). Three
-  * clauses:
+/** Lifecycle contract for the corpus-state registry ([[CorpusState]]),
+  * which holds the shared LP edges among its entries. Three clauses:
   *
   *   1. SHARING — a second consumer with the same shareKey reuses the
   *      prepared edges without re-evaluating the (expensive) pair
   *      pipeline; that is the registry's whole point.
-  *   2. INVALIDATION — [[Dedup.invalidateLpEdges]] drops exactly that
+  *   2. INVALIDATION — [[Engine.invalidateCorpus]] drops exactly that
   *      corpus dir's entries, and the next consumer rebuilds over the
   *      CURRENT pair data (the rewritten-dir staleness hook).
-  *   3. BOUND — the registry holds at most Dedup's LpEdgeCacheMax (8)
-  *      entries, evicting least-recently-used, so a long-lived session
+  *   3. BOUND — the registry holds at most CorpusState.MaxCorpora (8)
+  *      corpora, evicting least-recently-used, so a long-lived session
   *      touring many corpora cannot pin unbounded checkpoint blocks.
   */
 class LpEdgeCacheSpec extends AnyFunSuite {
@@ -37,7 +36,11 @@ class LpEdgeCacheSpec extends AnyFunSuite {
     ids.toDF("doc_id")
   }
 
-  private def run(key: String, builds: java.util.concurrent.atomic.AtomicInteger,
+  private def cachedModel(s: org.apache.spark.sql.SparkSession,
+                          d: String): Option[AnyRef] =
+    CorpusState.entries(s).get(d -> Similarity.ModelEntry)
+
+  private def run(key: (String, String), builds: java.util.concurrent.atomic.AtomicInteger,
                   rows: Seq[(Long, Long)]): Map[Long, Long] =
     Dedup.labelPropagate("lp_cache_spec",
         pairs(builds, rows), nodes(1L, 2L, 3L, 4L),
@@ -46,9 +49,9 @@ class LpEdgeCacheSpec extends AnyFunSuite {
 
   test("sharing: same shareKey reuses the prepared edges without " +
        "re-evaluating the pair pipeline") {
-    Dedup.clearLpEdgeCache()
+    CorpusState.clear()
     val builds = new java.util.concurrent.atomic.AtomicInteger
-    val key = "lpspec_share|/tmp/lpspec_corpus_a"
+    val key = "/tmp/lpspec_corpus_a" -> "lpspec_share"
     val r1 = run(key, builds, Seq((1L, 2L), (2L, 3L)))
     assert(r1 == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L))
     assert(builds.get() == 1)
@@ -59,40 +62,40 @@ class LpEdgeCacheSpec extends AnyFunSuite {
 
   test("invalidation: invalidateLpEdges drops that dir's entries and " +
        "the next consumer rebuilds over current data") {
-    Dedup.clearLpEdgeCache()
+    CorpusState.clear()
     val builds = new java.util.concurrent.atomic.AtomicInteger
     val dirA = "/tmp/lpspec_corpus_rewrite"
-    val keyA = s"lpspec_inval|$dirA"
-    val keyB = "lpspec_inval|/tmp/lpspec_corpus_other"
+    val keyA = dirA -> "lpspec_inval"
+    val keyB = "/tmp/lpspec_corpus_other" -> "lpspec_inval"
     assert(run(keyA, builds, Seq((1L, 2L)))
       == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 4L))
     assert(run(keyB, builds, Seq((3L, 4L)))
       == Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 3L))
     assert(builds.get() == 2)
     // the "corpus rewritten in place" scenario: same dir, new pairs
-    Dedup.invalidateLpEdges(spark, dirA)
-    assert(!Dedup.lpEdgeCacheKeys.contains(keyA), "dirA entry dropped")
-    assert(Dedup.lpEdgeCacheKeys.contains(keyB), "other dirs untouched")
+    Engine.invalidateCorpus(spark, dirA)
+    assert(!CorpusState.entries(spark).keySet.contains(keyA), "dirA entry dropped")
+    assert(CorpusState.entries(spark).keySet.contains(keyB), "other dirs untouched")
     val r = run(keyA, builds, Seq((2L, 3L)))
     assert(builds.get() == 3, "post-invalidation consumer must rebuild")
     assert(r == Map(1L -> 1L, 2L -> 2L, 3L -> 2L, 4L -> 4L),
       "rebuilt edges must reflect the rewritten corpus, not the stale set")
     // idempotent / unknown dir: no-op, no throw
-    Dedup.invalidateLpEdges(spark, "/tmp/lpspec_never_built")
+    Engine.invalidateCorpus(spark, "/tmp/lpspec_never_built")
   }
 
   test("invalidation during an in-flight build: the straddling result " +
        "is served to its own caller but never registered") {
-    Dedup.clearLpEdgeCache()
+    CorpusState.clear()
     val builds = new java.util.concurrent.atomic.AtomicInteger
     val dir = "/tmp/lpspec_corpus_inflight"
-    val key = s"lpspec_race|$dir"
+    val key = dir -> "lpspec_race"
     // the corpus is rewritten — and invalidated — WHILE this build is
     // evaluating its pair pipeline: the build snapshotted the stamp
     // before the invalidation, so its (possibly pre-rewrite) result
     // must not land in the registry afterwards
     def racingPairs(): DataFrame = {
-      Dedup.invalidateLpEdges(spark, dir)
+      Engine.invalidateCorpus(spark, dir)
       pairs(builds, Seq((1L, 2L)))
     }
     val r = Dedup.labelPropagate("lp_cache_spec",
@@ -100,7 +103,7 @@ class LpEdgeCacheSpec extends AnyFunSuite {
       .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(r == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 4L),
       "the straddling caller's own result is as fresh as its own read")
-    assert(!Dedup.lpEdgeCacheKeys.contains(key),
+    assert(!CorpusState.entries(spark).keySet.contains(key),
       "a build that straddled an invalidation must not register")
     assert(builds.get() == 1)
     // the next consumer rebuilds over current data instead of
@@ -110,27 +113,27 @@ class LpEdgeCacheSpec extends AnyFunSuite {
   }
 
   test("bound: the registry is LRU-capped, never unbounded") {
-    Dedup.clearLpEdgeCache()
+    CorpusState.clear()
     val builds = new java.util.concurrent.atomic.AtomicInteger
-    val cap = 8 // Dedup's LpEdgeCacheMax
+    val cap = 8 // CorpusState.MaxCorpora
     (0 to cap).foreach { i =>
-      run(s"lpspec_cap|/tmp/lpspec_corpus_$i", builds, Seq((1L, 2L)))
+      run(s"/tmp/lpspec_corpus_$i" -> "lpspec_cap", builds, Seq((1L, 2L)))
     }
-    val keys = Dedup.lpEdgeCacheKeys
+    val keys = CorpusState.entries(spark).keySet
     assert(keys.size == cap, s"cap $cap exceeded: ${keys.size}")
-    assert(!keys.contains("lpspec_cap|/tmp/lpspec_corpus_0"),
+    assert(!keys.contains("/tmp/lpspec_corpus_0" -> "lpspec_cap"),
       "least-recently-used entry (the first) must be the one evicted")
-    assert(keys.contains(s"lpspec_cap|/tmp/lpspec_corpus_$cap"))
+    assert(keys.contains(s"/tmp/lpspec_corpus_$cap" -> "lpspec_cap"))
     // LRU, not FIFO: touching an old entry saves it from eviction
-    run("lpspec_cap|/tmp/lpspec_corpus_1", builds, Seq((1L, 2L)))
+    run("/tmp/lpspec_corpus_1" -> "lpspec_cap", builds, Seq((1L, 2L)))
     assert(builds.get() == cap + 1, "corpus_1 must still be a hit")
-    run("lpspec_cap|/tmp/lpspec_corpus_extra", builds, Seq((1L, 2L)))
-    val keys2 = Dedup.lpEdgeCacheKeys
-    assert(keys2.contains("lpspec_cap|/tmp/lpspec_corpus_1"),
+    run("/tmp/lpspec_corpus_extra" -> "lpspec_cap", builds, Seq((1L, 2L)))
+    val keys2 = CorpusState.entries(spark).keySet
+    assert(keys2.contains("/tmp/lpspec_corpus_1" -> "lpspec_cap"),
       "recently-touched entry survives")
-    assert(!keys2.contains("lpspec_cap|/tmp/lpspec_corpus_2"),
+    assert(!keys2.contains("/tmp/lpspec_corpus_2" -> "lpspec_cap"),
       "the actual LRU entry is the one evicted")
-    Dedup.clearLpEdgeCache()
+    CorpusState.clear()
   }
 
   test("in-place corpus rewrite through the REAL jaccard family: " +
@@ -142,37 +145,51 @@ class LpEdgeCacheSpec extends AnyFunSuite {
     val d = new java.io.File(
       sys.props.getOrElse("java.io.tmpdir", "/tmp"),
       s"graft_stale_fixture_p${ProcessHandle.current().pid()}").toString
-    def write(rows: Seq[(Long, String)]): Unit =
+    def write(rows: Seq[(Long, String)], to: String = d): Unit =
       rows.toDF("doc_id", "text")
         .selectExpr("doc_id", "text", "'xx' AS lang", "'src1' AS source",
           "cast(length(text) as bigint) AS n_chars")
         .coalesce(1).write.mode("overwrite")
-        .parquet(s"$d/documents.parquet")
+        .parquet(s"$to/documents.parquet")
     def jacPairs(): Set[(Long, Long)] =
       SparkEntry.queries("dd_jaccard")(s, d)
         .select("doc_a", "doc_b")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def novel(): Map[Long, Long] =
+      SparkEntry.queries("txt_novelty")(s, d)
+        .select("doc_id", "n_novel")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val tA = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val tB = "one two three four five six seven eight nine ten"
-    Dedup.clearLpEdgeCache()
+    CorpusState.clear()
     write(Seq((1L, tA), (2L, tA), (3L, tB)))
     assert(jacPairs() == Set((1L, 2L)))
-    // rewrite IN PLACE: doc 1 now matches 3, not 2
-    write(Seq((1L, tB), (2L, tA), (3L, tB)))
+    assert(novel() == Map(1L -> 3L, 2L -> 0L, 3L -> 3L))
+    // rewrite IN PLACE: doc 1 now matches 3, not 2. The new files are
+    // moved in from outside the session (a regenerated fixture copied
+    // over the dir): a write through this session's own writer would
+    // re-cache the path by itself
+    write(Seq((1L, tB), (2L, tA), (3L, tB)), s"$d.next")
+    val docs = new java.io.File(s"$d/documents.parquet")
+    org.apache.commons.io.FileUtils.deleteDirectory(docs)
+    java.nio.file.Files.move(
+      java.nio.file.Paths.get(s"$d.next/documents.parquet"), docs.toPath)
     // the registry is deliberately filesystem-blind — same result
     // until the caller follows the staleness contract
     assert(jacPairs() == Set((1L, 2L)),
       "registry re-read the dir without invalidation — the staleness " +
         "contract moved")
-    Dedup.invalidateLpEdges(s, d)
+    Engine.invalidateCorpus(s, d)
     assert(jacPairs() == Set((1L, 3L)),
       "post-invalidation rebuild served stale data")
-    Dedup.clearLpEdgeCache()
+    // txt_novelty's cached gram frame is released with the rest
+    assert(novel() == Map(1L -> 3L, 2L -> 3L, 3L -> 0L),
+      "txt_novelty served its pre-rewrite cached grams")
+    CorpusState.clear()
   }
 
   test("Engine.invalidateCorpus drops similarity's trained-model " +
       "cache too: the one hook covers every pack's session state") {
-    import graft.operators.Similarity
     val s = spark
     val d = java.nio.file.Files
       .createTempDirectory("graft_simstale").toString
@@ -180,17 +197,60 @@ class LpEdgeCacheSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
     assert(SparkEntry.queries("sim_ivfpq_pretrained")(s, d)
       .count() > 0)
-    val m1 = Similarity.cachedModelForTest(s, d)
+    val m1 = cachedModel(s, d)
     assert(m1.nonEmpty, "pretrained serving must cache the model")
     // a second call reuses the SAME trained model instance
     assert(SparkEntry.queries("sim_ivfpq_pretrained")(s, d).count() > 0)
-    assert(Similarity.cachedModelForTest(s, d).exists(_ eq m1.get))
+    assert(cachedModel(s, d).exists(_ eq m1.get))
     // the corpus-rewrite hook drops it; the next call retrains
     Engine.invalidateCorpus(s, d)
-    assert(Similarity.cachedModelForTest(s, d).isEmpty,
+    assert(cachedModel(s, d).isEmpty,
       "invalidateCorpus must drop the (session, dir) model")
     assert(SparkEntry.queries("sim_ivfpq_pretrained")(s, d).count() > 0)
-    assert(Similarity.cachedModelForTest(s, d)
+    assert(cachedModel(s, d)
       .exists(m => !(m eq m1.get)), "the rebuild must retrain")
+  }
+
+  test("bound: touring 9 corpora evicts the first corpus's entries of " +
+      "every kind and unpersists its tracked frames") {
+    val s = spark
+    import s.implicits._
+    CorpusState.clear()
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    val dirs = (0 to CorpusState.MaxCorpora).map(i => s"/tmp/lpspec_tour_$i")
+    val d0 = dirs.head
+    run(d0 -> "lpspec_tour_edges", builds, Seq((1L, 2L)))
+    val df = Seq((1L, 2L)).toDF("a", "b")
+    CorpusState.getOrBuild(s, d0, "jac_pairs")(Dedup.PairRelations(df, df))
+    // a synthetic model: no IVF-PQ training
+    CorpusState.getOrBuild(s, d0, Similarity.ModelEntry)(
+      Similarity.IvfPqModel(Nil, Nil, df))
+    val scan = CorpusState.track(s, d0,
+      Seq(7L, 8L).toDF("lpspec_tour_scan").cache())
+    assert(scan.count() == 2 &&
+      scan.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    assert(CorpusState.entries(s).keySet.count(_._1 == d0) == 3)
+    dirs.tail.foreach(d => run(d -> "lpspec_tour_edges", builds, Seq((1L, 2L))))
+    val keys = CorpusState.entries(s).keySet
+    assert(!keys.exists(_._1 == d0), s"corpus 0 kept: ${keys.filter(_._1 == d0)}")
+    assert(keys.size == CorpusState.MaxCorpora)
+    assert(scan.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "an evicted corpus's tracked frame must be unpersisted")
+    CorpusState.clear()
+  }
+
+  test("dd_lp_edges drops only its own entry: the jaccard family's " +
+      "relations stay registered") {
+    val s = spark
+    val d = SparkSessionHelper.Sf0001
+    CorpusState.clear()
+    assert(SparkEntry.queries("dd_jaccard")(s, d).count() >= 0)
+    assert(CorpusState.entries(s).contains(d -> "jac_pairs"))
+    assert(SparkEntry.queries("dd_lp_edges")(s, d).count() > 0)
+    val keys = CorpusState.entries(s).keySet
+    assert(keys.contains(d -> "embed_lsh"))
+    assert(keys.contains(d -> "jac_pairs"),
+      "dd_lp_edges dropped another family's relations")
+    CorpusState.clear()
   }
 }

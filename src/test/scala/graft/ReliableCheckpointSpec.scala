@@ -28,12 +28,12 @@ class ReliableCheckpointSpec extends AnyFunSuite {
     // cold baseline under the default localCheckpoint path: the
     // registry's shared frames must not leak across modes, so both
     // sides run from a cleared cache
-    graft.operators.Dedup.clearLpEdgeCache()
+    CorpusState.clear()
     val base = keys.map(k => k -> rows(k)).toMap
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_reliable_ckpt").toString
     spark.conf.set(Engine.CheckpointDirKey, ckpt)
-    graft.operators.Dedup.clearLpEdgeCache()
+    CorpusState.clear()
     try {
       keys.foreach { k =>
         assert(rows(k) == base(k),
@@ -49,7 +49,7 @@ class ReliableCheckpointSpec extends AnyFunSuite {
       spark.conf.unset(Engine.CheckpointDirKey)
       // frames built under the reliable mode must not serve the
       // default mode's consumers
-      graft.operators.Dedup.clearLpEdgeCache()
+      CorpusState.clear()
       def rec(f: java.io.File): Unit = {
         if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rec)
         f.delete()

@@ -11,7 +11,9 @@ import graft.operators.{BandedStore, StoreKind}
   * every such doc lands on the IDENTICAL (band, bk) key in all 8
   * bands — at corpus scale one bucket generating |empty|²/2 candidate
   * pairs that the exact Jaccard verify then rejects anyway (0/len or
-  * 0/0-NULL, never >= 0.6). The guard drops them from the BAND side
+  * 0/0-NULL, never >= 0.6). The collapse leaves them out of the reps
+  * every batch caller bands (the stream probe, which bands uncollapsed
+  * rows, applies the guard itself), so they stay off the BAND side
   * only; this spec pins both halves of the claim:
   *   - effectiveness: short docs produce zero band rows (the bomb is
   *     defused at candidate generation, not absorbed downstream);
@@ -49,10 +51,12 @@ class ShortDocGuardSpec extends AnyFunSuite {
   private val shortIds = Set(10000L, 10001L, 10002L, 10010L, 10011L)
 
   test("short docs contribute ZERO band rows; full docs keep all 8") {
-    BandedStore.sigs(StoreKind.Cluster, spark, doctoredDir)
-      .createOrReplaceTempView("sdg_sigs")
+    // bands the collapsed reps, the input every production call bands
+    val v = Map("_sigs" -> "sdg_sigs", "_grp" -> "sdg_grp", "_rep" -> "sdg_rep")
+    BandedStore.collapse(StoreKind.Cluster, spark,
+      BandedStore.sigs(StoreKind.Cluster, spark, doctoredDir), v)
     val bands = spark
-      .sql(BandedStore.bandSelects(StoreKind.Cluster, "sdg_sigs"))
+      .sql(BandedStore.bandSelects(StoreKind.Cluster, v("_rep")))
       .groupBy("doc_id").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(shortIds.forall(id => !bands.contains(id)),
